@@ -24,7 +24,7 @@ object Graft {
     // small. Both are size-GUARDED (plan stats / runtime partition
     // bytes), so a 100 TB build side never hash-builds: oversized
     // partitions keep the sort-merge path and AQE skew splitting.
-    if (sys.env.get("GRAFT_NO_SHJ").isEmpty) c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
+    c.set("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64MB")
     // events.parquet carries TIMESTAMP(NANOS). On Spark <=4.0 this conf
     // makes it read as raw int64 epoch-ns; on 4.1+ the conf is inert and
     // the column reads as TIMESTAMP_NTZ (round-7 incident). Kept for

@@ -26,27 +26,9 @@ object Pipelines {
     */
   def curate(docs: DataFrame, idCol: String, textCol: String,
              minQuality: Double = 0.3, jaccardThreshold: Double = 0.4,
-             carry: Seq[String] = Nil): DataFrame = {
-    val keep: Seq[Column] = (idCol +: textCol +: carry).map(col)
-    val kept = TextAnalysis.qualityScore(docs, idCol, textCol,
-        carry = textCol +: carry)
-      .filter(col("quality") >= minQuality)
-      .select(keep: _*)
-    val exact = Dedup.exact(kept, Seq(textCol), Seq(col(idCol)))
-      .cut
-    val pairs = Dedup.minhashLsh(exact, idCol, textCol,
-        jaccardThreshold = jaccardThreshold)
-      .select("id1", "id2")
-    // internal step of the curation pipeline — adaptive components:
-    // near-dup graphs sit far under the broadcast bound, and the graded
-    // semantic (the survivor set) is identical either path
-    val comps = Components.minLabelAdaptive(pairs, "id1", "id2",
-      exact.select(idCol), idCol)
-    // survivor = the doc that IS its component's min label
-    exact.join(
-      comps.filter(col("id") === col("comp")).select(col("id").as(idCol)),
-      idCol)
-  }
+             carry: Seq[String] = Nil): DataFrame =
+    curateWith(docs, idCol, textCol, minQuality, carry)(exact =>
+      Dedup.minhashLsh(exact, idCol, textCol, jaccardThreshold = jaccardThreshold))
 
   /** [[curate]] with the near-dup leg reading the AT-REST index — the
     * production shape of a 100 TB curation run: the corpus writes its
@@ -64,7 +46,30 @@ object Pipelines {
                      textCol: String, minQuality: Double = 0.3,
                      jaccardThreshold: Double = 0.4,
                      carry: Seq[String] = Nil, k: Int = 3,
-                     bands: Int = 4, rowsPerBand: Int = 4): DataFrame = {
+                     bands: Int = 4, rowsPerBand: Int = 4): DataFrame =
+    curateWith(docs, idCol, textCol, minQuality, carry) { exact =>
+      // near-dup pairs among the survivors, from the stored index only.
+      // `spark.graft.dedup.verify=true` (debug) loud-fails on a stale
+      // index instead of silently under-deduplicating the missing docs.
+      // The index GEOMETRY (k, bands, rowsPerBand) is plumbed through to
+      // both the gate and the pair derivation (r18 advice) — a
+      // non-default index must be consumed with its own parameters, not
+      // the defaults.
+      Dedup.verifyRestCoverage(exact, rest, idCol, textCol, k = k,
+        what = "curateFromRest")
+      val restKept = rest.join(exact.select(col(idCol).as("id")),
+        Seq("id"), "left_semi")
+      Dedup.minhashPairsFromRest(restKept, bands = bands,
+        rowsPerBand = rowsPerBand, jaccardThreshold = jaccardThreshold)
+    }
+
+  /** The curation frame both [[curate]] variants share: quality gate,
+    * exact dedup (cut), then near-dup clusters over `nearPairs(exact)`
+    * (id1, id2, ...) keeping each cluster's min id.
+    */
+  private def curateWith(docs: DataFrame, idCol: String, textCol: String,
+                         minQuality: Double, carry: Seq[String])
+                        (nearPairs: DataFrame => DataFrame): DataFrame = {
     val keep: Seq[Column] = (idCol +: textCol +: carry).map(col)
     val kept = TextAnalysis.qualityScore(docs, idCol, textCol,
         carry = textCol +: carry)
@@ -72,22 +77,13 @@ object Pipelines {
       .select(keep: _*)
     val exact = Dedup.exact(kept, Seq(textCol), Seq(col(idCol)))
       .cut
-    // near-dup pairs among the survivors, from the stored index only.
-    // `spark.graft.dedup.verify=true` (debug) loud-fails on a stale
-    // index instead of silently under-deduplicating the missing docs.
-    // The index GEOMETRY (k, bands, rowsPerBand) is plumbed through to
-    // both the gate and the pair derivation (r18 advice) — a
-    // non-default index must be consumed with its own parameters, not
-    // the defaults.
-    Dedup.verifyRestCoverage(exact, rest, idCol, textCol, k = k,
-      what = "curateFromRest")
-    val restKept = rest.join(exact.select(col(idCol).as("id")),
-      Seq("id"), "left_semi")
-    val pairs = Dedup.minhashPairsFromRest(restKept, bands = bands,
-        rowsPerBand = rowsPerBand, jaccardThreshold = jaccardThreshold)
-      .select("id1", "id2")
-    val comps = Components.minLabelAdaptive(pairs, "id1", "id2",
+    // internal step of the curation pipeline — adaptive components:
+    // near-dup graphs sit far under the broadcast bound, and the graded
+    // semantic (the survivor set) is identical either path
+    val comps = Components.minLabelAdaptive(
+      nearPairs(exact).select("id1", "id2"), "id1", "id2",
       exact.select(idCol), idCol)
+    // survivor = the doc that IS its component's min label
     exact.join(
       comps.filter(col("id") === col("comp")).select(col("id").as(idCol)),
       idCol)

@@ -2462,11 +2462,6 @@ object Queries {
     * latent wrong-grade in the sibling. Returns (v1, c1, v2, c2, v3,
     * c3): the view/click files of the three-batch eviction recipe.
     */
-  /** Dev-probe alias for [[jsi2Fixture]] (tools.ProbeStreamPhases). */
-  private[graft] def jsi2FixtureProbe(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) =
-    jsi2Fixture(s, dir)
-
   private def jsi2Fixture(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = {
     import s.implicits._
@@ -10231,11 +10226,7 @@ object Queries {
     val docs = t(s, dir, "documents").where(col("doc_id") < 500)
     val cands = Dedup.minhashLsh(docs, "doc_id", "text",
       jaccardThreshold = 0.0)
-    val base = docs
-      .select(col("doc_id").as("id"), Dedup.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), Dedup.hashedShinglesFromHashes(col("th"), 3).as("sh"))
+    val base = Dedup.shingleSets(docs, "doc_id", "text", 3)
       // the shingle frame feeds sizes once and the co-occurrence join
       // twice — materialize it so the per-character hash fold runs once
       .cut
@@ -11177,11 +11168,7 @@ object Queries {
     * to the dedup key space.
     */
   def e2_shingle_profile(s: SparkSession, dir: String): DataFrame = {
-    val base = t(s, dir, "documents")
-      .select(col("doc_id").as("id"), Dedup.tokens(col("text")).as("tk"))
-      .filter(size(col("tk")) >= 3)
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), Dedup.hashedShinglesFromHashes(col("th"), 3).as("sh"))
+    val base = Dedup.shingleSets(t(s, dir, "documents"), "doc_id", "text", 3)
       // feeds both the doc count and the explode: materialize so the
       // per-character hash fold runs once (the e2_dedup_eval lesson)
       .cut

@@ -142,8 +142,8 @@ package object functions {
   //
   // Spark's xxhash64/murmur3 don't exist in other engines, so operators
   // that must be verifiable against an external SQL oracle use this
-  // engine-agnostic polynomial hash instead. Production path at scale
-  // uses xxhash64 (see graft.operators.Dedup.minhashLshScalable).
+  // engine-agnostic polynomial hash instead. Operators with no oracle to
+  // match use xxhash64 (e.g. graft.operators.Dedup.simhashPairsScalable).
   // ---------------------------------------------------------------------
 
   /** Large prime modulus for portable polynomial hashing. Small enough

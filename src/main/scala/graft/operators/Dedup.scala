@@ -89,25 +89,6 @@ object Dedup {
   def minhashCoeffs(m: Int): Seq[(Long, Long)] =
     (0 until m).map(j => (2L * j + 3L, 104729L * (j + 1) % HashPrime))
 
-  /** All m MinHash minima in ONE fold over the shingle set (higher-order
-    * form, for tests/small data). The hot path in minhashLsh does NOT use
-    * this: higher-order functions evaluate interpreted (~us per expression
-    * node), so m x |shingles| lambda steps cost ~1000x their compiled
-    * equivalent — minhashLsh explodes shingles to rows and computes the
-    * minima as codegen'd hash aggregates instead (measured ~100x faster).
-    */
-  def minhashSignature(sh: Column, m: Int): Column = {
-    val coeffs = minhashCoeffs(m)
-    val aLit = array(coeffs.map(c => lit(c._1)): _*)
-    val bLit = array(coeffs.map(c => lit(c._2)): _*)
-    aggregate(
-      sh,
-      array_repeat(lit(HashPrime), m), // hashes are < HashPrime
-      (acc, x) => transform(sequence(lit(0), lit(m - 1)), j =>
-        least(element_at(acc, j + 1),
-          pmod(x * element_at(aLit, j + 1) + element_at(bLit, j + 1), lit(HashPrime)))))
-  }
-
   /** Hashed k-shingles over an ALREADY-MATERIALIZED token-hash array
     * column: each shingle hash is the polynomial fold of k consecutive
     * token hashes (seed 7, base 31, mod p). Distinct, as a set.
@@ -145,8 +126,8 @@ object Dedup {
     *      partial (each doc's shingles are colocated, so the shuffle
     *      carries ~1 row per doc). Keeping this in array lambdas instead
     *      runs interpreted and measured ~100x slower;
-    *   3. band hashes as plain column expressions, `stack` to one row per
-    *      (doc, band);
+    *   3. band hashes as plain column expressions, `posexplode` to one
+    *      row per (doc, band);
     *   4. self-join on (band, bandHash) -> DISTINCT candidate pairs -> join
     *      the (small) pair set back to the persisted shingle sets for
     *      exact Jaccard.
@@ -217,7 +198,8 @@ object Dedup {
     * lifting is O(batch); the only O(history) work is scanning the
     * at-rest columns, which is the floor for any cross-corpus join.
     * Identical pairs to [[minhashIncrementalPairs]] on the same inputs
-    * (pinned by DedupSpec).
+    * (pinned by Round7Spec, "minhashIncrementalPairsFromRest ==
+    * minhashIncrementalPairs on real docs").
     */
   def minhashIncrementalPairsFromRest(existingRest: DataFrame,
                                       incoming: DataFrame,
@@ -230,16 +212,8 @@ object Dedup {
       "minhashIncrementalPairsFromRest")
     val (baseN, bandedN) =
       portableBands(incoming, idCol, textCol, k, bands, rowsPerBand)
-    def bandHash(b: Int): Column =
-      (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
-        pmod(acc * lit(31L) +
-          element_at(col("sig"), b * rowsPerBand + r + 1), lit(HashPrime)))
-    val bandedO = existingRest.select(col("id"),
-      posexplode(array((0 until bands).map(bandHash): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandHash")
-    val baseO = existingRest.select(col("id"), col("sh"))
-    crossVerifiedPairs(baseN, bandedN, baseO, bandedO, jaccardThreshold)
+    crossVerifiedPairs(baseN, bandedN, existingRest.select(col("id"), col("sh")),
+      bandRows(existingRest, bands, rowsPerBand, storedEntry), jaccardThreshold)
   }
 
   /** Shared cross-corpus band-join + exact-Jaccard verify for the
@@ -277,27 +251,9 @@ object Dedup {
     */
   def minhashAtRest(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 3, bands: Int = 4, rowsPerBand: Int = 4)
-      : DataFrame = {
-    val m = bands * rowsPerBand
-    val base = docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) >= k)
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), hashedShinglesFromHashes(col("th"), k).as("sh"))
-      .persist()
-    val sigAggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
-      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
-    }
-    val rest = base.select(col("id"), explode(col("sh")).as("x"))
-      .groupBy("id").agg(sigAggs.head, sigAggs.tail: _*)
-      .select(col("id"),
-        array((0 until m).map(j => col(s"s$j")): _*).as("sig"))
-      .join(base, "id")
-      .select("id", "sh", "sig")
-      .cut
-    base.unpersist()
-    rest
-  }
+      : DataFrame =
+    cutOver(shingleSets(docs, idCol, textCol, k))(sh =>
+      signatures(sh, bands * rowsPerBand).join(sh, "id").select("id", "sh", "sig"))
 
   /** Verify-mode coverage gate for the FromRest family
     * (`spark.graft.dedup.verify=true`, debug — the ids.verify
@@ -363,7 +319,7 @@ object Dedup {
                            jaccardThreshold: Double = 0.5): DataFrame = {
     requireSigWidth(rest, bands, rowsPerBand, "minhashPairsFromRest")
     // pin the (small) pair set so downstream component iterations never
-    // re-run the band join — same terminal-cut shape as lshVerifiedPairs
+    // re-run the band join — same terminal-cut shape as portableLsh
     minhashPairsFromRestRaw(rest, bands, rowsPerBand, jaccardThreshold).cut
   }
 
@@ -374,30 +330,11 @@ object Dedup {
   private[graft] def minhashPairsFromRestRaw(rest: DataFrame, bands: Int,
                                              rowsPerBand: Int,
                                              jaccardThreshold: Double)
-      : DataFrame = {
-    def bandHash(b: Int): Column =
-      (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
-        pmod(acc * lit(31L) +
-          element_at(col("sig"), b * rowsPerBand + r + 1), lit(HashPrime)))
-    val banded = rest.select(col("id"),
-      posexplode(array((0 until bands).map(bandHash): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandHash")
-    val pairs = banded.select(col("band"), col("bandHash"), col("id").as("id1"))
-      .join(banded.select(col("band"), col("bandHash"), col("id").as("id2")),
-        Seq("band", "bandHash"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
+      : DataFrame =
     // no persist of the base: sh/sig are STORED columns (a parquet scan,
     // not an interpreted hash chain), so re-reading them is the floor
-    pairs
-      .join(rest.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
-      .join(rest.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-      .select(col("id1"), col("id2"),
-        jaccardOf(col("sh1"), col("sh2")).as("jaccard"))
-      .filter(col("jaccard") >= jaccardThreshold)
-  }
+    selfVerifiedPairs(bandRows(rest, bands, rowsPerBand, storedEntry), rest,
+      jaccardThreshold, "jaccard", jaccardOf)
 
   /** The portable MinHash SIGNATURES as a first-class frame: (id,
     * sig array<long> of length m) — the columns a production corpus
@@ -407,166 +344,122 @@ object Dedup {
     * exactly as in every pair-producing path.
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 3, m: Int = 16): DataFrame = {
-    // persist the shingle frame before the explode+aggregate, exactly as
-    // portableLsh does: unpersisted, the interpreted hash/shingle HOF
-    // chain fused into the generate stage ran 10x slower (measured 6.6s
-    // vs 0.6s at sf0.1); the signature result is then materialized so
-    // the cache can be released eagerly (at corpus scale these columns
-    // go straight to parquet anyway — they ARE the at-rest artifact)
-    val base = docs
+                        k: Int = 3, m: Int = 16): DataFrame =
+    cutOver(shingleSets(docs, idCol, textCol, k))(signatures(_, m))
+
+  /** The (id, sh) shingle-set frame every MinHash path starts from:
+    * whitespace tokens -> portable token hashes -> distinct hashed
+    * k-shingles. Documents with fewer than k tokens drop out.
+    *
+    * The filter is on the RAW token count: an equivalent filter on
+    * size(sh) pushes down through the projections below and inlines the
+    * whole hash chain into the predicate, where the multi-reference
+    * token-hash array re-evaluates per element_at (measured 250x slower;
+    * PushDownPredicates has no expensive-expression guard). Each stage
+    * is its own projection so the next stage's multi-reference lambdas
+    * don't re-inline (and re-run) the previous one.
+    */
+  private[graft] def shingleSets(docs: DataFrame, idCol: String,
+                                 textCol: String, k: Int): DataFrame =
+    docs
       .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
       .filter(size(col("tk")) >= k)
       .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
       .select(col("id"), hashedShinglesFromHashes(col("th"), k).as("sh"))
-      .persist()
-    val sigAggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
-      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
-    }
-    val sigs = base.select(col("id"), explode(col("sh")).as("x"))
-      .groupBy("id").agg(sigAggs.head, sigAggs.tail: _*)
-      .select(col("id"),
-        array((0 until m).map(j => col(s"s$j")): _*).as("sig"))
-      .cut
-    base.unpersist()
-    sigs
+
+  /** `plan` over the shingle sets, materialized with Blocks.cut while
+    * they are persisted, then the shingle cache is released. Persisting
+    * keeps the interpreted hash and shingle chain out of the explode
+    * stage it would otherwise fuse into (measured 10x slower unpersisted:
+    * 6.6 s vs 0.6 s at sf0.1), and the pair and at-rest plans read the
+    * shingle sets more than once. The cut also cuts the lineage,
+    * so the released cache can never be recomputed into (round 1
+    * leaked this persist across a whole bench session: "Block rdd_*
+    * already exists"). The returned frame is checkpoint-backed: callers
+    * that fully consume it can release its blocks with graft.Blocks.free;
+    * harnesses sweep at query boundaries.
+    */
+  private def cutOver(sh: DataFrame)(plan: DataFrame => DataFrame): DataFrame = {
+    sh.persist()
+    val result = plan(sh).cut
+    sh.unpersist()
+    result
   }
 
-  /** Shared portable banding: (base = (id, sh), banded = (id, band,
-    * bandHash)) for one side of an LSH join — the signature pipeline of
-    * `portableLsh` exposed so cross-corpus variants can band each side
-    * independently.
+  /** (id, s0 .. s{m-1}): the m portable MinHash minima per document,
+    * as codegen'd `min` hash aggregates over the exploded shingles
+    * (step 2 of [[minhashLsh]]).
+    */
+  private def minima(sh: DataFrame, m: Int): DataFrame = {
+    val aggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
+      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
+    }
+    sh.select(col("id"), explode(col("sh")).as("x"))
+      .groupBy("id").agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** (id, sig): the minima of [[minima]] as one array column. */
+  private def signatures(sh: DataFrame, m: Int): DataFrame =
+    minima(sh, m).select(col("id"),
+      array((0 until m).map(j => col(s"s$j")): _*).as("sig"))
+
+  /** Signature entry j of a stored (id, sh, sig) frame. */
+  private val storedEntry: Int => Column = j => element_at(col("sig"), j + 1)
+
+  /** (id, band, bandHash): one row per (doc, band); band b's hash is the
+    * polynomial fold (seed 7, base 31, mod p) of signature entries
+    * b*rowsPerBand .. (b+1)*rowsPerBand - 1, read with `entry`.
+    */
+  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int,
+                       entry: Int => Column): DataFrame = {
+    def bandHash(b: Int): Column =
+      (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
+        pmod(acc * lit(31L) + entry(b * rowsPerBand + r), lit(HashPrime)))
+    sigs.select(col("id"), posexplode(array((0 until bands).map(bandHash): _*)))
+      .withColumnRenamed("pos", "band")
+      .withColumnRenamed("col", "bandHash")
+  }
+
+  /** One side of an LSH join from raw text: (shingle sets (id, sh),
+    * band rows (id, band, bandHash)).
     */
   private def portableBands(docs: DataFrame, idCol: String, textCol: String,
                             k: Int, bands: Int, rowsPerBand: Int)
       : (DataFrame, DataFrame) = {
-    val m = bands * rowsPerBand
-    val base = docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) >= k)
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), hashedShinglesFromHashes(col("th"), k).as("sh"))
-    val sigAggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
-      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
-    }
-    def bandHash(b: Int): Column =
-      (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
-        pmod(acc * lit(31L) + col(s"s${b * rowsPerBand + r}"), lit(HashPrime)))
-    val sigs = base.select(col("id"), explode(col("sh")).as("x"))
-      .groupBy("id").agg(sigAggs.head, sigAggs.tail: _*)
-    val banded = sigs.select(col("id"),
-      posexplode(array((0 until bands).map(bandHash): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandHash")
-    (base, banded)
+    val sh = shingleSets(docs, idCol, textCol, k)
+    (sh, bandRows(minima(sh, bands * rowsPerBand), bands, rowsPerBand, j => col(s"s$j")))
   }
 
-  /** Portable (oracle-reproducible) LSH pipeline shared by the Jaccard
+  /** Portable (oracle-reproducible) LSH self-pairs shared by the Jaccard
     * and containment variants.
     */
   private def portableLsh(docs: DataFrame, idCol: String, textCol: String,
                           k: Int, bands: Int, rowsPerBand: Int,
                           threshold: Double, measureName: String,
                           measure: (Column, Column) => Column): DataFrame = {
-    val m = bands * rowsPerBand
-    val base = docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
-      // filter HERE, on the raw token count — an equivalent filter on
-      // size(sh) pushes down through the projections below and inlines the
-      // whole hash chain into the predicate, where the multi-reference
-      // token-hash array re-evaluates per element_at (measured 250x
-      // slower). PushDownPredicates has no expensive-expression guard.
-      .filter(size(col("tk")) >= k)
-      // own projection per stage so multi-reference lambdas in the next
-      // stage don't re-inline (and re-run) the previous one.
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), hashedShinglesFromHashes(col("th"), k).as("sh"))
-    // 2. codegen'd minima over exploded shingles (portable affine family)
-    val sigAggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
-      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
-    }
-    // 3. band hash = polynomial fold of the band's signature columns
-    def bandHash(b: Int): Column =
-      (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
-        pmod(acc * lit(31L) + col(s"s${b * rowsPerBand + r}"), lit(HashPrime)))
-    lshVerifiedPairs(base, bands, sigAggs, bandHash, threshold,
-      measureName, measure)
+    val (sh, banded) = portableBands(docs, idCol, textCol, k, bands, rowsPerBand)
+    cutOver(sh)(selfVerifiedPairs(banded, _, threshold, measureName, measure))
   }
 
-  /** Production-throughput MinHash+LSH twin: identical pipeline shape to
-    * `minhashLsh` but every hash is xxhash64 — Spark-native, codegen'd,
-    * 64-bit, no modular arithmetic. NOT oracle-portable (xxhash64 exists
-    * only in Spark), so it is test-verified against the portable variant
-    * instead of DuckDB: both compute EXACT Jaccard over their candidate
-    * sets, so agreement on found pairs is exact (modulo band-bucket
-    * recall, which each family draws independently).
+  /** Band-bucket self-join + exact verify: DISTINCT (id1 < id2)
+    * candidates sharing a (band, bandHash) bucket, scored by `measure`
+    * over the two (id, sh) shingle sets in `base` and kept at
+    * `>= threshold`. Candidates are deduplicated BEFORE the set
+    * arithmetic.
     */
-  def minhashLshScalable(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
-                         jaccardThreshold: Double = 0.5): DataFrame = {
-    val m = bands * rowsPerBand
-    val base = docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) >= k)
-      .select(col("id"), transform(col("tk"), t => xxhash64(t)).as("th"))
-      .select(col("id"),
-        when(size(col("th")) >= k,
-          array_distinct(transform(
-            sequence(lit(0), size(col("th")) - lit(k)),
-            i => xxhash64((0 until k).map(j => element_at(col("th"), i + lit(j + 1))): _*))))
-          .otherwise(array().cast("array<bigint>")).as("sh"))
-    // permutation j = xxhash64 seeded by j; min is a codegen'd aggregate
-    val sigAggs = (0 until m).map(j => min(xxhash64(lit(j), col("x"))).as(s"s$j"))
-    def bandHash(b: Int): Column =
-      xxhash64((0 until rowsPerBand).map(r => col(s"s${b * rowsPerBand + r}")): _*)
-    lshVerifiedPairs(base, bands, sigAggs, bandHash, jaccardThreshold)
-  }
-
-  /** Shared LSH tail: signature minima over exploded shingles, banding,
-    * bucket self-join, exact-Jaccard verification of the candidate pairs.
-    * `base` must be (id, sh).
-    *
-    * The shingle sets are persisted for the duration of the computation
-    * (sigs + two verify joins read them) and UNPERSISTED before returning:
-    * the result is materialized via Blocks.cut, which also
-    * cuts the lineage so the released cache can never be recomputed into.
-    * Round 1 leaked this persist across the whole bench session
-    * ("Block rdd_* already exists" warnings). The returned frame is
-    * checkpoint-backed: callers that fully consume it can release its
-    * (small) blocks with graft.Blocks.free; harnesses sweep at query
-    * boundaries.
-    */
-  private def lshVerifiedPairs(baseUncached: DataFrame, bands: Int,
-                               sigAggs: Seq[Column], bandHash: Int => Column,
-                               threshold: Double,
-                               measureName: String = "jaccard",
-                               measure: (Column, Column) => Column = jaccardOf)
-      : DataFrame = {
-    val base = baseUncached.persist()
-    val expl = base.select(col("id"), explode(col("sh")).as("x"))
-    val sigs = expl.groupBy("id").agg(sigAggs.head, sigAggs.tail: _*)
-    val banded = sigs.select(col("id"),
-      posexplode(array((0 until bands).map(bandHash): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bandHash")
-    // candidate pairs, dedup'd BEFORE the set arithmetic
-    val pairs = banded.select(col("band"), col("bandHash"), col("id").as("id1"))
+  private def selfVerifiedPairs(banded: DataFrame, base: DataFrame,
+                                threshold: Double, measureName: String,
+                                measure: (Column, Column) => Column): DataFrame =
+    banded.select(col("band"), col("bandHash"), col("id").as("id1"))
       .join(banded.select(col("band"), col("bandHash"), col("id").as("id2")),
         Seq("band", "bandHash"))
       .filter(col("id1") < col("id2"))
       .select("id1", "id2")
       .distinct()
-    val verified = pairs
       .join(base.select(col("id").as("id1"), col("sh").as("sh1")), "id1")
       .join(base.select(col("id").as("id2"), col("sh").as("sh2")), "id2")
-      .select(col("id1"), col("id2"),
-        measure(col("sh1"), col("sh2")).as(measureName))
+      .select(col("id1"), col("id2"), measure(col("sh1"), col("sh2")).as(measureName))
       .filter(col(measureName) >= threshold)
-    // materialize the (small) pair set now, then release the shingle cache
-    val result = verified.cut
-    base.unpersist()
-    result
-  }
 
   /** E2 — SimHash: b-bit signature where bit i is the sign of
     * sum over tokens of (bit i of token-hash ? +1 : -1). Near-dups have
@@ -710,7 +603,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .distinct()
     // materialize the (small) pair set, then release the signature cache
-    // (same persist/release discipline as lshVerifiedPairs)
+    // (same persist/release discipline as cutOver)
     val result = verified.cut
     sigs.unpersist()
     result

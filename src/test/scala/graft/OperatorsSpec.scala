@@ -70,27 +70,6 @@ class OperatorsSpec extends SparkSpec {
     assert(pairs.forall { case (a, b, _) => Set(a, b).subsetOf(Set(1L, 2L, 3L)) })
   }
 
-  test("scalable (xxhash64) minhash LSH agrees with the portable variant") {
-    val docs = Seq(
-      (1L, "the quick brown fox jumps over the lazy dog again and again"),
-      (2L, "the quick brown fox jumps over the lazy dog again and again"),
-      (3L, "the quick brown fox jumps over the lazy cat again and again"),
-      (4L, "completely different tokens here nothing shared at all with others ever"))
-      .toDF("doc_id", "text")
-    val scalable = Dedup.minhashLshScalable(docs, "doc_id", "text", jaccardThreshold = 0.3)
-      .orderBy("id1", "id2").as[(Long, Long, Double)].collect()
-    // exact duplicates are always candidates (identical signatures)
-    assert(scalable.exists { case (a, b, j) => a == 1L && b == 2L && j == 1.0 })
-    // nothing from the unrelated doc survives the exact-Jaccard verify
-    assert(scalable.forall { case (a, b, _) => Set(a, b).subsetOf(Set(1L, 2L, 3L)) })
-    // exact Jaccard agrees pairwise with the portable family (hash choice
-    // affects candidate recall, not the verified similarity value)
-    val portable = Dedup.minhashLsh(docs, "doc_id", "text", jaccardThreshold = 0.3)
-      .as[(Long, Long, Double)].collect().map { case (a, b, j) => (a, b) -> j }.toMap
-    scalable.foreach { case (a, b, j) =>
-      portable.get((a, b)).foreach(pj => assert(pj == j, s"pair ($a,$b)")) }
-  }
-
   test("containment pairs == brute-force containment over the shared candidate set") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(

@@ -224,6 +224,13 @@ class Round18Spec extends SparkSpec {
       pairSet(operators.Dedup.minhashLsh(docs, "doc_id", "text",
         jaccardThreshold = 0.4)),
       "stored-signature pairs must equal the fresh derivation")
+    // the stored signatures are minhashSignatures' at the same width
+    def sigs(d: DataFrame) = d.select("id", "sig").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
+    val fresh = sigs(operators.Dedup.minhashSignatures(docs, "doc_id", "text",
+      m = 16))
+    assert(fresh.nonEmpty && sigs(rest) == fresh,
+      "minhashAtRest and minhashSignatures must agree on every signature")
     // the at-rest claim at the PLAN level: every parquet scan of the
     // pair derivation reads stored index columns only — `text` in any
     // ReadSchema means a stage quietly re-shingled the corpus
