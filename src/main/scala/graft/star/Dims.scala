@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import scala.jdk.CollectionConverters._
+import graft.operators.Ids
 
 /** Dimension builders for the Kimball star schema
   * (`/root/reference/src/FullETLGenerator.java:80-122`).
@@ -18,7 +20,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *
   * Scale note: the heavy input is reduced first by a distributed
   * `distinct()` (map-side partial aggregation); dense ids then come from
-  * sort + zipWithIndex, which stays parallel at any dimension size. If
+  * Spark's own sort order, numbered on the driver for dimension-sized
+  * results and by [[Ids.globalRankDist]] past the small-batch gate. If
   * density is not required, `xxhash64(keys)` is cheaper still (no sort).
   */
 object Dims {
@@ -27,26 +30,40 @@ object Dims {
     * attribute set, so any-row-wins == first-wins; a plain distributed
     * `distinct` is semantically exact (FullETLGenerator.java:80-112).
     *
-    * Dense SK assignment = global sort by the natural key (parallel range
-    * partitioning) + `zipWithIndex` (one count pass, no data movement) —
-    * same result as `row_number() over (orderBy keys)` but WITHOUT
-    * funnelling every distinct key through one window task, so it holds
-    * for dimensions of any size. (The rare legitimate RDD drop-down:
-    * DataFrames have no zipWithIndex.)
+    * Dense SK = position in `orderBy(attrs)` order (Spark's default
+    * ascending, nulls first) — the same ids as
+    * `row_number() over (order by attrs)`:
+    *   - at most [[Ids.SmallBatchKeys]] distinct keys (every real
+    *     dimension — [[FactBuilder.resolveFk]] broadcasts each dim through
+    *     the driver anyway): one bounded ordered collect, numbered on the
+    *     driver and returned as a LOCAL relation, so writing or
+    *     broadcasting the dim afterwards re-runs nothing;
+    *   - past the gate, or with `spark.graft.ids.driver=false`:
+    *     [[Ids.globalRankDist]] over the attribute struct, which never
+    *     funnels the keys through one task.
     */
   def distinctDim(df: DataFrame, skName: String, attrs: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     val cols = attrs.map(col)
-    val sorted = df.select(cols: _*).distinct().orderBy(cols: _*)
-    // SKs are LongType: an Int SK silently wraps past 2^31 distinct keys,
-    // which a 100 TB dimension can reach. (The reference's in-heap int
-    // counter could never get there — its SK domain is not a contract.)
-    val schema = StructType(
-      StructField(skName, LongType, nullable = false) +: sorted.schema.fields)
-    val rows = sorted.rdd.zipWithIndex.map { case (r, i) =>
-      Row.fromSeq((i + 1) +: r.toSeq)
+    val keys = df.select(cols: _*).distinct()
+    val forceDist = spark.conf.getOption("spark.graft.ids.driver").contains("false")
+    val probe =
+      if (forceDist) Array.empty[Row]
+      else keys.orderBy(cols: _*).limit(Ids.SmallBatchKeys.toInt + 1).collect()
+    if (!forceDist && probe.length <= Ids.SmallBatchKeys) {
+      // SKs are LongType: an Int SK silently wraps past 2^31 distinct keys,
+      // which a 100 TB dimension can reach. (The reference's in-heap int
+      // counter could never get there — its SK domain is not a contract.)
+      val schema = StructType(
+        StructField(skName, LongType, nullable = false) +: keys.schema.fields)
+      val rows = probe.indices.map(i => Row.fromSeq((i + 1L) +: probe(i).toSeq))
+      spark.createDataFrame(rows.asJava, schema)
+    } else {
+      // a struct orders field by field, nulls first — orderBy(attrs) order
+      val key = struct(cols: _*)
+      Ids.globalRankDist(keys, key, asc = true, key)
+        .select(col("__rank").as(skName) +: cols: _*)
     }
-    spark.createDataFrame(rows, schema)
   }
 
   /** A1 (empreendimento pattern, FullETLGenerator.java:114-122): dedup key

@@ -1,5 +1,7 @@
 package graft.star
 
+import java.util.concurrent.{ExecutionException, Executors}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -14,8 +16,10 @@ import graft.functions._
   *     materialization replaces the second physical scan (SURVEY.md §3.4).
   *   - Surrogate keys by `row_number()` over natural-key order, not
   *     encounter order (parallel-safe, deterministic — SURVEY.md §7.4).
-  *   - Distributed throughout: no driver-side state; the only data that
-  *     ever converges is the broadcast of the (small) dims.
+  *   - Distributed throughout: the only data that ever converges on the
+  *     driver is the (small) dims — numbered there as local relations
+  *     (`Dims.distinctDim`) and broadcast from there into the fact.
+  *   - The six table sinks run concurrently (`run`), not one after another.
   */
 object StarSchemaJob {
 
@@ -33,7 +37,9 @@ object StarSchemaJob {
 
   /** S2 — CSV sink with the reference's codec (FullETLGenerator.java:36-38).
     * `coalesce(1)` mirrors the reference's single-file-per-table output;
-    * drop it for genuinely large tables.
+    * drop it for genuinely large tables. Blocks until the write job ends;
+    * it is safe to call from several threads at once on different `dir`s,
+    * which is how `run` writes its six tables.
     */
   def writeCsv(df: DataFrame, dir: String, singleFile: Boolean = true): Unit = {
     val out = if (singleFile) df.coalesce(1) else df
@@ -126,16 +132,41 @@ object StarSchemaJob {
       formatDecimalComma(col("MdaGarantiaFisicaKw")).as("MdaGarantiaFisicaKw"),
       col("QtdEmpreendimentos"))
 
-  /** End-to-end: CSV in, six CSVs out (the reference's `main`, :39-55). */
+  /** End-to-end: CSV in, six CSVs out (the reference's `main`, :39-55).
+    *
+    * The six sinks are independent jobs, so they are submitted together,
+    * fact first (its single formatting task is the longest); the dims and
+    * the calendar finish alongside it instead of queueing behind each
+    * other. The pool's threads are created here, so every write inherits
+    * the caller's Spark local properties (job group, description,
+    * scheduler pool). `run` returns only after every sink has finished;
+    * the source cache is released then, and the first failure is rethrown
+    * with the others attached as suppressed.
+    */
   def run(spark: SparkSession, inPath: String, outDir: String): Star = {
     val star = build(readSource(spark, inPath))
-    writeCsv(star.dimGeracao, s"$outDir/dim_geracao")
-    writeCsv(star.dimStatus, s"$outDir/dim_status")
-    writeCsv(star.dimLocalizacao, s"$outDir/dim_localizacao")
-    writeCsv(star.dimEmpreendimento, s"$outDir/dim_empreendimento")
-    writeCsv(star.dimTempo, s"$outDir/dim_tempo")
-    writeCsv(formatFactForCsv(star.fato), s"$outDir/fato_geracao")
-    star.release() // all six tables are on disk; the source cache is dead
+    val sinks = Seq(
+      "fato_geracao" -> formatFactForCsv(star.fato),
+      "dim_geracao" -> star.dimGeracao,
+      "dim_status" -> star.dimStatus,
+      "dim_localizacao" -> star.dimLocalizacao,
+      "dim_empreendimento" -> star.dimEmpreendimento,
+      "dim_tempo" -> star.dimTempo)
+    val pool = Executors.newFixedThreadPool(sinks.size)
+    val failures =
+      try {
+        sinks.map { case (name, df) =>
+          pool.submit(new Runnable { def run(): Unit = writeCsv(df, s"$outDir/$name") })
+        }.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: ExecutionException => Some(e.getCause) }
+        }
+      } finally pool.shutdown()
+    star.release() // every sink has finished; the source cache is dead
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
     star
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.scalacheck.{Gen, Prop, Properties}
+import org.scalacheck.{Arbitrary, Gen, Prop, Properties}
 import org.scalacheck.Prop.propBoolean
 import org.apache.spark.sql.functions._
 import graft.functions._
@@ -23,6 +23,26 @@ object PropertiesSpec extends Properties("graft") {
           .select(parseBrDouble(formatDecimalComma($"x"))).as[Double].collect()
         got.toSeq == xs
       }
+    }
+
+  private val brText: Gen[String] = Gen.frequency(
+    1 -> Gen.const(null),
+    9 -> Gen.listOf(Gen.oneOf("0123456789.,  áéçãÓü".toSeq)).map(_.mkString))
+
+  property("BR kernels: translate forms == the regexp_replace forms") =
+    Prop.forAll(Gen.listOfN(40, Gen.zip(brText, Arbitrary.arbitrary[Double]))) { xs =>
+      val s = xs.toDF("s", "x")
+      // the regexp_replace kernels parseBrDouble / formatDecimalComma used
+      val oldNorm = trim(regexp_replace(regexp_replace($"s", "\\.", ""), ",", "."))
+      val oldGuard = oldNorm
+        .rlike("^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?[fFdD]?$")
+      val oldParse = when(oldGuard,
+        regexp_replace(oldNorm, "[fFdD]$", "").cast("double")).otherwise(lit(0.0))
+      s.filter(!(parseBrDouble($"s") <=> oldParse) ||
+          !(translate($"s", ".", ",") <=> regexp_replace($"s", "\\.", ",")) ||
+          !(formatDecimalComma($"x") <=>
+            regexp_replace(format_string("%.2f", $"x"), "\\.", ",")))
+        .isEmpty
     }
 
   property("calendar row-count == days-between + 1, keys strictly increasing") =

@@ -1,9 +1,14 @@
 package graft
 
 import java.nio.charset.Charset
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
+import org.apache.spark.GraftTestCoreBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.star.StarSchemaJob
+import graft.star.{Dims, StarSchemaJob}
 
 /** End-to-end star-schema test on a synthesized ANEEL-shaped CSV fixture
   * (FIXTURES.md §A): exercises first-wins dedup, survivor determinism,
@@ -29,11 +34,39 @@ class StarSchemaSpec extends SparkSpec {
     "UTE;Fóssil;Gás natural;Operação;Registro;N;SP;Cubatão;CEG003;Term Gama;Privado;2020;10,5;0,0;0,0",
     "UTE;Fóssil;Gás natural;Operação;Registro;N;SP;Cubatão;CEG004;Term Delta;Privado;2020-01-02T12:00:00;99,99;88,88;77,77")
 
-  private lazy val outDir = Files.createTempDirectory("graft-star").toString
-  private lazy val star = {
+  private lazy val input: Path = {
     val in = Files.createTempDirectory("graft-aneel").resolve("in.csv")
     Files.write(in, (header +: rows).mkString("\n").getBytes(Charset.forName("ISO-8859-1")))
-    StarSchemaJob.run(spark, in.toString, outDir)
+  }
+  private lazy val outDir = Files.createTempDirectory("graft-star").toString
+  private lazy val star = StarSchemaJob.run(spark, input.toString, outDir)
+
+  /** Runs `body` under job group `group` and returns its outcome with the
+    * group each started job carried and the end time of each job of the
+    * group, all events drained.
+    */
+  private def underGroup[T](group: String)(body: => T)
+      : (Either[Throwable, T], Map[Int, String], Map[Int, Long]) = {
+    val started = new ConcurrentHashMap[Int, String]()
+    val ended = new ConcurrentHashMap[Int, Long]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.put(e.jobId,
+          Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+            .getOrElse("<none>"))
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = ended.put(e.jobId, e.time)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "StarSchemaSpec")
+    try {
+      val out = try Right(body) catch { case e: Exception => Left(e) }
+      GraftTestCoreBridge.drainListeners(sc)
+      (out, started.asScala.toMap, ended.asScala.toMap)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("dims dedupe to expected cardinalities with dense SKs") {
@@ -92,5 +125,77 @@ class StarSchemaSpec extends SparkSpec {
       .option("encoding", "ISO-8859-1").csv(s"$outDir/fato_geracao")
     val m = fatoCsv.filter($"CodCEG" === "CEG001" && $"MdaPotenciaOutorgadaKw" === "1234,56").count()
     assert(m == 1)
+  }
+
+  test("each of the six table directories holds exactly one part- file") {
+    star
+    Seq("dim_geracao", "dim_status", "dim_localizacao", "dim_empreendimento",
+        "dim_tempo", "fato_geracao").foreach { t =>
+      val parts = Files.list(Paths.get(outDir, t)).iterator().asScala
+        .count(_.getFileName.toString.startsWith("part-"))
+      assert(parts == 1, s"$t holds $parts part- files")
+    }
+  }
+
+  test("run: every job it launches carries the caller's job group") {
+    val out = Files.createTempDirectory("graft-star-group").toString
+    val (result, started, _) = underGroup("star-run-group") {
+      StarSchemaJob.run(spark, input.toString, out)
+    }
+    assert(result.isRight, result)
+    // six sinks plus the build's collects
+    assert(started.size > 6, started)
+    assert(started.values.forall(_ == "star-run-group"), started)
+  }
+
+  test("run: a failing sink makes run throw only once no job of the call runs") {
+    // A plain file at the table path itself would just be deleted by the
+    // overwrite; a link whose target lies under a plain file cannot be
+    // cleared or created, so only dim_geracao's write fails. It fails in
+    // its first task, while the fact's single task over 20k rows still runs.
+    val out = Files.createTempDirectory("graft-star-fail")
+    val blocker = Files.write(out.resolve("blocker"), "a plain file".getBytes("UTF-8"))
+    Files.createSymbolicLink(out.resolve("dim_geracao"), blocker.resolve("dim_geracao"))
+    val in = Files.createTempDirectory("graft-aneel-20k").resolve("in.csv")
+    Files.write(in, (header +: Seq.fill(4000)(rows).flatten).mkString("\n")
+      .getBytes(Charset.forName("ISO-8859-1")))
+    var thrownAt = 0L
+    val (result, started, ended) = underGroup("star-run-fail") {
+      try StarSchemaJob.run(spark, in.toString, out.toString)
+      finally thrownAt = System.currentTimeMillis()
+    }
+    assert(result.isLeft, "run returned although one sink could not write")
+    assert(started.nonEmpty)
+    assert(started.keySet == ended.keySet, s"jobs never ended: ${started.keySet -- ended.keySet}")
+    assert(ended.values.forall(_ <= thrownAt))
+  }
+
+  test("distinctDim: local and distributed SKs agree on null and accented keys") {
+    val df = Seq[(String, String)](
+      ("Hídrica", "São Paulo"), ("Hidrica", null), (null, "Três Rios"), (null, null),
+      ("Eólica", "Conceição"), ("Hídrica", "São Paulo"), ("Eólica", null),
+      ("", "Ábaco"), ("Zeta", "ação"), (null, null)).toDF("a", "b")
+    def rowsOf(d: org.apache.spark.sql.DataFrame) =
+      d.select("sk", "a", "b").as[(Long, String, String)].collect().sortBy(_._1).toSeq
+    val local = rowsOf(Dims.distinctDim(df, "sk", Seq("a", "b")))
+    spark.conf.set("spark.graft.ids.driver", "false")
+    val dist =
+      try rowsOf(Dims.distinctDim(df, "sk", Seq("a", "b")))
+      finally spark.conf.unset("spark.graft.ids.driver")
+    val want = rowsOf(df.distinct()
+      .withColumn("sk", row_number().over(Window.orderBy($"a", $"b")).cast("long")))
+    assert(local == want)
+    assert(dist == want)
+  }
+
+  test("no dim of a built star is backed by an RDD") {
+    val built = StarSchemaJob.build(StarSchemaJob.readSource(spark, input.toString))
+    try {
+      Seq(built.dimGeracao, built.dimStatus, built.dimLocalizacao,
+        built.dimEmpreendimento, built.dimTempo).foreach { d =>
+        assert(!d.queryExecution.analyzed.toString.contains("LogicalRDD"),
+          d.queryExecution.analyzed.toString)
+      }
+    } finally built.release()
   }
 }
