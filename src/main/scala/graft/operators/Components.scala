@@ -99,8 +99,8 @@ object Components {
     * broadcast join. Past the bound it delegates to the distributed
     * loop untouched.
     *
-    * The collect is bounded by contract (`broadcastMaxEdges`, default
-    * 2¹⁷ edges ≈ a few MB — same order as Spark's own broadcast
+    * The collect is bounded by contract ([[Ids.SmallBatchKeys]] = 2¹⁷
+    * edges ≈ a few MB — same order as Spark's own broadcast
     * threshold), never by hope: a 100 TB near-dup graph with billions
     * of candidate edges takes the distributed path. Entity-res graphs
     * sit far below the bound (duplicates are rare by construction), and
@@ -108,13 +108,12 @@ object Components {
     * actual work there.
     */
   def minLabelAdaptive(edges: DataFrame, srcCol: String, dstCol: String,
-                       nodes: DataFrame, idCol: String,
-                       broadcastMaxEdges: Long = 1L << 17)
+                       nodes: DataFrame, idCol: String)
       : DataFrame = graft.Blocks.scoped { ps =>
     val e = ps.cut(edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst")))
     val n = e.count()
-    if (n > broadcastMaxEdges) {
+    if (n > Ids.SmallBatchKeys) {
       // cast nodes to long too, so both paths emit the same schema
       val out = minLabel(e, "src", "dst",
         nodes.select(col(idCol).cast("long").as(idCol)), idCol)

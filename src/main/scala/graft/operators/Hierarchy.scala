@@ -130,8 +130,8 @@ object Hierarchy {
     * materializing the corpus-sized RESULT map; the loop itself stays
     * flat.
     *
-    * Batches at or under [[SmallBatchEdges]] skip the distributed loop
-    * entirely: see [[SmallBatchEdges]].
+    * Batches at or under [[Ids.SmallBatchKeys]] edges skip the
+    * distributed loop entirely: see [[smallBatch]].
     */
   def extend(settled: DataFrame, newEdges: DataFrame, idCol: String,
              parentCol: String, maxIter: Int = 30): DataFrame = {
@@ -143,7 +143,7 @@ object Hierarchy {
     }
   }
 
-  private def extendDistributed(settled: DataFrame, e: DataFrame,
+  private[graft] def extendDistributed(settled: DataFrame, e: DataFrame,
                                 maxIter: Int): DataFrame =
       graft.Blocks.scoped { ps =>
     val base = settled.select(col("id").cast("long").as("id"),
@@ -224,7 +224,7 @@ object Hierarchy {
     }
   }
 
-  private def extendPathsDistributed(settled: DataFrame, e: DataFrame,
+  private[graft] def extendPathsDistributed(settled: DataFrame, e: DataFrame,
                                      sep: String, maxIter: Int): DataFrame =
       graft.Blocks.scoped { ps =>
     val sepRe = java.util.regex.Pattern.quote(sep)
@@ -324,33 +324,27 @@ object Hierarchy {
 
   /** Batch-size gate for [[extend]]/[[extendPaths]] — the
     * `Components.minLabelAdaptive` discipline applied to ingest: a
-    * daily batch is usually tiny next to the standing map, and below
-    * this bound the distributed doubling loop's ~10 scheduled jobs are
-    * pure fixed cost (measured r12: ~2 s for a 4k-edge batch at
-    * local[32], >80 % of it scheduling). The small path collects the
-    * ≤2^17 batch edges (bounded: ≤2 MB) plus the batch-bounded
-    * attach-point rows, chases pointers ONCE on the driver with
-    * memoization, and ships the resolved rows back as a local
+    * daily batch is usually tiny next to the standing map, and at or
+    * under [[Ids.SmallBatchKeys]] edges the distributed doubling loop's
+    * ~10 scheduled jobs are pure fixed cost (measured r12: ~2 s for a
+    * 4k-edge batch at local[32], >80 % of it scheduling). The small path
+    * collects the ≤2^17 batch edges (bounded: ≤2 MB) plus the
+    * batch-bounded attach-point rows, chases pointers ONCE on the driver
+    * with memoization, and ships the resolved rows back as a local
     * relation — two jobs total, and the only corpus-sized touch is the
     * same one attach semi-join the distributed path pays anyway.
-    */
-  val SmallBatchEdges: Int = 1 << 17
-
-  /** Bounded probe: Some(edges) iff the batch fits the gate — the
-    * limit stops scanning at bound+1 rows, so probing a huge batch
-    * costs one short-circuit pass, not a count.
+    *
+    * Some(edges) iff the batch fits the gate — the limit stops scanning
+    * at bound+1 rows, so probing a huge batch costs one short-circuit
+    * pass, not a count.
     */
   private def smallBatch(e: DataFrame): Option[Array[(Long, Long)]] = {
-    // escape hatch (and the spec's lever for exercising the
-    // distributed loop on small fixtures)
-    if (e.sparkSession.conf.getOption("spark.graft.extend.driver")
-        .contains("false")) return None
-    val probe = e.limit(SmallBatchEdges + 1).collect()
-    if (probe.length > SmallBatchEdges) None
+    val probe = e.limit(Ids.SmallBatchKeys.toInt + 1).collect()
+    if (probe.length > Ids.SmallBatchKeys) None
     else Some(probe.map(r => (r.getLong(0), r.getLong(1))))
   }
 
-  /** Driver-side resolve for a small batch (see [[SmallBatchEdges]]).
+  /** Driver-side resolve for a small batch (see [[smallBatch]]).
     * Semantics match the distributed loop: a parent outside both the
     * batch and the settled map becomes a brand-new root (depth 0,
     * path = itself); cycle members (a contract violation there too)

@@ -25,6 +25,17 @@ import org.apache.spark.sql.types.DataType
   */
 object Ids {
 
+  /** The small-batch bound shared by every driver-side gate: at or under
+    * 2^17 keys (or edges — a few MB, the order of Spark's own broadcast
+    * threshold) the fixed per-job cost of the distributed machinery is
+    * the whole latency, so the key set is collected once and solved on
+    * the driver. [[globalRank]], [[graft.star.Dims.distinctDim]],
+    * [[Hierarchy.extend]]/[[Hierarchy.extendPaths]],
+    * [[Components.minLabelAdaptive]] and Similarity's bucket ranks gate
+    * on it; past it each runs its distributed path.
+    */
+  val SmallBatchKeys: Long = 1L << 17
+
   /** Dense 1..N ids in `keyCol` order (key must be unique — ties would
     * make the intra-bucket order, and thus the ids, nondeterministic).
     * Thin wrapper over [[globalRank]] with the key as its own tie-break:
@@ -33,96 +44,20 @@ object Ids {
     * never the ids. `buckets <= 0` derives the count from the cluster
     * (see [[globalRank]]).
     *
-    * Frames at or under [[SmallBatchKeys]] rows skip the distributed
-    * machinery (r12, the small-batch gate discipline; r14 made the
-    * probe BYTES-bounded, not just row-bounded): a KEY-PRUNED
-    * limit-probe (`select(keyCol).limit(bound+1)`) decides the gate —
-    * the limit stops at bound+1 and the projection reaches the scan,
-    * so probing a huge or wide frame ships only ≤2^17+1 key values to
-    * the driver, never payload columns. On the small path the
-    * collected keys come back as a LOCAL relation ranked with a
-    * single-partition window — Spark's own sort semantics, so ids are
-    * bit-identical to the distributed path (spec-pinned) — and `gid`
-    * is broadcast-joined back onto `df` by key (NULL-SAFELY — a null
-    * key is a legal unique key and must keep its row on every path),
-    * so full-width rows never visit the driver. A key-only `df` (the
-    * [[extendIds]] path) skips the join: the ranked local relation IS
-    * the result, one probe job total.
-    * `spark.graft.ids.driver=false` forces the distributed path.
-    *
-    * HARD PRECONDITION — `df` must be DETERMINISTIC (the same
-    * [[globalRank]] contract, which the distributed path inherits and
-    * the small path needs for its own reason: it evaluates `df` twice,
-    * once for the key probe and once for the join-back, so an input
-    * that yields different rows per evaluation — `rand`/`sample`/
-    * un-ordered `limit` upstream, or a source mutating between actions
-    * — can present keys to the join that the probe never ranked,
-    * silently dropping rows). Nondeterministic callers must pin first
+    * Every [[globalRank]] property carries over: frames at or under
+    * [[SmallBatchKeys]] keys are ranked as a local relation after one
+    * key-pruned probe (payload columns never reach the driver), `gid` is
+    * joined back null-safely (a null key is a legal unique key and keeps
+    * its row), a key-only `df` (the [[extendIds]] path) skips the join,
+    * and `spark.graft.ids.verify=true` checks the join-back. The same
+    * HARD PRECONDITION holds: `df` must be DETERMINISTIC, since the small
+    * path evaluates it twice (probe and join-back) and the distributed
+    * path three times; nondeterministic callers must pin first
     * (`persist`+materialize, or [[graft.Blocks.cut]]).
-    * `spark.graft.ids.verify=true` (debug) checks the precondition at
-    * runtime: the join-back row count must equal `df.count()`, so a
-    * violation fails loudly instead of dropping rows (r15 advice).
     */
-  def denseIds(df: DataFrame, keyCol: String, buckets: Int = 0): DataFrame = {
-    val forceDist = df.sparkSession.conf
-      .getOption("spark.graft.ids.driver").contains("false")
-    val probe =
-      if (forceDist) Array.empty[Row]
-      else probeKeys(df, keyCol).collect()
-    if (!forceDist && probe.length <= SmallBatchKeys) {
-      import scala.jdk.CollectionConverters._
-      val ranked = df.sparkSession
-        .createDataFrame(probe.toSeq.asJava, df.select(keyCol).schema)
-        .withColumn("gid", row_number()
-          .over(Window.orderBy(col(keyCol).asc)).cast("long"))
-      if (df.columns.sameElements(Array(keyCol))) ranked
-      else {
-        // null-safe equality: a null key is ranked like any other
-        // unique key and must not drop its row (plain `===` would)
-        val r = ranked.withColumnRenamed(keyCol, "__dk")
-        val joined = df.join(broadcast(r), col(keyCol) <=> col("__dk"))
-          .select(df.columns.map(col).toIndexedSeq :+ col("gid"): _*)
-        // `spark.graft.ids.verify=true` turns a precondition violation
-        // into a loud failure instead of silently dropped rows (r15
-        // advice): a second evaluation that yields keys the probe never
-        // ranked loses them to the inner join (count shrinks); a
-        // duplicated key multiplies (count grows). Debug-only — it
-        // costs three extra counting actions (the two row counts plus
-        // the distinct-key count below).
-        if (df.sparkSession.conf
-            .getOption("spark.graft.ids.verify").contains("true")) {
-          val (got, want) = (joined.count(), df.count())
-          require(got == want,
-            s"denseIds: join-back kept $got of $want rows — the input is " +
-              "nondeterministic or the key is not unique (see the " +
-              "determinism precondition); pin the input with Blocks.cut " +
-              "or persist before calling")
-          // The row-count check alone passes when a second evaluation
-          // drops some keys while duplicating others by the same total
-          // (offsetting errors, r16 advice). The distinct-key count of
-          // the join-back must also equal the number of keys the probe
-          // ranked — a dropped key shrinks it regardless of what else
-          // got duplicated.
-          val gotKeys = joined.select(col(keyCol)).distinct().count()
-          require(gotKeys == probe.length,
-            s"denseIds: join-back holds $gotKeys distinct keys but the " +
-              s"probe ranked ${probe.length} — the input produced a " +
-              "different key set on re-evaluation; pin it with " +
-              "Blocks.cut or persist before calling")
-        }
-        joined
-      }
-    } else
-      globalRankDist(df, col(keyCol), asc = true, col(keyCol), buckets)
-        .withColumnRenamed("__rank", "gid")
-  }
-
-  /** The gate probe frame — exposed (package-private) so the plan pin
-    * can assert the projection reaches the scan (`ReadSchema` holds
-    * only the key).
-    */
-  private[graft] def probeKeys(df: DataFrame, keyCol: String): DataFrame =
-    df.select(keyCol).limit(SmallBatchKeys.toInt + 1)
+  def denseIds(df: DataFrame, keyCol: String, buckets: Int = 0): DataFrame =
+    globalRank(df, col(keyCol), asc = true, col(keyCol), buckets)
+      .withColumnRenamed("__rank", "gid")
 
   /** Global 1..N rank over (primary asc|desc, tieBreak asc) WITHOUT a
     * single-partition sort — the building block that lets rank-family
@@ -164,8 +99,8 @@ object Ids {
     * `max(64, sparkContext.defaultParallelism)`.
     *
     * Frames at or under [[SmallBatchKeys]] rows skip the distributed
-    * machinery (r19 optimization — the [[denseIds]] small-frame gate
-    * discipline applied to the general rank): a KEY-PRUNED limit-probe
+    * machinery (r19 optimization; [[denseIds]] is this call with the key
+    * as its own tie-break): a KEY-PRUNED limit-probe
     * over `(primary, tieBreak)` decides the gate; on the small path the
     * collected key pairs rank as a LOCAL relation with one bounded
     * single-partition window — Spark's own sort semantics over the same
@@ -176,31 +111,26 @@ object Ids {
     * When `df` carries nothing but the key columns themselves, the
     * ranked local relation IS the result and the join is skipped: one
     * probe job total instead of the distributed path's three passes.
-    * `spark.graft.ids.driver=false` forces the distributed path.
+    * `spark.graft.ids.verify=true` (debug) checks the small path's
+    * join-back: its row count must equal `df.count()` and its
+    * distinct-key count the number of keys the probe ranked, so a
+    * nondeterministic input or a non-unique composite fails loudly
+    * instead of dropping or multiplying rows.
     *
     * PROBE COST (r19 advice): the gate probe is a key-pruned
     * `limit(SmallBatchKeys+1).collect()` paid on EVERY call — bounded,
     * but when the key columns sit behind a shuffle/aggregate the limit
     * cannot short-circuit, so a large-frame caller pays one full extra
-    * pass just to learn it must take the distributed path. Callers that
-    * already know the frame's size pass `knownRows` (≥ 0): a count past
-    * the gate skips the probe entirely and enters [[globalRankDist]]
-    * directly; a count at or under it keeps the probe (those rows ARE
-    * the local relation the small path ranks). `spark.graft.ids.verify`
-    * applies the [[denseIds]] join-back checks to the small path's
-    * broadcast join (row count + distinct-key count — r19 advice).
+    * pass just to learn it must take the distributed path. Callers in
+    * `graft` that have already gated on frame size (Similarity's
+    * counted bucket ranks, [[graft.star.Dims.distinctDim]]'s ordered
+    * probe) enter [[globalRankDist]] directly and skip it.
     */
   def globalRank(df: DataFrame, primary: Column, asc: Boolean,
-                 tieBreak: Column, buckets: Int = 0,
-                 knownRows: Long = -1L): DataFrame = {
-    val forceDist = df.sparkSession.conf
-      .getOption("spark.graft.ids.driver").contains("false") ||
-      knownRows > SmallBatchKeys
+                 tieBreak: Column, buckets: Int = 0): DataFrame = {
     val keyed = df.select(primary.as("__p"), tieBreak.as("__t"))
-    val probe =
-      if (forceDist) Array.empty[Row]
-      else keyed.limit(SmallBatchKeys.toInt + 1).collect()
-    if (!forceDist && probe.length <= SmallBatchKeys) {
+    val probe = keyed.limit(SmallBatchKeys.toInt + 1).collect()
+    if (probe.length <= SmallBatchKeys) {
       import scala.jdk.CollectionConverters._
       val sOrd =
         if (asc) Seq(col("__p").asc, col("__t").asc)
@@ -224,12 +154,13 @@ object Ids {
           val joined = df.join(broadcast(ranked),
               primary <=> col("__p") && tieBreak <=> col("__t"))
             .select(df.columns.map(col).toIndexedSeq :+ col("__rank"): _*)
-          // `spark.graft.ids.verify=true` (debug): the same loud-fail
-          // checks denseIds' join-back runs (r19 advice) — a
-          // nondeterministic input or a non-unique (primary, tieBreak)
-          // composite silently drops or multiplies rows here; the row
-          // count must match df's and the distinct-key count must match
-          // what the probe ranked.
+          // `spark.graft.ids.verify=true` (debug): a second evaluation
+          // that yields keys the probe never ranked loses them to the
+          // inner join (count shrinks); a non-unique (primary, tieBreak)
+          // composite multiplies rows (count grows). The row count alone
+          // passes when some keys drop while others duplicate by the
+          // same total (r16 advice), so the distinct-key count must also
+          // match what the probe ranked. Costs three counting actions.
           if (df.sparkSession.conf
               .getOption("spark.graft.ids.verify").contains("true")) {
             val (got, want) = (joined.count(), df.count())
@@ -252,9 +183,9 @@ object Ids {
   }
 
   /** The distributed rank machinery behind [[globalRank]] — callers that
-    * have ALREADY gated on frame size (denseIds' probe, Similarity's
-    * counted bucket ranks) enter here directly so the gate probe is not
-    * paid twice.
+    * have ALREADY gated on frame size (Similarity's counted bucket ranks,
+    * `Dims.distinctDim`'s ordered probe) enter here directly so the gate
+    * probe is not paid twice.
     */
   private[graft] def globalRankDist(df: DataFrame, primary: Column,
                                     asc: Boolean, tieBreak: Column,
@@ -360,8 +291,6 @@ object Ids {
     * should be AT REST (or pinned): it is read by the anti-join, the
     * high-water max, and the output union.
     */
-  val SmallBatchKeys: Long = 1L << 17
-
   def extendIds(existing: DataFrame, incoming: DataFrame, keyCol: String,
                 buckets: Int = 0): DataFrame = {
     val newKeys = incoming.select(keyCol).distinct()

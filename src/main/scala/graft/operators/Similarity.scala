@@ -186,8 +186,7 @@ object Similarity {
     */
   def mipsIvfTopK(queries: DataFrame, corpus: DataFrame,
                   centroids: DataFrame, k: Int, roundTo: Int = 6): DataFrame = {
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "mipsIvfTopK needs at least one centroid")
+    val cents = collectCentroids(centroids, "mipsIvfTopK")
     val m2 = corpus.agg(max(dot(col("vec"), col("vec"))))
       .collect()(0).getDouble(0)
     def selfDot(v: Array[Float]): Double =
@@ -231,31 +230,36 @@ object Similarity {
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
-  /** E3 — IVF-flavoured ANN: partition the corpus into K Voronoi cells
-    * around centroid vectors, search only the query's own cell. Train the
-    * centroids with `trainCentroids` (deterministic spherical k-means);
-    * the oracle-graded query designates corpus vectors instead so the
-    * index is expressible in portable SQL — the index/search shape is
-    * identical. Assignment and ranking use ROUNDED similarity with id
-    * tie-breaks so results are engine-reproducible.
-    *
-    * Scale: the K centroids are collected once (K is small by the IVF
-    * contract — that IS the index) and inlined as literals, so cell
-    * assignment is ONE narrow codegen'd projection over the corpus: a
-    * per-row argmax via `array_min` over `struct(-sim, cid)` — no join, no
-    * window, no N×K shuffle (round-1 verdict item 3). Search is queries x
-    * corpus/K after one join on the cell id; store the corpus bucketed by
-    * cell for a shuffle-free search side.
+  /** Most centroids (or PQ codewords) one index may hold. Every K in
+    * use sits far below it (perfbench's IVF 8, the graded queries 4
+    * centroids and 8 codewords), and FAISS's usual 8-bit PQ codes mean
+    * 256 codewords. The cap exists because each centroid is inlined as
+    * a literal vector into the per-row cell projection, so the plan and
+    * its generated code grow linearly with K; past a few thousand the
+    * projection outgrows codegen's method-size limit and the collect
+    * itself ships K full vectors to the driver.
     */
+  val MaxCentroids: Int = 1 << 12
+
   /** Bounded collect of a (id, vec) centroid frame — K vectors, the IVF
-    * index contract — sorted for stable ids.
+    * index contract — sorted for stable ids. Fails, naming `caller`, on
+    * an empty frame or one past [[MaxCentroids]] rows (the limit stops
+    * the collect at cap + 1).
     */
-  private def collectCentroids(centroids: DataFrame): Array[(Long, Array[Float])] =
-    centroids
+  private def collectCentroids(centroids: DataFrame,
+                               caller: String): Array[(Long, Array[Float])] = {
+    val cents = centroids
       .select(col("id").cast("long"), col("vec"))
+      .limit(MaxCentroids + 1)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
       .sortBy(_._1)
+    require(cents.nonEmpty, s"$caller needs at least one centroid")
+    require(cents.length <= MaxCentroids,
+      s"$caller: the centroid frame holds more than MaxCentroids = " +
+        s"$MaxCentroids rows; an index is bounded by that cap")
+    cents
+  }
 
   /** Per-row cell assignment over K centroid literals: argmax similarity
     * as a pure expression — array_min of struct(-sim, cid); struct
@@ -395,10 +399,26 @@ object Similarity {
             org.apache.spark.sql.types.FloatType)))))
   }
 
+  /** E3 — IVF-flavoured ANN: partition the corpus into K Voronoi cells
+    * around centroid vectors, search only the query's own cell. Train the
+    * centroids with `trainCentroids` (deterministic spherical k-means);
+    * the oracle-graded query designates corpus vectors instead so the
+    * index is expressible in portable SQL — the index/search shape is
+    * identical. Assignment and ranking use ROUNDED similarity with id
+    * tie-breaks so results are engine-reproducible.
+    *
+    * Scale: the K centroids are collected once (K is small by the IVF
+    * contract — that IS the index — and at most [[MaxCentroids]]) and
+    * inlined as literals, so cell
+    * assignment is ONE narrow codegen'd projection over the corpus: a
+    * per-row argmax via `array_min` over `struct(-sim, cid)` — no join, no
+    * window, no N×K shuffle (round-1 verdict item 3). Search is queries x
+    * corpus/K after one join on the cell id; store the corpus bucketed by
+    * cell for a shuffle-free search side.
+    */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
               k: Int, roundTo: Int = 6, nprobe: Int = 1): DataFrame = {
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "ivfTopK needs at least one centroid")
+    val cents = collectCentroids(centroids, "ivfTopK")
     require(nprobe >= 1, "nprobe must be >= 1")
     val c = corpus
       .select(col("id").as("cand_id"), col("vec"),
@@ -548,8 +568,7 @@ object Similarity {
 
   private def pqGeometry(codebook: DataFrame, m: Int):
       (Array[(Long, Array[Float])], Int) = {
-    val cents = collectCentroids(codebook)
-    require(cents.nonEmpty, "PQ needs a non-empty codebook")
+    val cents = collectCentroids(codebook, "PQ codebook")
     val dim = cents.head._2.length
     require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
     (cents, dim / m)
@@ -702,8 +721,7 @@ object Similarity {
   def ivfPqIndex(corpus: DataFrame, centroids: DataFrame,
                  codebook: DataFrame, m: Int = 4,
                  roundTo: Int = 6): DataFrame = {
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "ivfPqIndex needs at least one centroid")
+    val cents = collectCentroids(centroids, "ivfPqIndex")
     val (cbCents, sub) = pqGeometry(codebook, m)
     pqEncodeWith(
       ivfResidual(corpus, centroids, cellExpr(cents, roundTo)(col("vec"))),
@@ -724,8 +742,7 @@ object Similarity {
                          m: Int = 4, nprobe: Int = 1,
                          roundTo: Int = 6): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "ivfPqTopKFromCodes needs at least one centroid")
+    val cents = collectCentroids(centroids, "ivfPqTopKFromCodes")
     require(nprobe >= 1, "nprobe must be >= 1")
     val (cbCents, sub) = pqGeometry(codebook, m)
     val idType = codes.schema("cand_id").dataType
@@ -1033,8 +1050,9 @@ object Similarity {
     * one bounded single-partition window (globalRank's ~3 s
     * sample/bucket fixed cost dwarfs a ≤2^17-row frame — the
     * Ids.denseIds gate discipline, decided from the caller's
-    * already-known count); past the gate the distributed
-    * [[Ids.globalRank]] runs, so no single-partition window ever sees a
+    * already-known count); past the gate [[Ids.globalRankDist]] runs
+    * (the count already decided the gate, so [[Ids.globalRank]]'s probe
+    * is skipped), so no single-partition window ever sees a
     * corpus-sized frame.
     */
   private[graft] def bucketRanked(frame: DataFrame, n: Long, bits: Int,
@@ -1055,7 +1073,7 @@ object Similarity {
     * ring (each partition ≤ the [[Ids.SmallBatchKeys]] gate, and the
     * rings sort in parallel where the r15 form ran `rings` sequential
     * single-partition windows); past the gate, one distributed
-    * [[Ids.globalRank]] over the composite key `ring·2^bits + bucket`
+    * [[Ids.globalRankDist]] over the composite key `ring·2^bits + bucket`
     * (ring blocks are disjoint since bucket < 2^bits, and each holds
     * exactly `n` rows, so per-ring rank = composite rank − ring·n).
     * Row-for-row equal to `rings` separate [[bucketRanked]] passes —
@@ -1706,8 +1724,7 @@ object Similarity {
     */
   def evalIvfIndex(eval: DataFrame, centroids: DataFrame,
                    roundTo: Int = 6): DataFrame = {
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "evalIvfIndex needs at least one centroid")
+    val cents = collectCentroids(centroids, "evalIvfIndex")
     // same zero-norm exclusion contract as the exact path (NaN cosine)
     eval.select(col("id").as("eval_id"), col("vec").as("ev"),
         norm(col("vec")).as("en"),
@@ -1733,8 +1750,7 @@ object Similarity {
                                       centroids: DataFrame, threshold: Double,
                                       nprobe: Int = 1,
                                       roundTo: Int = 6): DataFrame = {
-    val cents = collectCentroids(centroids)
-    require(cents.nonEmpty, "needs at least one centroid")
+    val cents = collectCentroids(centroids, "semanticDecontaminateIvfIndexed")
     require(nprobe >= 1, "nprobe must be >= 1")
     val hits = train
       .select(col("id"), col("vec"), norm(col("vec")).as("tn"),

@@ -38,19 +38,17 @@ object Dims {
     *     the driver anyway): one bounded ordered collect, numbered on the
     *     driver and returned as a LOCAL relation, so writing or
     *     broadcasting the dim afterwards re-runs nothing;
-    *   - past the gate, or with `spark.graft.ids.driver=false`:
-    *     [[Ids.globalRankDist]] over the attribute struct, which never
-    *     funnels the keys through one task.
+    *   - past the gate: [[Ids.globalRankDist]] over the attribute
+    *     struct, which never funnels the keys through one task (the
+    *     ordered probe already decided the gate, so the struct rank
+    *     skips [[Ids.globalRank]]'s own probe).
     */
   def distinctDim(df: DataFrame, skName: String, attrs: Seq[String]): DataFrame = {
     val spark = df.sparkSession
     val cols = attrs.map(col)
     val keys = df.select(cols: _*).distinct()
-    val forceDist = spark.conf.getOption("spark.graft.ids.driver").contains("false")
-    val probe =
-      if (forceDist) Array.empty[Row]
-      else keys.orderBy(cols: _*).limit(Ids.SmallBatchKeys.toInt + 1).collect()
-    if (!forceDist && probe.length <= Ids.SmallBatchKeys) {
+    val probe = keys.orderBy(cols: _*).limit(Ids.SmallBatchKeys.toInt + 1).collect()
+    if (probe.length <= Ids.SmallBatchKeys) {
       // SKs are LongType: an Int SK silently wraps past 2^31 distinct keys,
       // which a 100 TB dimension can reach. (The reference's in-heap int
       // counter could never get there — its SK domain is not a contract.)

@@ -20,8 +20,7 @@ object PlanDump {
       .config("spark.ui.enabled", "false").getOrCreate()
     graft.Graft.tune(spark)
     // GRAFT_PLANDUMP_CONF="k=v;k=v" — session confs for the dump run
-    // (e.g. spark.graft.ids.driver=false reproduces the pre-r19
-    // distributed-rank plan as the honest "before")
+    // (e.g. spark.sql.adaptive.enabled=false dumps the static plan)
     sys.env.get("GRAFT_PLANDUMP_CONF").foreach(_.split(";").foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k, v)

@@ -416,6 +416,21 @@ class OperatorsSpec extends SparkSpec {
     assert(again == first)
   }
 
+  test("IVF centroid collect: cap + 1 centroids fail naming the cap and the caller") {
+    val vecs = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f))).toDF("id", "vec")
+    val tooMany = spark.range(0, Similarity.MaxCentroids + 1L)
+      .select($"id", array(lit(1.0f), lit(0.0f)).as("vec"))
+    val ex = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(vecs, vecs, tooMany, k = 1)
+    }
+    assert(ex.getMessage.contains("ivfTopK") &&
+      ex.getMessage.contains(s"MaxCentroids = ${Similarity.MaxCentroids}"), ex.getMessage)
+    val empty = intercept[IllegalArgumentException] {
+      Similarity.ivfTopK(vecs, vecs, tooMany.limit(0), k = 1)
+    }
+    assert(empty.getMessage.contains("ivfTopK needs at least one centroid"))
+  }
+
   test("language id picks max-marker language, und when no markers") {
     val df = Seq("the cat of a hat and the", "der hund ist und das", "xyz qqq www")
       .toDF("text")

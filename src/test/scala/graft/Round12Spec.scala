@@ -5,7 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Round-12 pins: the small-batch driver path of Hierarchy.extend /
   * extendPaths must be indistinguishable from the distributed doubling
-  * loop (forced via spark.graft.extend.driver=false) — multi-level
+  * loop (Hierarchy.extendDistributed / extendPathsDistributed, called
+  * directly on the same batch) — multi-level
   * new-on-new chains, settled attach points, brand-new roots, path
   * strings, old rows verbatim.
   *
@@ -18,10 +19,10 @@ import org.apache.spark.sql.functions._
 class Round12Spec extends SparkSpec {
   import spark.implicits._
 
-  private def withDistributedExtend[A](body: => A): A = {
-    spark.conf.set("spark.graft.extend.driver", "false")
-    try body finally spark.conf.unset("spark.graft.extend.driver")
-  }
+  /** The (id, anc) long edge frame both extend paths consume. */
+  private def batchEdges(batch: org.apache.spark.sql.DataFrame) =
+    batch.select(col("id").cast("long").as("id"),
+      col("parent").cast("long").as("anc"))
 
   test("extend small-batch driver path == distributed loop") {
     val all = (1L to 1000L).map(i => (i, i - 1)).toDF("id", "parent")
@@ -33,9 +34,7 @@ class Round12Spec extends SparkSpec {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val fast = asMap(Hierarchy.extend(day1, batch, "id", "parent"))
-    val slow = withDistributedExtend {
-      asMap(Hierarchy.extend(day1, batch, "id", "parent"))
-    }
+    val slow = asMap(Hierarchy.extendDistributed(day1, batchEdges(batch), 30))
     assert(fast == slow)
     assert(fast(4000L) == (4000L, 0L) && fast(5001L) == (4000L, 2L))
     assert(fast(1000L) == (0L, 1000L)) // 401-deep new-on-new chain
@@ -45,15 +44,26 @@ class Round12Spec extends SparkSpec {
     val df = (1 to 500).map(i => (s"k${1000 - i}", i * 2)).toDF("k", "v")
     val fast = operators.Ids.denseIds(df, "k", 8)
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    spark.conf.set("spark.graft.ids.driver", "false")
-    val slow =
-      try operators.Ids.denseIds(df, "k", 8)
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-      finally spark.conf.unset("spark.graft.ids.driver")
+    val slow = operators.Ids.globalRankDist(df, col("k"), asc = true, col("k"), 8)
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(fast == slow)
     assert(fast.size == 500)
     // dense 1..N in key order
     assert(fast.map(_._3) == (1L to 500L).toSet)
+  }
+
+  test("denseIds past the small-batch gate == row_number oracle, payload intact") {
+    // SmallBatchKeys + 1 keys: the probe overflows the gate, so denseIds
+    // takes the distributed rank; the keys arrive scrambled
+    val n = operators.Ids.SmallBatchKeys + 1
+    val df = spark.range(0, n).select(
+      ((col("id") * 7919L) % n).as("k"), (col("id") % 13).as("v"))
+    val got = operators.Ids.denseIds(df, "k", 8)
+    val want = df.withColumn("gid",
+      row_number().over(org.apache.spark.sql.expressions.Window.orderBy("k"))
+        .cast("long"))
+    assert(got.columns.toSeq == Seq("k", "v", "gid"))
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
   }
 
   test("extendPaths small-batch driver path == distributed loop") {
@@ -67,9 +77,8 @@ class Round12Spec extends SparkSpec {
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2), r.getString(3)))
         .toMap
     val fast = asMap(Hierarchy.extendPaths(day1, batch, "id", "parent"))
-    val slow = withDistributedExtend {
-      asMap(Hierarchy.extendPaths(day1, batch, "id", "parent"))
-    }
+    val slow = asMap(
+      Hierarchy.extendPathsDistributed(day1, batchEdges(batch), "/", 30))
     assert(fast == slow)
     assert(fast(9000L) == (8000L, 1L, "8000/9000"))
     assert(fast(9001L) == (8000L, 2L, "8000/9000/9001"))

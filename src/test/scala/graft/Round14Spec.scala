@@ -13,12 +13,25 @@ class Round14Spec extends SparkSpec {
   import spark.implicits._
 
   test("denseIds gate probe prunes to the key column at the scan") {
-    // parquet-backed so pruning is observable at the source
-    val probe = Ids.probeKeys(
-      spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
-      "doc_id")
-    probe.collect()
-    val scan = probe.queryExecution.executedPlan.toString.linesIterator
+    // parquet-backed so pruning is observable at the source; the probe is
+    // globalRank's only collect, caught as it runs
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (funcName == "collect") plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Ids.denseIds(
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet"),
+        "doc_id")
+      org.apache.spark.GraftTestCoreBridge.drainListeners(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 1, s"expected one probe collect, saw ${plans.size}")
+    val scan = plans.peek().linesIterator
       .find(_.contains("ReadSchema")).getOrElse("")
     assert(scan.contains("doc_id") && !scan.contains("text")
         && !scan.contains("lang"),
@@ -34,12 +47,9 @@ class Round14Spec extends SparkSpec {
     val fast = Ids.denseIds(df, "k", 8)
       .select(col("k"), length(col("payload")).as("plen"), col("gid"))
       .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-    spark.conf.set("spark.graft.ids.driver", "false")
-    val slow =
-      try Ids.denseIds(df, "k", 8)
-        .select(col("k"), length(col("payload")).as("plen"), col("gid"))
-        .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
-      finally spark.conf.unset("spark.graft.ids.driver")
+    val slow = Ids.globalRankDist(df, col("k"), asc = true, col("k"), 8)
+      .select(col("k"), length(col("payload")).as("plen"), col("__rank"))
+      .collect().map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
     assert(fast == slow)
     assert(fast.size == 500 && fast.map(_._3) == (1L to 500L).toSet)
   }

@@ -381,11 +381,8 @@ class Round19Spec extends SparkSpec {
     for (asc <- Seq(true, false)) {
       val fast = operators.Ids.globalRank(df, col("v"), asc, col("uid"))
         .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
-      spark.conf.set("spark.graft.ids.driver", "false")
-      val slow =
-        try operators.Ids.globalRank(df, col("v"), asc, col("uid"))
-          .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
-        finally spark.conf.unset("spark.graft.ids.driver")
+      val slow = operators.Ids.globalRankDist(df, col("v"), asc, col("uid"))
+        .collect().map(r => (r.getLong(0), r.getString(2), r.getLong(3))).toSet
       assert(fast == slow, s"asc=$asc small path diverges from distributed")
       assert(fast.map(_._3) == (1L to 10L).toSet)
     }

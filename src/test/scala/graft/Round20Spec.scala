@@ -14,9 +14,8 @@ import graft.operators.Ids
   * writer frame's schema, both batch and `readStream` (the consumer the
   * fixtures exist for).
   *
-  * globalRank grows the denseIds verify hook on its small-path
-  * join-back and a caller-known-count probe skip (r19 advice items 1-2);
-  * both are pinned here.
+  * globalRank's small-path join-back honours the verify hook (r19
+  * advice item 1); both outcomes are pinned here.
   */
 class Round20Spec extends SparkSpec {
 
@@ -101,21 +100,6 @@ class Round20Spec extends SparkSpec {
         java.nio.file.Files.getLastModifiedTime(
           new java.io.File(dirA, n).toPath).toMillis)
     }
-  }
-
-  test("globalRank knownRows past the gate == the probed distributed path") {
-    val df = spark.range(0, 1000).toDF("uid")
-      .withColumn("v", pmod(col("uid") * 37, lit(11)).cast("double"))
-    val gated = Ids.globalRank(df, col("v"), asc = true, col("uid"))
-    // knownRows over the gate: must take the distributed path and agree
-    val dist = Ids.globalRank(df, col("v"), asc = true, col("uid"),
-      knownRows = Ids.SmallBatchKeys + 1)
-    assert(gated.exceptAll(dist).isEmpty && dist.exceptAll(gated).isEmpty,
-      "knownRows-forced distributed rank diverges from the gated path")
-    // knownRows at/under the gate keeps the small path (same results)
-    val small = Ids.globalRank(df, col("v"), asc = true, col("uid"),
-      knownRows = 1000L)
-    assert(small.exceptAll(gated).isEmpty && gated.exceptAll(small).isEmpty)
   }
 
   test("globalRank verify hook fails loudly on a non-unique composite") {

@@ -214,12 +214,24 @@ class Round8Spec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val viaUf = Components.minLabelAdaptive(edges, "a", "b", nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaLoopForced = Components.minLabelAdaptive(edges, "a", "b", nodes,
-          "id", broadcastMaxEdges = 0L) // force the distributed path
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(viaUf == viaLoop, s"seed=$seed adaptive != loop")
-      assert(viaLoopForced == viaLoop, s"seed=$seed forced-loop != loop")
     }
+    // past the bound: SmallBatchKeys + 1 edges forming 4-node chains
+    // 4i+1 - 4i - 4i+3 - 4i+2 (ids out of chain order), every component
+    // labelled by its minimum 4i
+    val chains = (operators.Ids.SmallBatchKeys + 1) / 3
+    val big = spark.range(0, chains).select(
+      explode(array(
+        struct((col("id") * 4 + 1).as("a"), (col("id") * 4).as("b")),
+        struct((col("id") * 4).as("a"), (col("id") * 4 + 3).as("b")),
+        struct((col("id") * 4 + 3).as("a"), (col("id") * 4 + 2).as("b")))).as("e"))
+      .select("e.a", "e.b")
+    assert(big.count() == operators.Ids.SmallBatchKeys + 1)
+    val bigNodes = spark.range(0, chains * 4).toDF("id")
+    val wrong = Components.minLabelAdaptive(big, "a", "b", bigNodes, "id")
+      .filter(col("comp") =!= col("id") - pmod(col("id"), lit(4L)))
+      .count()
+    assert(wrong == 0, s"$wrong nodes past the bound carry a wrong label")
   }
 
   test("hierarchy rootAndDepth: 1000-deep chain and a branched forest, exact depths") {

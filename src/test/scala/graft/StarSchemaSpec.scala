@@ -177,15 +177,16 @@ class StarSchemaSpec extends SparkSpec {
       ("", "Ábaco"), ("Zeta", "ação"), (null, null)).toDF("a", "b")
     def rowsOf(d: org.apache.spark.sql.DataFrame) =
       d.select("sk", "a", "b").as[(Long, String, String)].collect().sortBy(_._1).toSeq
-    val local = rowsOf(Dims.distinctDim(df, "sk", Seq("a", "b")))
-    spark.conf.set("spark.graft.ids.driver", "false")
-    val dist =
-      try rowsOf(Dims.distinctDim(df, "sk", Seq("a", "b")))
-      finally spark.conf.unset("spark.graft.ids.driver")
-    val want = rowsOf(df.distinct()
+    def oracle(d: org.apache.spark.sql.DataFrame) = rowsOf(d.distinct()
       .withColumn("sk", row_number().over(Window.orderBy($"a", $"b")).cast("long")))
-    assert(local == want)
-    assert(dist == want)
+    assert(rowsOf(Dims.distinctDim(df, "sk", Seq("a", "b"))) == oracle(df))
+    // the same keys plus SmallBatchKeys distinct fillers: past the gate,
+    // so the SKs come from the distributed struct rank
+    val big = df.unionByName(spark.range(0, graft.operators.Ids.SmallBatchKeys)
+      .select(format_string("k%06d", $"id").as("a"), lit("Ábaco").as("b")))
+    val dist = rowsOf(Dims.distinctDim(big, "sk", Seq("a", "b")))
+    assert(dist.length == graft.operators.Ids.SmallBatchKeys + 8)
+    assert(dist == oracle(big))
   }
 
   test("no dim of a built star is backed by an RDD") {

@@ -12,10 +12,20 @@ import pandas as pd
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
+# DuckDB's defaults (80% of the host's RAM, one thread per core) let the
+# self-join oracles (e2_kcore, e3_knn_graph_incr*) run out of memory on a
+# shared host. A fixed memory cap, fewer threads (each holds its own
+# buffers) and an explicit spill directory make them spill to disk instead.
+DUCKDB_CONFIG = {
+    "memory_limit": "6GB",
+    "threads": 2,
+    "temp_directory": "/tmp/oracle_check_duckdb",
+}
+
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
-    con = duckdb.connect()
+    con = duckdb.connect(config=DUCKDB_CONFIG)
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
