@@ -1155,7 +1155,7 @@ object Queries {
         list_transform(string_split($x, ''), c -> cast(ascii(c) as bigint))),
         (a, b) -> (a * 31 + b) % $HashPrime)"""
     // shingle hash: polynomial fold of 3 consecutive token hashes, exactly
-    // mirroring Dedup.hashedShingles' foldLeft.
+    // mirroring the fold in graft.expressions.ShingleHashes.
     val shingleExpr = (0 until 3).foldLeft("cast(7 as bigint)")((acc, j) =>
       s"(($acc * 31 + th[i + $j]) % $HashPrime)")
     val sig = coeffs.map { case (a, b) =>
@@ -6641,14 +6641,11 @@ object Queries {
     * is this document — the ordered-ingest signal behind "skip documents
     * that add nothing new". One explode → one shingle-key aggregate →
     * one join back; the shingle hash is the same portable polynomial
-    * fold the MinHash path uses (staged token-hash projection, never an
-    * inlined lambda — the round-5 interpreted-HOF lesson).
+    * fold the MinHash path uses (Dedup.shingleHashes).
     */
   def e4_ngram_novelty(s: SparkSession, dir: String): DataFrame = {
-    val th = t(s, dir, "documents").select(col("doc_id"),
-      transform(Dedup.tokens(col("text")), tk => portableStringHash(tk)).as("th"))
-    val sh = th.select(col("doc_id"),
-      explode(Dedup.hashedShinglesFromHashes(col("th"), 3)).as("sh"))
+    val sh = t(s, dir, "documents").select(col("doc_id"),
+      explode(Dedup.shingleHashes(col("text"), 3)).as("sh"))
     val firstSeen = sh.groupBy("sh").agg(min(col("doc_id")).as("first_doc"))
     sh.join(firstSeen, "sh")
       .groupBy("doc_id")

@@ -90,14 +90,15 @@ object Components {
   }
 
   /** [[minLabel]] with an ADAPTIVE small-graph fast path — the
-    * components analogue of AQE's broadcast-join decision: measure the
-    * edge count first (the edge list is checkpointed either way, so the
-    * count is a scan, not a recompute); when it fits the bound, solve
-    * components with a driver-side union-find and broadcast the
-    * (edge-node → component) table back — replacing O(diameter) rounds
-    * of join+aggregate+checkpoint jobs with ONE bounded collect and one
-    * broadcast join. Past the bound it delegates to the distributed
-    * loop untouched.
+    * components analogue of AQE's broadcast-join decision: one bounded
+    * collect of at most bound + 1 edges decides the gate; when the edges
+    * fit the bound, solve components with a driver-side union-find over
+    * that collect and broadcast the (edge-node → component) table back —
+    * replacing O(diameter) rounds of join+aggregate+checkpoint jobs with
+    * ONE bounded collect and one broadcast join. Past the bound the edge
+    * list is cut and handed to the distributed loop untouched. `edges`
+    * is read twice past the bound, so it should be pinned (the MinHash
+    * pair sets are checkpointed).
     *
     * The collect is bounded by contract ([[Ids.SmallBatchKeys]] = 2¹⁷
     * edges ≈ a few MB — same order as Spark's own broadcast
@@ -110,14 +111,15 @@ object Components {
   def minLabelAdaptive(edges: DataFrame, srcCol: String, dstCol: String,
                        nodes: DataFrame, idCol: String)
       : DataFrame = graft.Blocks.scoped { ps =>
-    val e = ps.cut(edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst")))
-    val n = e.count()
-    if (n > Ids.SmallBatchKeys) {
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    val rows = e.limit(Ids.SmallBatchKeys.toInt + 1).collect()
+    if (rows.length > Ids.SmallBatchKeys) {
+      val pinned = ps.cut(e)
       // cast nodes to long too, so both paths emit the same schema
-      val out = minLabel(e, "src", "dst",
+      val out = minLabel(pinned, "src", "dst",
         nodes.select(col(idCol).cast("long").as(idCol)), idCol)
-      ps.free(e)
+      ps.free(pinned)
       out
     } else {
       // union-find with min-id roots: find(x) is the smallest id seen
@@ -131,13 +133,12 @@ object Components {
         while (parent.getOrElse(c, c) != c) { val nxt = parent(c); parent(c) = r; c = nxt }
         r
       }
-      e.collect().foreach { row =>
+      rows.foreach { row =>
         val (ra, rb) = (find(row.getLong(0)), find(row.getLong(1)))
         if (ra != rb) {
           if (ra < rb) parent(rb) = ra else parent(ra) = rb
         }
       }
-      ps.free(e)
       val session = nodes.sparkSession
       import session.implicits._
       // materialize keys BEFORE mapping: find() path-compresses (writes

@@ -10,9 +10,9 @@ import graft.functions._
   * E1/E2 — SURVEY.md §2.4). Exact dedup generalizes the reference's
   * first-wins distinct (`/root/reference/src/FullETLGenerator.java:80-122`)
   * to arbitrary key subsets; the near-dup family (MinHash+LSH, SimHash,
-  * n-gram Jaccard) is standard LLM-corpus machinery built entirely from
-  * Catalyst higher-order expressions — no UDFs, fully codegen'd and
-  * distributed.
+  * n-gram Jaccard) is standard LLM-corpus machinery built from Catalyst
+  * expressions — built-ins and the codegen'd kernels in
+  * graft.expressions, no UDFs — and fully distributed.
   *
   * Scale design: every variant reduces the pair space BEFORE any join —
   * exact dedup is one hash-shuffle on the key; MinHash compares only pairs
@@ -89,53 +89,34 @@ object Dedup {
   def minhashCoeffs(m: Int): Seq[(Long, Long)] =
     (0 until m).map(j => (2L * j + 3L, 104729L * (j + 1) % HashPrime))
 
-  /** Hashed k-shingles over an ALREADY-MATERIALIZED token-hash array
-    * column: each shingle hash is the polynomial fold of k consecutive
-    * token hashes (seed 7, base 31, mod p). Distinct, as a set.
-    *
-    * IMPORTANT: `th` must be a concrete column (own projection), not a
-    * `transform(...)` subexpression — Catalyst inlines subexpressions at
-    * every use site, and this lambda references `th` 3+ times per shingle,
-    * which would re-run the whole per-token fold O(k·shingles) times per
-    * row (higher-order functions are interpreted, no subexpression
-    * elimination). Measured 2x-10x slowdowns from that inlining.
+  /** The distinct hashed k-shingles of `text`'s whitespace tokens, in
+    * first-occurrence order: each shingle hash is the polynomial fold
+    * (seed 7, base 31, mod p) of k consecutive portable token hashes.
+    * Fewer than k tokens give `[]`, null text gives null. One codegen'd
+    * per-row pass (graft.expressions.ShingleHashes).
     */
-  def hashedShinglesFromHashes(th: Column, k: Int): Column =
-    when(size(th) >= k,
-      array_distinct(transform(
-        sequence(lit(0), size(th) - lit(k)),
-        i => (0 until k).foldLeft(lit(7L): Column)((acc, j) =>
-          pmod(acc * lit(31L) + element_at(th, i + lit(j + 1)), lit(HashPrime))))))
-      .otherwise(array().cast("array<bigint>"))
-
-  /** Convenience single-expression form (tests / small data): tokenize,
-    * hash, shingle in one column. Prefer the two-projection form in
-    * operators (see hashedShinglesFromHashes).
-    */
-  def hashedShingles(toks: Column, k: Int): Column =
-    hashedShinglesFromHashes(transform(toks, t => portableStringHash(t)), k)
+  def shingleHashes(text: Column, k: Int): Column =
+    graft.expressions.ShingleHashes(text, k)
 
   /** E2 — MinHash + LSH banding: docs sharing any band bucket become
     * candidate pairs; candidates are then verified with EXACT Jaccard over
     * the distinct hashed-shingle sets. `bands*rowsPerBand` hashes total.
     *
-    * Execution design (the codegen-friendly formulation):
-    *   1. shingle sets per doc (one narrow pass, higher-order exprs);
-    *   2. EXPLODE shingles to rows and take the m affine minima as plain
-    *      `min()` hash aggregates — whole-stage codegen'd, map-side
-    *      partial (each doc's shingles are colocated, so the shuffle
-    *      carries ~1 row per doc). Keeping this in array lambdas instead
-    *      runs interpreted and measured ~100x slower;
+    * Execution design:
+    *   1. shingle sets per doc: one narrow codegen'd pass
+    *      ([[shingleHashes]]);
+    *   2. the m affine minima per doc, a second per-row kernel over the
+    *      shingle array in the same stage (graft.expressions
+    *      .MinHashSignature) — no explode, no aggregate, no shuffle;
     *   3. band hashes as plain column expressions, `posexplode` to one
     *      row per (doc, band);
     *   4. self-join on (band, bandHash) -> DISTINCT candidate pairs -> join
     *      the (small) pair set back to the persisted shingle sets for
     *      exact Jaccard.
     *
-    * Scale: no O(n^2) anywhere — the only wide ops are the per-doc
-    * aggregation and the band-bucket join (AQE splits skewed buckets).
-    * At petabyte scale persist the shingle sets to a staging table
-    * instead of memory.
+    * Scale: no O(n^2) anywhere — the only wide op before the verify is
+    * the band-bucket join (AQE splits skewed buckets). At petabyte scale
+    * persist the shingle sets to a staging table instead of memory.
     */
   def minhashLsh(docs: DataFrame, idCol: String, textCol: String,
                  k: Int = 3, bands: Int = 4, rowsPerBand: Int = 4,
@@ -193,7 +174,7 @@ object Dedup {
     * (id, sh, sig) frame from [[minhashAtRest]], persisted next to the
     * corpus. History's band hashes are re-derived from the STORED
     * signature (a width-m narrow projection — no tokenize, no shingle,
-    * no explode-aggregate over history text) and the exact-Jaccard
+    * no signature pass over history text) and the exact-Jaccard
     * verify reads the STORED shingle-hash arrays. Per-ingest heavy
     * lifting is O(batch); the only O(history) work is scanning the
     * at-rest columns, which is the floor for any cross-corpus join.
@@ -213,7 +194,7 @@ object Dedup {
     val (baseN, bandedN) =
       portableBands(incoming, idCol, textCol, k, bands, rowsPerBand)
     crossVerifiedPairs(baseN, bandedN, existingRest.select(col("id"), col("sh")),
-      bandRows(existingRest, bands, rowsPerBand, storedEntry), jaccardThreshold)
+      bandRows(existingRest, bands, rowsPerBand), jaccardThreshold)
   }
 
   /** Shared cross-corpus band-join + exact-Jaccard verify for the
@@ -252,8 +233,7 @@ object Dedup {
   def minhashAtRest(docs: DataFrame, idCol: String, textCol: String,
                     k: Int = 3, bands: Int = 4, rowsPerBand: Int = 4)
       : DataFrame =
-    cutOver(shingleSets(docs, idCol, textCol, k))(sh =>
-      signatures(sh, bands * rowsPerBand).join(sh, "id").select("id", "sh", "sig"))
+    signatures(shingleSets(docs, idCol, textCol, k), bands * rowsPerBand).cut
 
   /** Verify-mode coverage gate for the FromRest family
     * (`spark.graft.dedup.verify=true`, debug — the ids.verify
@@ -308,8 +288,8 @@ object Dedup {
     * of [[minhashIncrementalPairsFromRest]]: band hashes re-derive from
     * the STORED signature (a width-m narrow projection) and the
     * exact-Jaccard verify reads the STORED shingle-hash arrays, so the
-    * corpus text is never tokenized, shingled, or explode-aggregated
-    * again — the whole point of writing (sh, sig) once at accept time.
+    * corpus text is never tokenized, shingled, or signed again — the
+    * whole point of writing (sh, sig) once at accept time.
     * Identical pairs to [[minhashLsh]] over the same documents (same
     * coefficient family, same band fold, same verify — Round18Spec pins
     * both the equality and that no scan reads text).
@@ -332,8 +312,8 @@ object Dedup {
                                              jaccardThreshold: Double)
       : DataFrame =
     // no persist of the base: sh/sig are STORED columns (a parquet scan,
-    // not an interpreted hash chain), so re-reading them is the floor
-    selfVerifiedPairs(bandRows(rest, bands, rowsPerBand, storedEntry), rest,
+    // not a shingle pass), so re-reading them is the floor
+    selfVerifiedPairs(bandRows(rest, bands, rowsPerBand), rest,
       jaccardThreshold, "jaccard", jaccardOf)
 
   /** The portable MinHash SIGNATURES as a first-class frame: (id,
@@ -345,76 +325,41 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         k: Int = 3, m: Int = 16): DataFrame =
-    cutOver(shingleSets(docs, idCol, textCol, k))(signatures(_, m))
+    signatures(shingleSets(docs, idCol, textCol, k), m).select("id", "sig").cut
 
-  /** The (id, sh) shingle-set frame every MinHash path starts from:
-    * whitespace tokens -> portable token hashes -> distinct hashed
-    * k-shingles. Documents with fewer than k tokens drop out.
+  /** The (id, sh) shingle-set frame every MinHash path starts from
+    * ([[shingleHashes]] per document). Documents with fewer than k
+    * tokens drop out.
     *
     * The filter is on the RAW token count: an equivalent filter on
-    * size(sh) pushes down through the projections below and inlines the
-    * whole hash chain into the predicate, where the multi-reference
-    * token-hash array re-evaluates per element_at (measured 250x slower;
-    * PushDownPredicates has no expensive-expression guard). Each stage
-    * is its own projection so the next stage's multi-reference lambdas
-    * don't re-inline (and re-run) the previous one.
+    * size(sh) pushes down through the projection and evaluates the
+    * shingle kernel once in the predicate and again in the projection
+    * (PushDownPredicates has no expensive-expression guard).
     */
   private[graft] def shingleSets(docs: DataFrame, idCol: String,
                                  textCol: String, k: Int): DataFrame =
     docs
-      .select(col(idCol).as("id"), tokens(col(textCol)).as("tk"))
-      .filter(size(col("tk")) >= k)
-      .select(col("id"), transform(col("tk"), t => portableStringHash(t)).as("th"))
-      .select(col("id"), hashedShinglesFromHashes(col("th"), k).as("sh"))
+      .filter(size(tokens(col(textCol))) >= k)
+      .select(col(idCol).as("id"), shingleHashes(col(textCol), k).as("sh"))
 
-  /** `plan` over the shingle sets, materialized with Blocks.cut while
-    * they are persisted, then the shingle cache is released. Persisting
-    * keeps the interpreted hash and shingle chain out of the explode
-    * stage it would otherwise fuse into (measured 10x slower unpersisted:
-    * 6.6 s vs 0.6 s at sf0.1), and the pair and at-rest plans read the
-    * shingle sets more than once. The cut also cuts the lineage,
-    * so the released cache can never be recomputed into (round 1
-    * leaked this persist across a whole bench session: "Block rdd_*
-    * already exists"). The returned frame is checkpoint-backed: callers
-    * that fully consume it can release its blocks with graft.Blocks.free;
-    * harnesses sweep at query boundaries.
+  /** (id, sh, sig): the shingle sets with their m portable MinHash minima
+    * (graft.expressions.MinHashSignature over `sh`). `sh` is projected
+    * before `sig` reads it, so the shingle kernel runs once per row: a
+    * second reference keeps CollapseProject from inlining it.
     */
-  private def cutOver(sh: DataFrame)(plan: DataFrame => DataFrame): DataFrame = {
-    sh.persist()
-    val result = plan(sh).cut
-    sh.unpersist()
-    result
-  }
-
-  /** (id, s0 .. s{m-1}): the m portable MinHash minima per document,
-    * as codegen'd `min` hash aggregates over the exploded shingles
-    * (step 2 of [[minhashLsh]]).
-    */
-  private def minima(sh: DataFrame, m: Int): DataFrame = {
-    val aggs = minhashCoeffs(m).zipWithIndex.map { case ((a, b), j) =>
-      min(pmod(col("x") * lit(a) + lit(b), lit(HashPrime))).as(s"s$j")
-    }
-    sh.select(col("id"), explode(col("sh")).as("x"))
-      .groupBy("id").agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** (id, sig): the minima of [[minima]] as one array column. */
   private def signatures(sh: DataFrame, m: Int): DataFrame =
-    minima(sh, m).select(col("id"),
-      array((0 until m).map(j => col(s"s$j")): _*).as("sig"))
+    sh.select(col("id"), col("sh"),
+      graft.expressions.MinHashSignature(col("sh"), minhashCoeffs(m)).as("sig"))
 
-  /** Signature entry j of a stored (id, sh, sig) frame. */
-  private val storedEntry: Int => Column = j => element_at(col("sig"), j + 1)
-
-  /** (id, band, bandHash): one row per (doc, band); band b's hash is the
-    * polynomial fold (seed 7, base 31, mod p) of signature entries
-    * b*rowsPerBand .. (b+1)*rowsPerBand - 1, read with `entry`.
+  /** (id, band, bandHash) from an (id, sig) frame: one row per (doc,
+    * band); band b's hash is the polynomial fold (seed 7, base 31, mod p)
+    * of signature entries b*rowsPerBand .. (b+1)*rowsPerBand - 1.
     */
-  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int,
-                       entry: Int => Column): DataFrame = {
+  private def bandRows(sigs: DataFrame, bands: Int, rowsPerBand: Int): DataFrame = {
     def bandHash(b: Int): Column =
       (0 until rowsPerBand).foldLeft(lit(7L): Column)((acc, r) =>
-        pmod(acc * lit(31L) + entry(b * rowsPerBand + r), lit(HashPrime)))
+        pmod(acc * lit(31L) + element_at(col("sig"), b * rowsPerBand + r + 1),
+          lit(HashPrime)))
     sigs.select(col("id"), posexplode(array((0 until bands).map(bandHash): _*)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bandHash")
@@ -427,18 +372,26 @@ object Dedup {
                             k: Int, bands: Int, rowsPerBand: Int)
       : (DataFrame, DataFrame) = {
     val sh = shingleSets(docs, idCol, textCol, k)
-    (sh, bandRows(minima(sh, bands * rowsPerBand), bands, rowsPerBand, j => col(s"s$j")))
+    (sh, bandRows(signatures(sh, bands * rowsPerBand), bands, rowsPerBand))
   }
 
   /** Portable (oracle-reproducible) LSH self-pairs shared by the Jaccard
-    * and containment variants.
+    * and containment variants. The shingle sets are read three times
+    * (bands and both verify joins), so they are persisted while the pair
+    * set is cut, then released; the cut also truncates the lineage, so
+    * the released cache can never be recomputed into. The result is
+    * checkpoint-backed: callers that fully consume it can release its
+    * blocks with graft.Blocks.free; harnesses sweep at query boundaries.
     */
   private def portableLsh(docs: DataFrame, idCol: String, textCol: String,
                           k: Int, bands: Int, rowsPerBand: Int,
                           threshold: Double, measureName: String,
                           measure: (Column, Column) => Column): DataFrame = {
     val (sh, banded) = portableBands(docs, idCol, textCol, k, bands, rowsPerBand)
-    cutOver(sh)(selfVerifiedPairs(banded, _, threshold, measureName, measure))
+    sh.persist()
+    val result = selfVerifiedPairs(banded, sh, threshold, measureName, measure).cut
+    sh.unpersist()
+    result
   }
 
   /** Band-bucket self-join + exact verify: DISTINCT (id1 < id2)
@@ -483,8 +436,9 @@ object Dedup {
   def simhashText(text: Column, bits: Int = 24): Column =
     graft.expressions.SimHashText(text, bits)
 
-  /** SimHash over a materialized token-hash column — use this form in
-    * operators (see hashedShinglesFromHashes for why).
+  /** SimHash over a materialized token-hash column: `hashes` must be its
+    * own projection, since Catalyst inlines a projected expression at
+    * every use site of this `bits`-fold lambda.
     */
   def simhashFromHashes(hashes: Column, bits: Int = 24): Column =
     aggregate(
@@ -503,8 +457,7 @@ object Dedup {
     * doc crosses the shuffle), signature assembled from the `bits` sums.
     * Bit-identical to `simhashFromHashes` (same div/mod bit probe, so the
     * SQL oracle is unchanged) but avoids its bits×tokens INTERPRETED
-    * lambda steps per document — the same explode-to-aggregate treatment
-    * the MinHash path got (see minhashLsh step 2).
+    * lambda steps per document.
     *
     * Returns (id, blk, sig); `blockCols` (attributes of `docs`, e.g. a
     * language or source column) ride along into `blk` for callers that
@@ -603,7 +556,7 @@ object Dedup {
       .filter(col("hamming") <= maxHamming)
       .distinct()
     // materialize the (small) pair set, then release the signature cache
-    // (same persist/release discipline as cutOver)
+    // (same persist/release discipline as portableLsh)
     val result = verified.cut
     sigs.unpersist()
     result
@@ -872,10 +825,8 @@ object Dedup {
     */
   def crossSourceOverlap(docs: DataFrame, textCol: String,
                          sourceCol: String, k: Int = 3): DataFrame = {
-    val th = docs.select(col(sourceCol).as("source"),
-      transform(tokens(col(textCol)), t => portableStringHash(t)).as("th"))
-    val exploded = th.select(col("source"),
-      explode(hashedShinglesFromHashes(col("th"), k)).as("sh"))
+    val exploded = docs.select(col(sourceCol).as("source"),
+      explode(shingleHashes(col(textCol), k)).as("sh"))
     val bySh = exploded.groupBy("sh")
       .agg(sort_array(collect_set(col("source"))).as("ss"))
     val totals = bySh.select(explode(col("ss")).as("source"))

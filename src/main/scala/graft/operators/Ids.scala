@@ -101,7 +101,8 @@ object Ids {
     * Frames at or under [[SmallBatchKeys]] rows skip the distributed
     * machinery (r19 optimization; [[denseIds]] is this call with the key
     * as its own tie-break): a KEY-PRUNED limit-probe
-    * over `(primary, tieBreak)` decides the gate; on the small path the
+    * over `(primary, tieBreak)` — over the key alone when both are the
+    * same plain attribute — decides the gate; on the small path the
     * collected key pairs rank as a LOCAL relation with one bounded
     * single-partition window — Spark's own sort semantics over the same
     * (primary asc|desc, tieBreak asc) order, so ranks are bit-identical
@@ -128,13 +129,20 @@ object Ids {
     */
   def globalRank(df: DataFrame, primary: Column, asc: Boolean,
                  tieBreak: Column, buckets: Int = 0): DataFrame = {
-    val keyed = df.select(primary.as("__p"), tieBreak.as("__t"))
+    val primaryName = GraftSqlBridge.plainAttrName(primary)
+    val tieBreakName = GraftSqlBridge.plainAttrName(tieBreak)
+    // the same plain attribute on both sides (denseIds): probe, rank and
+    // join back on it once, so each key reaches the driver once
+    val keys =
+      if (primaryName.isDefined && primaryName == tieBreakName) Seq(primary -> "__p")
+      else Seq(primary -> "__p", tieBreak -> "__t")
+    val keyCols = keys.map { case (c, n) => c.as(n) }
+    val keyed = df.select(keyCols: _*)
     val probe = keyed.limit(SmallBatchKeys.toInt + 1).collect()
     if (probe.length <= SmallBatchKeys) {
       import scala.jdk.CollectionConverters._
-      val sOrd =
-        if (asc) Seq(col("__p").asc, col("__t").asc)
-        else Seq(col("__p").desc, col("__t").asc)
+      val sOrd = (if (asc) col("__p").asc else col("__p").desc) +:
+        keys.tail.map { case (_, n) => col(n).asc }
       val ranked = df.sparkSession
         .createDataFrame(probe.toSeq.asJava, keyed.schema)
         .withColumn("__rank",
@@ -142,17 +150,16 @@ object Ids {
       // plain-attribute shortcut: when df's columns are exactly the
       // probe's source attributes, rename the probe back — no join, no
       // second evaluation of df
-      (GraftSqlBridge.plainAttrName(primary),
-        GraftSqlBridge.plainAttrName(tieBreak)) match {
+      (primaryName, tieBreakName) match {
         case (Some(p), Some(tb)) if df.columns.toSet == Set(p, tb) =>
           ranked.select(df.columns.map(n =>
             (if (n == p) col("__p") else col("__t")).as(n))
             .toIndexedSeq :+ col("__rank"): _*)
         case _ =>
-          // null-safe on BOTH key columns: null is a legal key value on
+          // null-safe on every key column: null is a legal key value on
           // either side and must keep its row (plain `===` would drop it)
           val joined = df.join(broadcast(ranked),
-              primary <=> col("__p") && tieBreak <=> col("__t"))
+              keys.map { case (c, n) => c <=> col(n) }.reduce(_ && _))
             .select(df.columns.map(col).toIndexedSeq :+ col("__rank"): _*)
           // `spark.graft.ids.verify=true` (debug): a second evaluation
           // that yields keys the probe never ranked loses them to the
@@ -169,8 +176,7 @@ object Ids {
                 "is nondeterministic or (primary, tieBreak) is not unique " +
                 "(see the determinism precondition); pin the input with " +
                 "Blocks.cut or persist before calling")
-            val gotKeys = joined.select(primary.as("__p"), tieBreak.as("__t"))
-              .distinct().count()
+            val gotKeys = joined.select(keyCols: _*).distinct().count()
             require(gotKeys == probe.length,
               s"globalRank: join-back holds $gotKeys distinct keys but the " +
                 s"probe ranked ${probe.length} — the input produced a " +

@@ -205,10 +205,8 @@ object TextAnalysis {
       mBits, k)
 
   private def docGrams(df: DataFrame, idCol: String, textCol: String,
-                       n: Int): DataFrame = df
-    .select(col(idCol).as("id"),
-      transform(tokens(col(textCol)), t => portableStringHash(t)).as("__th"))
-    .select(col("id"), Dedup.hashedShinglesFromHashes(col("__th"), n).as("g"))
+                       n: Int): DataFrame =
+    df.select(col(idCol).as("id"), Dedup.shingleHashes(col(textCol), n).as("g"))
 
   /** The eval set's n-gram INDEX in its at-rest form: one column `x` of
     * distinct hashed token n-grams — the artifact a benchmark release
@@ -649,8 +647,9 @@ object TextAnalysis {
     *
     * The n-gram array is materialized in its own projection and consumed
     * by more than one (non-cheap) expression, which keeps CollapseProject
-    * from re-inlining the shingle lambda per consumer (see
-    * Dedup.hashedShinglesFromHashes for the measured trap).
+    * from re-inlining the shingle lambda per consumer: Catalyst inlines a
+    * projected expression at every use site, and higher-order functions
+    * get no subexpression elimination.
     */
   def repetition(df: DataFrame, idCol: String, textCol: String,
                  n: Int = 3): DataFrame =
@@ -714,8 +713,8 @@ object TextAnalysis {
     * The token array is STAGED in its own projection before the shingle
     * lambda: inlined, every interpreted `element_at(split(text), i)`
     * step re-splits the whole document — one full tokenization per
-    * bigram, measured 6× on the explode alone at sf0.1 (the
-    * CollapseProject trap Dedup.hashedShinglesFromHashes documents).
+    * bigram, measured 6× on the explode alone at sf0.1 (CollapseProject
+    * inlines a projected expression at every use site).
     */
   def bigramLogProb(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val ex = df.select(col(idCol).as("id"), tokens(col(textCol)).as("__tk"))

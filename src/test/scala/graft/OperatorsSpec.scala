@@ -88,7 +88,7 @@ class OperatorsSpec extends SparkSpec {
       bands = 8, rowsPerBand = 2, jaccardThreshold = 0.0)
       .select($"id1", $"id2").as[(Long, Long)].collect().toSet
     val sh = docs.select($"doc_id",
-      Dedup.hashedShingles(Dedup.tokens($"text"), 3).as("sh"))
+      Dedup.shingleHashes($"text", 3).as("sh"))
       .as[(Long, Seq[Long])].collect().toMap
     val brute = for {
       (i, si) <- sh.toSeq; (j, sj) <- sh.toSeq if i < j

@@ -16,10 +16,14 @@ class Round14Spec extends SparkSpec {
     // parquet-backed so pruning is observable at the source; the probe is
     // globalRank's only collect, caught as it runs
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val outputs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
-        if (funcName == "collect") plans.add(qe.executedPlan.toString)
+        if (funcName == "collect") {
+          plans.add(qe.executedPlan.toString)
+          outputs.add(qe.executedPlan.output.map(_.name))
+        }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
     }
@@ -36,6 +40,8 @@ class Round14Spec extends SparkSpec {
     assert(scan.contains("doc_id") && !scan.contains("text")
         && !scan.contains("lang"),
       s"probe must read only the key column: $scan")
+    // the key is its own tie-break, so it reaches the driver once
+    assert(outputs.peek() == Seq("__p"), s"probe collects ${outputs.peek()}")
   }
 
   test("denseIds wide-payload frame: local path == distributed, payload never collected") {

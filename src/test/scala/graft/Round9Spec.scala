@@ -77,8 +77,11 @@ class Round9Spec extends SparkSpec {
           terminatesInLocalScan(r.child)
         case _ => false
       }
-      val boundedProbe = childCols == Set("__p", "__t") &&
-        terminatesInLocalScan(w.child)
+      // the probe is (__p, __t), or __p alone when primary and
+      // tieBreak are the same plain attribute (denseIds)
+      val boundedProbe =
+        (childCols == Set("__p", "__t") || childCols == Set("__p")) &&
+          terminatesInLocalScan(w.child)
       assert((childCols.contains("__c") && childCols.contains("__b")) ||
           boundedProbe,
         s"$name: un-partitioned window over non-bucket-frame " +
