@@ -251,15 +251,11 @@ object Queries {
     * SQL over the same CSV bytes.
     */
   def star_etl_e2e(s: SparkSession, dir: String): DataFrame = {
-    // cacheSource=true: the source is read by the 3 distinct dims' bounded
-    // collects (in build), the first-wins dim, the calendar min/max and
-    // the fact — uncached, each re-reads and re-normalizes the CSV
-    // (measured 2x at sf0.1, round-3 verdict item 3). The result is
-    // materialized eagerly below so the cache can be released before
-    // returning.
+    // build caches the source, which its dim probe, the first-wins dim
+    // and the fact all read. The result is materialized eagerly below so
+    // the cache can be released before returning.
     val star = StarSchemaJob.build(
-      StarSchemaJob.readSource(s, graft.star.AneelFixture.ensure()),
-      cacheSource = true)
+      StarSchemaJob.readSource(s, graft.star.AneelFixture.ensure()))
     val out = star.fato
       .join(star.dimGeracao, Seq("ID_Geracao"))
       .join(star.dimStatus, Seq("ID_Status"))

@@ -29,7 +29,7 @@ object Ids {
     * 2^17 keys (or edges — a few MB, the order of Spark's own broadcast
     * threshold) the fixed per-job cost of the distributed machinery is
     * the whole latency, so the key set is collected once and solved on
-    * the driver. [[globalRank]], [[graft.star.Dims.distinctDim]],
+    * the driver. [[globalRank]], [[graft.star.Dims.probe]],
     * [[Hierarchy.extend]]/[[Hierarchy.extendPaths]],
     * [[Components.minLabelAdaptive]] and Similarity's bucket ranks gate
     * on it; past it each runs its distributed path.
@@ -124,8 +124,8 @@ object Ids {
     * cannot short-circuit, so a large-frame caller pays one full extra
     * pass just to learn it must take the distributed path. Callers in
     * `graft` that have already gated on frame size (Similarity's
-    * counted bucket ranks, [[graft.star.Dims.distinctDim]]'s ordered
-    * probe) enter [[globalRankDist]] directly and skip it.
+    * counted bucket ranks, [[graft.star.Dims.probe]]'s ordered
+    * collect) enter [[globalRankDist]] directly and skip it.
     */
   def globalRank(df: DataFrame, primary: Column, asc: Boolean,
                  tieBreak: Column, buckets: Int = 0): DataFrame = {
@@ -190,7 +190,7 @@ object Ids {
 
   /** The distributed rank machinery behind [[globalRank]] — callers that
     * have ALREADY gated on frame size (Similarity's counted bucket ranks,
-    * `Dims.distinctDim`'s ordered probe) enter here directly so the gate
+    * `Dims.probe`'s ordered collect) enter here directly so the gate
     * probe is not paid twice.
     */
   private[graft] def globalRankDist(df: DataFrame, primary: Column,

@@ -41,11 +41,7 @@ object AneelFixture {
     */
   val pathUtf8 = s"$dir/in_utf8.csv"
 
-  private val header =
-    "SigTipoGeracao;DscOrigemCombustivel;DscFonteCombustivel;DscFaseUsina;" +
-    "DscTipoOutorga;IdcGeracaoQualificada;SigUFPrincipal;DscMuninicpios;CodCEG;" +
-    "NomEmpreendimento;DscPropriRegimePariticipacao;DatEntradaOperacao;" +
-    "MdaPotenciaOutorgadaKw;MdaPotenciaFiscalizadaKw;MdaGarantiaFisicaKw"
+  private val header = StarSchemaJob.SourceColumns.mkString(";")
 
   private val rows = Seq(
     // dup dim keys; CodCEG repeated with DIFFERENT NomEmpreendimento

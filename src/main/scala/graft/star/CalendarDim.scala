@@ -49,9 +49,14 @@ object CalendarDim {
       quarterLabel(col("d")).as("Trimestre"))
   }
 
-  /** Convenience: calendar over a literal ISO date range. */
+  /** The calendar over the inclusive range [lo, hi] of ISO dates known on
+    * the driver (the star's, from [[Dims.probe]]): no job runs until the
+    * calendar itself is written. A null bound — a date column with no
+    * non-null value — gives an empty calendar.
+    */
   def overRange(spark: SparkSession, lo: String, hi: String): DataFrame =
-    build(spark.sql(s"SELECT DATE'$lo' AS lo, DATE'$hi' AS hi"))
+    build(spark.range(0, 1, 1, 1)
+      .select(lit(lo).cast("date").as("lo"), lit(hi).cast("date").as("hi")))
 
   /** Table-valued-function plan: `SELECT * FROM graft_calendar(lo, hi)`
     * in pure SQL — the reference's calendar generator exposed as a

@@ -21,4 +21,8 @@ object GraftSqlBridge {
         if ua.nameParts.length == 1 => Some(ua.nameParts.head)
     case _ => None
   }
+
+  /** Whether `t` compares strings by their bytes (UTF8_BINARY collation). */
+  def binaryEquality(t: org.apache.spark.sql.types.StringType): Boolean =
+    t.supportsBinaryEquality
 }

@@ -105,16 +105,6 @@ class MinHashKernelSpec extends SparkSpec {
   private def shMap(df: DataFrame): Map[Long, Seq[Long]] =
     df.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
 
-  private def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("shingle kernel == the HOF chain and the plain reference, order included, k = 1/2/3/5") {
     for (k <- Seq(1, 2, 3, 5)) {
       val df = frame(tricky)

@@ -199,14 +199,4 @@ class Round11Spec extends SparkSpec {
       assert(Queries.j_asof_tolerance(spark, dir).count() > 0)
     }
   }
-
-  private def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
-    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
 }

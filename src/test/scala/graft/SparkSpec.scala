@@ -22,4 +22,17 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
+
+  /** Runs `body` with the session confs `pairs` set, restoring the
+    * previous values (or unsetting) afterwards.
+    */
+  protected def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
+    val prev = pairs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    pairs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -8,7 +8,8 @@ import org.apache.spark.GraftTestCoreBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.star.{Dims, StarSchemaJob}
+import graft.expressions.FkProbe
+import graft.star.{AneelFixture, Dims, StarSchemaJob}
 
 /** End-to-end star-schema test on a synthesized ANEEL-shaped CSV fixture
   * (FIXTURES.md §A): exercises first-wins dedup, survivor determinism,
@@ -187,6 +188,155 @@ class StarSchemaSpec extends SparkSpec {
     val dist = rowsOf(Dims.distinctDim(big, "sk", Seq("a", "b")))
     assert(dist.length == graft.operators.Ids.SmallBatchKeys + 8)
     assert(dist == oracle(big))
+  }
+
+  test("probe: a dim its capped collect cut off is ranked, not numbered from the cut") {
+    // dims are collected in descending grouping-id order, here the big dim
+    // "a" first: its 2 * (SmallBatchKeys + 1) + 1 keys fill the cap, so
+    // the small dim "b" never reaches the driver
+    val n = 2 * (graft.operators.Ids.SmallBatchKeys + 1) + 1
+    val df = spark.range(n).select(format_string("a%07d", $"id").as("a"),
+      ($"id" % 5).cast("string").as("b"))
+    val (Seq(b, a), range) = Dims.probe(df, Seq("sb" -> Seq("b"), "sa" -> Seq("a")), None)
+    assert(range.isEmpty)
+    def oracle(c: String) = df.select(c).distinct()
+      .withColumn("sk", row_number().over(Window.orderBy(col(c))).cast("long"))
+    for ((got, sk, c) <- Seq((b, "sb", "b"), (a, "sa", "a"))) {
+      val want = oracle(c).select(col("sk").as(sk), col(c))
+      assert(got.count() == want.count(), c)
+      assert(got.select(sk, c).exceptAll(want).isEmpty, c)
+    }
+  }
+
+  /** Table -> bytes of its single part file, for each of the six tables
+    * `run` wrote under `out`.
+    */
+  private def tableBytes(out: String): Map[String, Array[Byte]] =
+    Seq("dim_geracao", "dim_status", "dim_localizacao", "dim_empreendimento",
+        "dim_tempo", "fato_geracao").map { t =>
+      val parts = Files.list(Paths.get(out, t)).iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toSeq
+      assert(parts.size == 1, s"$t holds ${parts.size} part- files")
+      t -> Files.readAllBytes(parts.head)
+    }.toMap
+
+  private def sha256(b: Array[Byte]): String =
+    java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+
+  test("run: the six files are byte-identical at shuffle partitions 1 and 7") {
+    // 600 rows over 150 CodCEGs, several names per code: enough keys that
+    // seven hash partitions do not come out in CodCEG order by chance
+    val in = Files.createTempDirectory("graft-aneel-order").resolve("in.csv")
+    val lines = (0 until 600).map { i =>
+      val r = rows(i % rows.size).split(";", -1)
+      r(8) = f"CEG${(i * 37) % 150}%04d"
+      r(9) = s"Usina ${(i * 13) % 7}"
+      r.mkString(";")
+    }
+    Files.write(in, (header +: lines).mkString("\n").getBytes(Charset.forName("ISO-8859-1")))
+    def runAt(partitions: Int): Map[String, Array[Byte]] = {
+      val out = Files.createTempDirectory(s"graft-star-p$partitions").toString
+      withSQLConf("spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> partitions.toString) {
+        StarSchemaJob.run(spark, in.toString, out)
+      }
+      tableBytes(out)
+    }
+    val (one, seven) = (runAt(1), runAt(7))
+    one.foreach { case (t, bytes) =>
+      assert(bytes.sameElements(seven(t)), s"$t differs between 1 and 7 shuffle partitions")
+    }
+  }
+
+  test("run on AneelFixture: sha256 of the six files == the checked-in digests") {
+    val out = Files.createTempDirectory("graft-star-digest").toString
+    StarSchemaJob.run(spark, AneelFixture.ensure(), out)
+    val want = scala.io.Source.fromResource("graft/star/aneel_fixture.sha256")
+      .getLines().filter(_.nonEmpty).map { l =>
+        val Array(digest, table) = l.split("\\s+")
+        table -> digest
+      }.toMap
+    assert(tableBytes(out).map { case (t, b) => t -> sha256(b) } == want)
+  }
+
+  test("build: a missing or renamed reference column fails naming it, before any job") {
+    val src = StarSchemaJob.readSource(spark, input.toString)
+    for ((broken, named) <- Seq(
+        src.drop("CodCEG") -> "CodCEG",
+        src.withColumnRenamed("DscMuninicpios", "DscMunicipios") -> "DscMuninicpios")) {
+      val (result, started, _) = underGroup("star-contract") { StarSchemaJob.build(broken) }
+      val e = intercept[IllegalArgumentException](result.toTry.get)
+      assert(e.getMessage.contains(s"no column $named"), e.getMessage)
+      assert(started.isEmpty, started)
+    }
+  }
+
+  test("run on AneelFixture: 11 jobs") {
+    // the header read, three for the dim probe (with AQE on: the source
+    // cache, the aggregate's shuffle, the ordered collect) and seven for
+    // the six sinks (the first-wins dim adds its shuffle). With a probe per
+    // dim, a calendar range job and a broadcast job per FK it was 19.
+    val out = Files.createTempDirectory("graft-star-jobs").toString
+    val in = AneelFixture.ensure()
+    val (result, started, _) = underGroup("star-jobs") {
+      StarSchemaJob.run(spark, in, out)
+    }
+    assert(result.isRight, result)
+    assert(started.size == 11, s"${started.size} jobs")
+  }
+
+  test("fact: no broadcast exchange and no join when every dim is under the gate") {
+    val built = StarSchemaJob.build(StarSchemaJob.readSource(spark, input.toString))
+    try {
+      built.fato.collect()
+      val plan = built.fato.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("Join"), plan)
+    } finally built.release()
+  }
+
+  test("a dim past the gate: the fact equals the broadcast-join result") {
+    // DscMuninicpios takes SmallBatchKeys + 1 distinct values, so
+    // dim_localizacao is ranked distributed and joined; the other two dims
+    // stay local and are probed in-task
+    val n = graft.operators.Ids.SmallBatchKeys + 1
+    val base = StarSchemaJob.readSource(spark, input.toString).cache()
+    val src = spark.range(n).crossJoin(base.limit(1))
+      .withColumn("DscMuninicpios", format_string("Cidade %06d", $"id"))
+      .withColumn("SigUFPrincipal", when($"id" % 3 === 0, lit(null)).otherwise(lit("MG")))
+      .withColumn("DscFaseUsina", when($"id" % 5 === 0, lit(null)).otherwise($"DscFaseUsina"))
+      .drop("id")
+      .unionByName(base)
+    val built = StarSchemaJob.build(src)
+    try {
+      assert(built.dimLocalizacao.count() == n + 3)
+      val norm = src.withColumn("IdcGeracaoQualificada",
+        graft.functions.naIfEmpty($"IdcGeracaoQualificada"))
+      def joined(d: org.apache.spark.sql.DataFrame, sk: String, keys: Seq[String]) =
+        (f: org.apache.spark.sql.DataFrame) => {
+          val b = d.select(col(sk).as(s"j_$sk") +: keys.map(k => col(k).as(s"j_$k")): _*)
+          f.join(broadcast(b), keys.map(k => f(k) <=> b(s"j_$k")).reduce(_ && _), "left")
+            .withColumn(sk, coalesce(col(s"j_$sk"), lit(-1L)))
+        }
+      val oracle = Seq(
+          joined(built.dimGeracao, "ID_Geracao",
+            Seq("SigTipoGeracao", "DscOrigemCombustivel", "DscFonteCombustivel")),
+          joined(built.dimStatus, "ID_Status",
+            Seq("DscFaseUsina", "DscTipoOutorga", "IdcGeracaoQualificada")),
+          joined(built.dimLocalizacao, "ID_Localizacao", Seq("SigUFPrincipal", "DscMuninicpios")))
+        .foldLeft(norm)((f, j) => j(f))
+        .select($"ID_Geracao", $"ID_Status", $"ID_Localizacao", $"CodCEG",
+          graft.functions.parseDateKey($"DatEntradaOperacao"))
+      val got = built.fato.select($"ID_Geracao", $"ID_Status", $"ID_Localizacao", $"CodCEG",
+        $"FK_DataOperacao")
+      assert(got.exceptAll(oracle).isEmpty && oracle.exceptAll(got).isEmpty)
+      assert(got.filter($"ID_Localizacao" === -1 || $"ID_Status" === -1).isEmpty)
+      val probes = got.queryExecution.optimizedPlan.collect { case p =>
+        p.expressions.flatMap(_.collect { case f: FkProbe => f }) }.flatten
+      assert(probes.size == 2, got.queryExecution.optimizedPlan)
+    } finally {
+      built.release()
+      base.unpersist()
+    }
   }
 
   test("no dim of a built star is backed by an RDD") {
