@@ -29,10 +29,7 @@ object Blocks {
     *     executor and their lineage is truncated: unrecoverable);
     *   - no checkpoint dir (local runs, tests, the bench harness) falls
     *     back to `localCheckpoint` — executor == driver, so reliability
-    *     adds nothing and the memory-block path is strictly faster;
-    *   - `spark.graft.checkpoint.local=true` forces the local path even
-    *     with a dir set (escape hatch for jobs whose dir serves other
-    *     streams).
+    *     adds nothing and the memory-block path is strictly faster.
     *
     * The reliable path persists the frame BEFORE checkpointing and
     * unpersists after: `RDD.checkpoint` writes its files in a separate
@@ -53,10 +50,7 @@ object Blocks {
     * restartable instead of recomputing from round 0.
     */
   def cut[T](ds: Dataset[T]): Dataset[T] = {
-    val sc = ds.sparkSession.sparkContext
-    val forceLocal = ds.sparkSession.conf
-      .getOption("spark.graft.checkpoint.local").contains("true")
-    if (!forceLocal && sc.getCheckpointDir.isDefined) {
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       ds.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try ds.checkpoint(eager = true)
       finally ds.unpersist(blocking = false)
@@ -87,10 +81,7 @@ object Blocks {
     */
   def cutCount[T](ds: Dataset[T], pred: org.apache.spark.sql.Column)
       : (Dataset[T], Long) = {
-    val sc = ds.sparkSession.sparkContext
-    val forceLocal = ds.sparkSession.conf
-      .getOption("spark.graft.checkpoint.local").contains("true")
-    if (!forceLocal && sc.getCheckpointDir.isDefined) {
+    if (ds.sparkSession.sparkContext.getCheckpointDir.isDefined) {
       val c = cut(ds)
       (c, c.filter(pred).count())
     } else {

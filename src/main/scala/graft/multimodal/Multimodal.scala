@@ -9,20 +9,22 @@ import graft.functions._
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * columns with typed metadata, processed per-partition in batches.
   *
-  * IMAGES decode for real: `imageDims`/`imageResizeBytes` use the JDK's
-  * own `javax.imageio` (PNG/JPEG/GIF/BMP — no external codec), reading
-  * header dimensions without touching the raster and re-encoding scaled
-  * rasters as PNG. Bytes no installed reader recognizes (including the
-  * synthetic test corpus' fake payloads) fall back to the clearly-marked
-  * STUB fingerprint, so pipelines stay deterministic on non-image data.
+  * IMAGES decode for real: `imageDims` uses the JDK's own
+  * `javax.imageio` (PNG/JPEG/GIF/BMP — no external codec), reading
+  * header dimensions without touching the raster. Bytes no installed
+  * reader recognizes (including the synthetic test corpus' fake
+  * payloads) fall back to the clearly-marked STUB fingerprint, so
+  * pipelines stay deterministic on non-image data.
   * AUDIO decodes for real too: `audioMeta`/`extractAudioMeta` use the
   * JDK's own `javax.sound.sampled` (WAV/AIFF/AU) for channels, sample
   * rate and header-derived duration, with the same stub fallback on
   * unrecognized bytes. VIDEO container metadata decodes for real as
   * well: `videoMeta`/`extractVideoMeta` walk the ISO BMFF (MP4/MOV) box
   * tree by hand — the container layout is public and needs no codec —
-  * for dimensions and duration; only frame DECODE stays stubbed
-  * (`frameStub`), since that genuinely needs a codec.
+  * for dimensions and duration, and `extractVideoSamples` slices each
+  * frame's bytes out of the container's sample table. Frames decode only
+  * where each sample is a complete still (motion-JPEG, Motion-PNG);
+  * inter-frame codecs are left out, since they genuinely need a codec.
   * Everything around them — schema, batch iteration, partitioning,
   * output shape — is the real distributed pipeline a codec plugs into:
   * swap the stub for a JNI/FFI call (or an Arrow batch handoff to a
@@ -516,27 +518,6 @@ object Multimodal {
     }
   }
 
-  /** REAL image resize (decode → raster scale → PNG re-encode), again
-    * pure JDK. None when the bytes aren't a decodable image.
-    */
-  def imageResizeBytes(payload: Array[Byte], w: Int, h: Int): Option[Array[Byte]] = {
-    if (payload == null || payload.isEmpty) return None
-    val img =
-      try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
-      catch { case _: Exception => null }
-    if (img == null) None
-    else {
-      val out = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = out.createGraphics()
-      try g.drawImage(img, 0, 0, w, h, null)
-      finally g.dispose()
-      val baos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(out, "png", baos)
-      Some(baos.toByteArray)
-    }
-  }
-
   /** Perceptual difference-hash (dHash) of an image payload — the image
     * analogue of SimHash over text: decode the raster (javax.imageio,
     * REAL for PNG/JPEG/GIF/BMP), average-pool integer luminance
@@ -771,8 +752,8 @@ object Multimodal {
   }
 
   /** Batch feature extraction: binary in, typed metadata out, one pass per
-    * partition — the distributed shape of a decode/resize/frame-sample
-    * stage. Input columns: media_id long, kind string, payload binary.
+    * partition — the distributed shape of a decode stage. Input
+    * columns: media_id long, kind string, payload binary.
     */
   def extractMetadata(media: DataFrame): DataFrame = {
     val enc = RowEncoder.encoderFor(metaSchema)
@@ -907,78 +888,6 @@ object Multimodal {
             }
         }
       }(enc)
-  }
-
-  val frameSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("frame_idx", IntegerType, nullable = false),
-    StructField("frame_ts_ms", LongType, nullable = false),
-    StructField("frame", BinaryType, nullable = false)))
-
-  /** STUB frame bytes: 16 deterministic bytes from the payload fold and
-    * the frame index — a real build replaces this with the codec's frame
-    * grab at `frame_ts_ms`; row shape and iteration stay identical.
-    */
-  def frameStub(payload: Array[Byte], idx: Int): Array[Byte] = {
-    val seed = payloadHash(payload) * 31 + idx
-    Array.tabulate(16)(j => ((seed >> ((j % 8) * 8)) & 0xff).toByte)
-  }
-
-  /** Frame sampling: one output row per `everyMs` of video duration — the
-    * UDTF-shaped stage of a video pipeline (rows OUT exceed rows IN).
-    * Runs as a per-partition flatMap: frames of one video are produced by
-    * one task, streamed, never buffered whole; non-video rows emit
-    * nothing. Duration comes from the (stubbed) decode, frame bytes from
-    * `frameStub` — swap both for a codec and the plan is unchanged.
-    */
-  def sampleFrames(media: DataFrame, everyMs: Long = 1000L): DataFrame = {
-    require(everyMs > 0)
-    val enc = RowEncoder.encoderFor(frameSchema)
-    media.select("media_id", "kind", "payload").mapPartitions { it =>
-      it.flatMap { r =>
-        val kind = if (r.isNullAt(1)) "" else r.getString(1)
-        if (kind != "video" || r.isNullAt(2)) Iterator.empty
-        else {
-          val payload = r.getAs[Array[Byte]](2)
-          // real container duration when the header parses; stub otherwise
-          val durMs = videoMeta(payload).map(_._3)
-            .getOrElse(decodeStub(kind, payload)._3)
-          val nFrames = (durMs / everyMs).toInt
-          (0 until nFrames).iterator.map { i =>
-            Row(r.getLong(0), i, i * everyMs, frameStub(payload, i))
-          }
-        }
-      }
-    }(enc)
-  }
-
-  /** Resize: image payloads are replaced by a `w*h`-byte deterministic
-    * stub (a real build decodes, scales, re-encodes); audio/video/other
-    * rows pass through untouched. Same schema in and out, so the stage
-    * composes anywhere in a media pipeline; payload bytes still never
-    * shuffle — the transform is per-partition.
-    */
-  def resizeImages(media: DataFrame, w: Int, h: Int): DataFrame = {
-    require(w > 0 && h > 0)
-    val schema = StructType(Seq(
-      StructField("media_id", LongType, nullable = false),
-      StructField("kind", StringType, nullable = true),
-      StructField("payload", BinaryType, nullable = true)))
-    val enc = RowEncoder.encoderFor(schema)
-    media.select("media_id", "kind", "payload").mapPartitions { it =>
-      it.map { r =>
-        val kind = if (r.isNullAt(1)) null else r.getString(1)
-        if (kind != "image" || r.isNullAt(2)) r
-        else imageResizeBytes(r.getAs[Array[Byte]](2), w, h) match {
-          case Some(png) => Row(r.getLong(0), kind, png) // real decode+scale
-          case None =>
-            val hash = payloadHash(r.getAs[Array[Byte]](2))
-            val out = Array.tabulate(w * h)(j =>
-              ((hash * 31 + j) % 251).toByte) // deterministic fake raster
-            Row(r.getLong(0), kind, out)
-        }
-      }
-    }(enc)
   }
 
   /** Expression-only twin of `extractMetadata` for ASCII payloads (byte ==

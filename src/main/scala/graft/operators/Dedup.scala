@@ -40,7 +40,7 @@ object Dedup {
     * and survivors are recovered by a semi-join on the narrow id.
     *
     * Scale: the wide columns cross the wire at most once (the semi-join);
-    * store the table bucketed by `idCol` (graft.sources.Bucketing) and
+    * store the table bucketed by `idCol` (Spark's `bucketBy`) and
     * they never move at all — the winner-id side alone shuffles to the
     * bucketing. `order` columns must be ascending; (order, id) defines
     * the survivor deterministically.
@@ -537,9 +537,9 @@ object Dedup {
     * ~4 s records; this tail 1.71 s / first-rep 3.9 s, and the 64-bit
     * scalable twin 2.66 → 1.96 s. Idle: 1.31 s.
     */
-  private def simhashPairsFromSigs(sigsUncached: DataFrame, bands: Int,
-                                   maxHamming: Int,
-                                   bandValue: Int => Column): DataFrame = {
+  private[graft] def simhashPairsFromSigs(sigsUncached: DataFrame, bands: Int,
+                                          maxHamming: Int,
+                                          bandValue: Int => Column): DataFrame = {
     val sigs = sigsUncached.persist()
     val banded = sigs.select(col("id"), col("blk"), col("sig"),
       posexplode(array((0 until bands).map(bandValue): _*)))
@@ -560,23 +560,6 @@ object Dedup {
     val result = verified.cut
     sigs.unpersist()
     result
-  }
-
-  /** Distinct (id1, id2) candidates sharing any (blk, band, bandValue)
-    * bucket. Exposed for the bucket-population test comparing band widths.
-    */
-  private[graft] def simhashCandidates(sigs: DataFrame, bands: Int,
-                                       bandValue: Int => Column): DataFrame = {
-    val banded = sigs.select(col("id"), col("blk"),
-      posexplode(array((0 until bands).map(bandValue): _*)))
-      .withColumnRenamed("pos", "band")
-      .withColumnRenamed("col", "bh")
-    banded.select(col("blk"), col("band"), col("bh"), col("id").as("id1"))
-      .join(banded.select(col("blk"), col("band"), col("bh"),
-        col("id").as("id2")), Seq("blk", "band", "bh"))
-      .filter(col("id1") < col("id2"))
-      .select("id1", "id2")
-      .distinct()
   }
 
   /** E2 — SimHash near-duplicate PAIRS: banded Hamming self-join over the

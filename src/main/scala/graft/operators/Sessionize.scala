@@ -101,8 +101,7 @@ object Sessionize {
     * strict ordering every batch event clears every closed end by MORE
     * than the gap, so closed rows provably cannot change.
     *
-    * The contract is GUARDED by default (`spark.graft.sessions.verify`,
-    * set "false" to opt out): two scalar aggregates — batch min ts vs
+    * The contract is GUARDED: two scalar aggregates — batch min ts vs
     * the snapshot's max OPEN end (== the snapshot's max event time: the
     * session holding the global max is always open) — turn a violating
     * ingest into a loud failure instead of silently mis-attached
@@ -114,33 +113,25 @@ object Sessionize {
   def sessionsFold(snapshot: DataFrame, batch: DataFrame, keyCol: String,
                    tsCol: String, idCol: String,
                    gapMinutes: Int): DataFrame = {
-    if (!snapshot.sparkSession.conf
-        .getOption("spark.graft.sessions.verify").contains("false")) {
-      // one batch pass yields BOTH the gate's min and the fold's
-      // openness horizon (max), so the default-on gate's net cost is
-      // the snapshot open-tail aggregate alone — the fold's plan paid
-      // the batch extrema scan anyway
-      val ext = batch.agg(unix_millis(min(col(tsCol))).as("__mn"),
-        unix_millis(max(col(tsCol))).as("__mx")).collect()(0)
-      require(!ext.isNullAt(0),
-        "sessionsFold: the batch is empty — the fold contract requires " +
-          "a non-empty batch (an empty ingest day folds to the snapshot " +
-          "unchanged; skip the fold instead)")
-      val smaxRow = snapshot.filter(col("open") === 1)
-        .agg(max(col("end_ms"))).collect()(0)
-      if (!smaxRow.isNullAt(0))
-        require(ext.getLong(0) > smaxRow.getLong(0),
-          s"sessionsFold: append-in-event-time contract violated — batch " +
-            s"min ts ${ext.getLong(0)} <= snapshot max event time " +
-            s"${smaxRow.getLong(0)}; route the batch through " +
-            "sessionsFoldLate (re-sessionizes only the violating keys) " +
-            "or set spark.graft.sessions.verify=false if the ordering " +
-            "is externally guaranteed")
-      sessionsFoldImpl(snapshot, batch, keyCol, tsCol, idCol, gapMinutes,
-        batch.sparkSession.range(1).select(lit(ext.getLong(1)).as("__mx")))
-    } else
-      sessionsFoldImpl(snapshot, batch, keyCol, tsCol, idCol, gapMinutes,
-        batch.agg(unix_millis(max(col(tsCol))).as("__mx")))
+    // one batch pass yields BOTH the gate's min and the fold's openness
+    // horizon (max), so the gate's net cost is the snapshot open-tail
+    // aggregate alone — the fold's plan paid the batch extrema scan anyway
+    val ext = batch.agg(unix_millis(min(col(tsCol))).as("__mn"),
+      unix_millis(max(col(tsCol))).as("__mx")).collect()(0)
+    require(!ext.isNullAt(0),
+      "sessionsFold: the batch is empty — the fold contract requires " +
+        "a non-empty batch (an empty ingest day folds to the snapshot " +
+        "unchanged; skip the fold instead)")
+    val smaxRow = snapshot.filter(col("open") === 1)
+      .agg(max(col("end_ms"))).collect()(0)
+    if (!smaxRow.isNullAt(0))
+      require(ext.getLong(0) > smaxRow.getLong(0),
+        s"sessionsFold: append-in-event-time contract violated — batch " +
+          s"min ts ${ext.getLong(0)} <= snapshot max event time " +
+          s"${smaxRow.getLong(0)}; route the batch through " +
+          "sessionsFoldLate (re-sessionizes only the violating keys)")
+    sessionsFoldImpl(snapshot, batch, keyCol, tsCol, idCol, gapMinutes,
+      batch.sparkSession.range(1).select(lit(ext.getLong(1)).as("__mx")))
   }
 
   /** [[sessionsFold]] body with the openness horizon supplied — the

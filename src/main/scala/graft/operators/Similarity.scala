@@ -439,114 +439,6 @@ object Similarity {
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
-  /** E3 — product-quantization ANN with asymmetric distance computation
-    * (ADC), the memory-bound scale path: each corpus vector is encoded
-    * once as `m` small codes (the code of its best codeword per
-    * subspace), and search never touches the raw vectors again — a
-    * query precomputes one `m × ksub` distance table and scores every
-    * candidate with `m` array lookups. With ksub codewords the index is
-    * m·log2(ksub) bits per vector (vs 64 floats = 2048 bits here), which
-    * is what makes exhaustive scan of a 100 TB corpus feasible: the
-    * compressed codes fit in memory three orders of magnitude below the
-    * raw embeddings.
-    *
-    * `codebook` is a designated (id, vec) frame (collected once — K
-    * vectors, the PQ contract; train with [[trainCentroids]] at scale);
-    * codes are POSITIONS in the id-sorted codebook. Distances are
-    * squared L2 per subspace via the three-dot identity
-    * |a−b|² = a·a − 2·a·b + b·b (each dot the native codegen'd
-    * [[dot]], so both encode and table build stay in whole-stage
-    * codegen), rounded to `roundTo` so argmin ties and ADC sums are
-    * engine-reproducible; per-subspace table entries sum as exact
-    * decimals. Ranking: (adc asc, cand_id asc).
-    *
-    * Scale design: encode is ONE narrow projection over the corpus (at
-    * 100 TB: write the code columns next to the data — that IS the
-    * index); the query side (id + m distance tables) is broadcast; the
-    * scan is a cross join against m ints per row, no corpus shuffle, no
-    * vector ever crossing the wire. The encode MUST be materialized
-    * before the search join (round-6 finding, plan-pinned): whole-stage
-    * codegen defers stream-side variable evaluation into the broadcast
-    * join's inner loop, so an unbarriered encode re-evaluates the whole
-    * m×ksub argmin tree once per (query, candidate) PAIR — measured
-    * 100 µs/pair where the honest per-corpus-row cost is ~µs. (The
-    * round-5 note here blamed driver-side optimization; stage metrics
-    * disproved that.)
-    */
-  /** Train a PQ codebook: INDEPENDENT k-means per subspace (the PQ
-    * contract — each subspace quantizes its own marginal distribution,
-    * which is what lets m·log2(ksub) bits approximate the full vector),
-    * stored as `ksub` full-dim rows whose i-th slice is subspace i's
-    * j-th centroid — exactly the layout [[pqTopK]] slices back apart.
-    * Deterministic like [[trainCentroids]]: hash-picked sample, smallest-
-    * hash seeds, fixed Lloyd iterations, rounded-distance argmin with
-    * position tie-breaks, no RNG. Plain (un-normalized) k-means on
-    * squared L2 — PQ quantizes distances, not directions.
-    *
-    * Scale: the sample persists across the loop; each (subspace,
-    * iteration) is one narrow argmin projection + one (cell, pos) mean
-    * aggregate returning ≤ ksub×sub rows — driver data stays bounded by
-    * the codebook size (which IS the index). m×iters passes over the
-    * sample; empty cells keep their previous codeword.
-    */
-  def trainPqCodebook(corpus: DataFrame, m: Int, ksub: Int, iters: Int = 5,
-                      samplePct: Int = 50, roundTo: Int = 6): DataFrame = {
-    require(m > 0 && ksub > 0 && iters > 0)
-    val spark = corpus.sparkSession
-    val sample = corpus
-      .filter(TextAnalysis.sampleByHash(col("id").cast("string"), samplePct))
-      .select(col("id"), col("vec"))
-      .persist()
-    val seeds = sample
-      .orderBy(xxhash64(col("id").cast("string")), col("id"))
-      .limit(ksub)
-      .collect()
-      .map(_.getSeq[Float](1).toArray)
-    require(seeds.length == ksub,
-      s"sample yielded ${seeds.length} < ksub=$ksub seeds — raise samplePct")
-    val dim = seeds.head.length
-    require(dim % m == 0, s"vector dim $dim not divisible by m=$m subspaces")
-    val sub = dim / m
-    // cb(i)(j) = subspace i's j-th codeword (sub floats)
-    var cb: Array[Array[Array[Float]]] = (0 until m).toArray.map(i =>
-      seeds.map(_.slice(i * sub, i * sub + sub)))
-    def l2(sv: Column, w: Array[Float]): Column = {
-      val wl = typedlit(w)
-      round(dot(sv, sv) - lit(2.0) * dot(sv, wl) + dot(wl, wl), roundTo)
-    }
-    for (_ <- 1 to iters) {
-      cb = (0 until m).toArray.map { i =>
-        val sv = slice(col("vec"), i * sub + 1, sub)
-        val cell = array_min(array(cb(i).zipWithIndex.map { case (w, j) =>
-          struct(l2(sv, w).as("d"), lit(j).as("j"))
-        }: _*)).getField("j")
-        val means = sample
-          .select(cell.as("cell"), posexplode(sv))
-          .groupBy("cell", "pos")
-          .agg(avg(col("col").cast("double")).as("mu"))
-          .collect()
-          .groupBy(_.getInt(0))
-          .map { case (c, rows) =>
-            c -> rows.sortBy(_.getInt(1)).map(_.getDouble(2).toFloat)
-          }
-        cb(i).zipWithIndex.map { case (prev, j) => means.getOrElse(j, prev) }
-      }
-    }
-    sample.unpersist()
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      (0 until ksub).map { j =>
-        org.apache.spark.sql.Row(j.toLong,
-          (0 until m).flatMap(i => cb(i)(j)).toSeq)
-      }.asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("vec",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.FloatType)))))
-  }
-
   /** Shared PQ staging: subvector slices + their self-dots in their own
     * projection so each is computed ONCE per row, not once per codeword
     * (ksub× fewer dots; Catalyst won't collapse multi-referenced
@@ -646,16 +538,41 @@ object Similarity {
         negate(col("sim")).as("adc"))
   }
 
-  /** One-shot encode + search. The encode is MATERIALIZED (Blocks.cutLazy)
-    * before the search join on purpose: whole-stage codegen defers
-    * stream-side variable evaluation into the broadcast join's inner
-    * loop, so without the barrier the entire m×ksub argmin tree
-    * re-evaluates once per (query, candidate) PAIR instead of once per
-    * corpus row — measured 100 µs/pair (1.6 s of the 2.2 s round-5
-    * bench entry) on a projection whose honest cost is ~20 ns/row.
-    * Materializing is also the true production shape: the codes are the
-    * index; `pqEncode` + write-at-rest + `pqTopKFromCodes` is the real
-    * deployment, and this composition exists for one-shot/test use.
+  /** E3 — product-quantization ANN with asymmetric distance computation
+    * (ADC), the memory-bound scale path: each corpus vector is encoded
+    * once as `m` small codes (the code of its best codeword per
+    * subspace), and search never touches the raw vectors again — a
+    * query precomputes one `m × ksub` distance table and scores every
+    * candidate with `m` array lookups. With ksub codewords the index is
+    * m·log2(ksub) bits per vector (vs 64 floats = 2048 bits here), which
+    * is what makes exhaustive scan of a 100 TB corpus feasible: the
+    * compressed codes fit in memory three orders of magnitude below the
+    * raw embeddings.
+    *
+    * `codebook` is a designated (id, vec) frame (collected once — K
+    * vectors, the PQ contract; train with [[trainCentroids]] at scale);
+    * codes are POSITIONS in the id-sorted codebook. Distances are
+    * squared L2 per subspace via the three-dot identity
+    * |a−b|² = a·a − 2·a·b + b·b (each dot the native codegen'd
+    * [[dot]], so both encode and table build stay in whole-stage
+    * codegen), rounded to `roundTo` so argmin ties and ADC sums are
+    * engine-reproducible; per-subspace table entries sum as exact
+    * decimals. Ranking: (adc asc, cand_id asc).
+    *
+    * Scale design: encode is ONE narrow projection over the corpus (at
+    * 100 TB: write the code columns next to the data — that IS the
+    * index); the query side (id + m distance tables) is broadcast; the
+    * scan is a cross join against m ints per row, no corpus shuffle, no
+    * vector ever crossing the wire. The encode is MATERIALIZED
+    * (Blocks.cutLazy) before the search join on purpose (round-6
+    * finding, plan-pinned): whole-stage codegen defers stream-side
+    * variable evaluation into the broadcast join's inner loop, so an
+    * unbarriered encode re-evaluates the whole m×ksub argmin tree once
+    * per (query, candidate) PAIR — measured 100 µs/pair where the honest
+    * per-corpus-row cost is ~µs. Materializing is also the true
+    * production shape: the codes are the index; `pqEncode` +
+    * write-at-rest + `pqTopKFromCodes` is the real deployment, and this
+    * composition exists for one-shot use.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
              k: Int, m: Int = 4, roundTo: Int = 6): DataFrame = {
@@ -859,7 +776,7 @@ object Similarity {
     * join co-partitioned — one shuffle each, candidates bounded to
     * N²/2^bits per bucket, ranking via the BoundedTopK aggregate (O(k)
     * state, map-side partial). Store the corpus bucketed by `bucket`
-    * (graft.sources.Bucketing) and neither side moves at all.
+    * (Spark's `bucketBy`) and neither side moves at all.
     * Vectors alone in their bucket yield no row (no candidates).
     */
   def knnJoin(corpus: DataFrame, k: Int, bits: Int = 8,

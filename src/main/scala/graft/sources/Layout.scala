@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
-/** File-layout maintenance for 100 TB tables: compaction (the
-  * small-files problem) and interleaved-key clustering (multi-column
-  * data skipping). Complements Bucketing (join co-location) and
-  * Partitioning (directory pruning).
+/** Directory swap for outputs that replace a whole table: write the new
+  * version beside the old one, then [[swapInto]] puts it in place with
+  * two renames, and [[recoverSwap]] rolls back a swap a crash
+  * interrupted. `StreamingOps` publishes its snapshots through them.
+  * Bucketed joins and partition pruning need no wrapper: Spark's own
+  * `bucketBy` and `partitionBy` writers do that.
   */
 object Layout {
 
@@ -38,76 +39,5 @@ object Layout {
     val dstP = new org.apache.hadoop.fs.Path(dst)
     val oldP = new org.apache.hadoop.fs.Path(dst.stripSuffix("/") + ".old")
     if (!fs.exists(dstP) && fs.exists(oldP)) fs.rename(oldP, dstP)
-  }
-
-  /** Compact a parquet directory to ~`targetFiles` files. Streaming
-    * ingestion and fine-grained partitioning both shred tables into
-    * thousands of KB-sized files; every later scan then pays one task +
-    * one footer read per file. Periodic compaction rewrites the data at
-    * the scan-efficient granularity (cluster practice: 128-512 MB per
-    * file; here the caller picks the count).
-    *
-    * `repartitionByRange` on `sortCols` (falls back to a round-robin
-    * `repartition` when no sort key is given) so compaction also
-    * CLUSTERS: each output file covers a narrow key range, giving
-    * min/max-stat skipping on the sort key for free.
-    */
-  def compact(spark: SparkSession, path: String, targetFiles: Int,
-              sortCols: Seq[String] = Nil): Unit = {
-    recoverSwap(spark, path)
-    val df = spark.read.parquet(path)
-    val out =
-      if (sortCols.nonEmpty)
-        df.repartitionByRange(targetFiles, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      else df.repartition(targetFiles)
-    // rewrite via a temp dir: the source directory is the input of the
-    // running job, so an in-place overwrite would delete what it reads
-    val tmp = path.stripSuffix("/") + ".compact-tmp"
-    out.write.mode("overwrite").parquet(tmp)
-    swapInto(spark, tmp, path)
-  }
-
-  /** Bit-interleaved (Z-order / Morton) key over two non-negative int
-    * columns, as a pure Column expression: bit i of each input lands at
-    * bit 2i / 2i+1 of the output. Sorting by this key clusters rows that
-    * are close in BOTH dimensions, so per-file min/max stats prune scans
-    * filtered on EITHER column — a lexicographic sort only skips on its
-    * leading column.
-    */
-  def mortonKey(a: Column, b: Column, bits: Int = 16): Column =
-    (0 until bits).foldLeft(lit(0L)) { (acc, i) =>
-      acc
-        .bitwiseOR(shiftleft(shiftright(a.cast("long"), i).bitwiseAND(lit(1L)), 2 * i))
-        .bitwiseOR(shiftleft(shiftright(b.cast("long"), i).bitwiseAND(lit(1L)), 2 * i + 1))
-    }
-
-  /** Rewrite `df` clustered by the interleaved order of (colA, colB)
-    * into `numFiles` range-partitioned files. Inputs are min/max-scaled
-    * to `bits` bits first (one tiny global aggregate, broadcast back —
-    * NO global window/rank, so the encoding is fully distributed); for
-    * heavily skewed dimensions substitute approx-quantile boundaries for
-    * the linear scale — the interleave and write path are unchanged.
-    */
-  def writeZOrdered(df: DataFrame, path: String, colA: String, colB: String,
-                    numFiles: Int, bits: Int = 16): Unit = {
-    val scale = (1L << bits) - 1
-    val stats = df.agg(
-      min(col(colA)).cast("double").as("__amin"),
-      max(col(colA)).cast("double").as("__amax"),
-      min(col(colB)).cast("double").as("__bmin"),
-      max(col(colB)).cast("double").as("__bmax"))
-    def enc(c: Column, lo: Column, hi: Column): Column =
-      least(lit(scale), floor(
-        (c.cast("double") - lo) / greatest(hi - lo, lit(1e-12)) * (scale + 1))
-        .cast("long"))
-    df.crossJoin(broadcast(stats))
-      .withColumn("__z", mortonKey(
-        enc(col(colA), col("__amin"), col("__amax")),
-        enc(col(colB), col("__bmin"), col("__bmax")), bits))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__amin", "__amax", "__bmin", "__bmax", "__z")
-      .write.mode("overwrite").parquet(path)
   }
 }

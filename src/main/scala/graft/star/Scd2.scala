@@ -71,8 +71,7 @@ object Scd2 {
     * would interleave with that instant's DROPPED same-ts events under
     * the tie-break, which the replay cannot reproduce.
     *
-    * The contract is GUARDED by default (`spark.graft.scd2.verify`,
-    * set "false" to opt out) with the strongest check the stored
+    * The contract is GUARDED with the strongest check the stored
     * dimension can express: each affected key's min change ts must
     * exceed its max RETAINED (regime-start) ts — churned-keys-sized
     * work, off the replay slice the fold already reads. The residual
@@ -92,22 +91,17 @@ object Scd2 {
     val untouched = prior.join(affected, nk, "left_anti")
     val replayEvents = prior.join(affected, nk, "left_semi")
       .select(changes.columns.map(col).toSeq: _*)
-    if (!prior.sparkSession.conf
-        .getOption("spark.graft.scd2.verify").contains("false")) {
-      val bad = changes.groupBy(nk.map(col): _*).agg(min(ts).as("__cmin"))
-        .join(replayEvents.groupBy(nk.map(col): _*).agg(max(ts).as("__pmax")),
-          nk)
-        .filter(col("__cmin") <= col("__pmax"))
-        .limit(3).collect()
-      require(bad.isEmpty,
-        "applyChanges: strictly-later contract violated — change events " +
-          "at or before a retained regime start for key(s) " +
-          bad.map(_.toSeq.take(nk.length).mkString("(", ",", ")"))
-            .mkString(", ") +
-          "; replay those keys from raw events instead, or set " +
-          "spark.graft.scd2.verify=false if ordering is externally " +
-          "guaranteed")
-    }
+    val bad = changes.groupBy(nk.map(col): _*).agg(min(ts).as("__cmin"))
+      .join(replayEvents.groupBy(nk.map(col): _*).agg(max(ts).as("__pmax")),
+        nk)
+      .filter(col("__cmin") <= col("__pmax"))
+      .limit(3).collect()
+    require(bad.isEmpty,
+      "applyChanges: strictly-later contract violated — change events " +
+        "at or before a retained regime start for key(s) " +
+        bad.map(_.toSeq.take(nk.length).mkString("(", ",", ")"))
+          .mkString(", ") +
+        "; replay those keys from raw events instead")
     val rebuilt = build(replayEvents.unionByName(changes), nk, ts, tieBreak, attrs)
     untouched.unionByName(rebuilt)
   }

@@ -1,60 +1,11 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.functions._
 import graft.sources.Layout
 
-/** Layout maintenance: compaction and Z-order clustering. */
+/** Layout's two-rename directory swap. */
 class LayoutSpec extends SparkSpec {
   import spark.implicits._
-
-  private def parquetFiles(path: String): Seq[java.io.File] =
-    new java.io.File(path).listFiles()
-      .filter(f => f.getName.endsWith(".parquet")).toSeq
-
-  test("compact: rewrites a shredded directory to the target file count, keeps data") {
-    val dir = Files.createTempDirectory("graft-compact").toFile.getAbsolutePath
-    val df = (1 to 10000).map(i => (i.toLong, s"v$i")).toDF("id", "v")
-    df.repartition(64).write.mode("overwrite").parquet(dir) // the small-files mess
-    assert(parquetFiles(dir).size > 30)
-    Layout.compact(spark, dir, targetFiles = 4, sortCols = Seq("id"))
-    assert(parquetFiles(dir).size == 4)
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000)
-    assert(back.agg(sum("id")).as[Long].head() == 10000L * 10001 / 2)
-  }
-
-  test("compact with a sort key clusters: per-file id ranges do not overlap") {
-    val dir = Files.createTempDirectory("graft-compact2").toFile.getAbsolutePath
-    (1 to 5000).map(i => (i.toLong, i % 7)).toDF("id", "g")
-      .repartition(32).write.mode("overwrite").parquet(dir)
-    Layout.compact(spark, dir, targetFiles = 4, sortCols = Seq("id"))
-    val ranges = parquetFiles(dir).map { f =>
-      val s = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("id"), max("id")).as[(Long, Long)].head()
-      s
-    }.sortBy(_._1)
-    ranges.sliding(2).foreach {
-      case Seq((_, hi), (lo, _)) => assert(hi < lo, s"file ranges overlap: $ranges")
-      case _ =>
-    }
-  }
-
-  test("bloom runtime filter: no false negatives, strong pruning of non-matches") {
-    import graft.sources.RuntimeFilter
-    val build = (0L until 100L).map(Tuple1(_)).toDF("k")
-    val probe = (0L until 20000L).map(Tuple1(_)).toDF("k")
-    val pruned = RuntimeFilter.semiPrune(probe, "k", build, "k",
-      expectedItems = 100, numBits = 8192)
-    val kept = pruned.as[Long].collect().toSet
-    // soundness: every real match survives
-    assert((0L until 100L).forall(kept.contains), "false negative!")
-    // effectiveness: the 19900 non-matching keys are mostly gone
-    assert(kept.size < 100 + 1000, s"pruning too weak: kept ${kept.size}")
-    // the pruned side joins to the same result as the unpruned join
-    val joined = pruned.join(build.withColumnRenamed("k", "bk"), $"k" === $"bk")
-    assert(joined.count() == 100)
-  }
 
   test("recoverSwap restores a snapshot stranded mid-swap at its .old name") {
     val dir = Files.createTempDirectory("graft-swap").toFile.getAbsolutePath + "/snap"
@@ -69,39 +20,5 @@ class LayoutSpec extends SparkSpec {
     // idempotent when the snapshot is healthy
     Layout.recoverSwap(spark, dir)
     assert(spark.read.parquet(dir).count() == 1)
-  }
-
-  test("mortonKey interleaves bits of both dimensions") {
-    val got = Seq((0L, 0L), (1L, 0L), (0L, 1L), (1L, 1L), (2L, 3L))
-      .toDF("a", "b")
-      .select(Layout.mortonKey($"a", $"b", bits = 4)).as[Long].collect()
-    // bit i of a -> bit 2i; bit i of b -> bit 2i+1
-    assert(got.toSeq == Seq(0L, 1L, 2L, 3L, 0x0EL)) // (2,3) -> 1110b
-  }
-
-  test("z-ordered layout: every file covers a narrow range of BOTH dimensions") {
-    val dir = Files.createTempDirectory("graft-zorder").toFile.getAbsolutePath
-    // a 100x100 grid — under a lexicographic sort by x, each of 16 files
-    // spans the FULL y range; under z-order both spans shrink to ~1/4
-    val grid = for { x <- 0 until 100; y <- 0 until 100 } yield (x, y)
-    Layout.writeZOrdered(grid.toDF("x", "y"), dir, "x", "y",
-      numFiles = 16, bits = 8)
-    val spans = parquetFiles(dir).map { f =>
-      val (xmin, xmax, ymin, ymax) = spark.read.parquet(f.getAbsolutePath)
-        .agg(min("x"), max("x"), min("y"), max("y"))
-        .as[(Int, Int, Int, Int)].head()
-      (xmax - xmin, ymax - ymin)
-    }
-    // the z-curve has discontinuities, so a FILE straddling a curve jump
-    // can span one full axis — the clustering guarantee is aggregate: a
-    // lexicographic sort by x gives EVERY file the full y span (sum of
-    // y-spans = 16 * 99); z-order shrinks the mean span on BOTH axes
-    val xsAvg = spans.map(_._1).sum.toDouble / spans.size
-    val ysAvg = spans.map(_._2).sum.toDouble / spans.size
-    assert(xsAvg <= 50 && ysAvg <= 50, s"mean spans too wide: $spans")
-    val wide = spans.count { case (xs, ys) => xs > 90 || ys > 90 }
-    assert(wide <= 2, s"too many curve-jump files: $spans")
-    val back = spark.read.parquet(dir)
-    assert(back.count() == 10000)
   }
 }

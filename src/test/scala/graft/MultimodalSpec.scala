@@ -32,36 +32,6 @@ class MultimodalSpec extends SparkSpec {
     assert(audio.getAs[Long]("duration_ms") == 16 * 8L)
   }
 
-  test("frame sampling: one row per interval of stub duration, videos only") {
-    // video payload "frames" = 6 bytes -> stub duration 48 ms
-    val frames = Multimodal.sampleFrames(media, everyMs = 10L)
-      .orderBy("media_id", "frame_idx").collect()
-    assert(frames.forall(_.getAs[Long]("media_id") == 3L)) // only the video
-    assert(frames.length == 4) // floor(48 / 10)
-    assert(frames.map(_.getAs[Long]("frame_ts_ms")).toSeq == Seq(0L, 10L, 20L, 30L))
-    assert(frames.map(_.getAs[Array[Byte]]("frame").toSeq).distinct.length == 4,
-      "frame stubs must differ per index")
-    // deterministic: a second run produces identical bytes
-    val again = Multimodal.sampleFrames(media, everyMs = 10L)
-      .orderBy("media_id", "frame_idx").collect()
-    assert(again.map(_.getAs[Array[Byte]]("frame").toSeq).toSeq ==
-      frames.map(_.getAs[Array[Byte]]("frame").toSeq).toSeq)
-  }
-
-  test("resize replaces image payloads with w*h stub bytes, passes others through") {
-    val out = Multimodal.resizeImages(media, w = 8, h = 4)
-      .orderBy("media_id").collect()
-    assert(out(0).getAs[Array[Byte]]("payload").length == 32) // the image
-    assert(out(1).getAs[Array[Byte]]("payload").toSeq ==
-      "some audio bytes".getBytes("UTF-8").toSeq) // audio untouched
-    assert(out.map(_.getAs[String]("kind")).toSeq ==
-      Seq("image", "audio", "video", "other"))
-    // composes: metadata extraction over resized media sees the new size
-    val meta = Multimodal.extractMetadata(
-      Multimodal.resizeImages(media, 8, 4)).orderBy("media_id").collect()
-    assert(meta(0).getAs[Long]("n_bytes") == 32L)
-  }
-
   // a REAL 20x12 PNG generated with the same JDK imageio the decoder uses
   private def realPng(w: Int = 20, h: Int = 12): Array[Byte] = {
     val img = new java.awt.image.BufferedImage(
@@ -86,18 +56,6 @@ class MultimodalSpec extends SparkSpec {
     // real decode is the documented divergence
     val expr = Multimodal.extractMetadataExpr(df).orderBy("media_id").collect()
     assert(rows(1).toSeq == expr(1).toSeq)
-  }
-
-  test("a genuine PNG resizes to a decodable PNG with the target dimensions") {
-    val df = Seq((1L, "image")).toDF("media_id", "kind")
-      .withColumn("payload", lit(realPng(20, 12)))
-    val out = Multimodal.resizeImages(df, w = 5, h = 3).collect()(0)
-    val resized = out.getAs[Array[Byte]]("payload")
-    assert(Multimodal.imageDims(resized).contains((5, 3)))
-    // and the metadata stage composes: true dims of the re-encoded PNG
-    val meta = Multimodal.extractMetadata(
-      Multimodal.resizeImages(df, 5, 3)).collect()(0)
-    assert(meta.getAs[Int]("width") == 5 && meta.getAs[Int]("height") == 3)
   }
 
   // a REAL mono 8 kHz 16-bit WAV generated with the same JDK sound API
@@ -175,15 +133,6 @@ class MultimodalSpec extends SparkSpec {
     val gen = Multimodal.extractMetadata(df.limit(2)).orderBy("media_id").collect()
     assert(gen(0).getAs[Int]("width") == 1280 &&
       gen(0).getAs[Long]("duration_ms") == 5000L)
-  }
-
-  test("frame sampling uses the real container duration when the header parses") {
-    val df = Seq((1L, "video", Multimodal.minimalMp4(320, 240, 3500L)))
-      .toDF("media_id", "kind", "payload")
-    val frames = Multimodal.sampleFrames(df, everyMs = 1000L).collect()
-    assert(frames.length == 3) // floor(3500 / 1000)
-    assert(frames.map(_.getAs[Long]("frame_ts_ms")).sorted.sameElements(
-      Array(0L, 1000L, 2000L)))
   }
 
   test("videoSamples expands stsc/stco/stsz chunk runs into real byte ranges") {

@@ -30,13 +30,14 @@ class OperatorsSpec extends SparkSpec {
 
   test("exactByFingerprint never shuffles the payload side when bucketed by id") {
     val df = (1 to 500).map(i => (i.toLong, s"text ${i % 50}")).toDF("id", "text")
-    sources.Bucketing.writeBucketed(df, "dedup_bkt", "id", 4, sortCol = Some("id"))
+    df.write.bucketBy(4, "id").sortBy("id").format("parquet")
+      .mode("overwrite").saveAsTable("dedup_bkt")
     val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.enabled" -> "false")
     val prev = confs.map { case (k, _) => k -> spark.conf.get(k) }
     try {
       confs.foreach { case (k, v) => spark.conf.set(k, v) }
-      val t = sources.Bucketing.readTable(spark, "dedup_bkt")
+      val t = spark.table("dedup_bkt")
       val dd = Dedup.exactByFingerprint(t, Seq("text"), Seq(col("id")), "id")
       assert(dd.count() == 50)
       import org.apache.spark.sql.execution.joins.SortMergeJoinExec
@@ -267,12 +268,14 @@ class OperatorsSpec extends SparkSpec {
 
   test("16-bit simhash bands collapse the candidate space vs 6-bit (sf0.01 docs)") {
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val cand24 = Dedup.simhashCandidates(
+    // maxHamming = bits: every banded candidate passes the verify, so
+    // the pair count is the candidate count
+    val cand24 = Dedup.simhashPairsFromSigs(
       Dedup.simhashSignatures(docs, "doc_id", "text", bits = 24),
-      bands = 4, Dedup.portableBandValue(24, 4)).count()
-    val cand64 = Dedup.simhashCandidates(
+      bands = 4, maxHamming = 24, Dedup.portableBandValue(24, 4)).count()
+    val cand64 = Dedup.simhashPairsFromSigs(
       Dedup.simhashSignatures64(docs, "doc_id", "text"),
-      bands = 4, Dedup.band64Value(4)).count()
+      bands = 4, maxHamming = 64, Dedup.band64Value(4)).count()
     // round-3 measured the 6-bit parameterization at ~58% of ALL pairs.
     // The floor on 16-bit candidates is the corpus's REAL near-dup pair
     // count (identical/near-identical docs share whole signatures), so the

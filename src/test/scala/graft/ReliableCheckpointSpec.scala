@@ -55,19 +55,6 @@ class ReliableCheckpointSpec extends SparkSpec {
     assert(Blocks.cutLazy(df).as[Int].collect().sorted === Array(4, 5, 6))
   }
 
-  test("spark.graft.checkpoint.local=true forces the local path under a dir") {
-    val df = Seq(7).toDF("x")
-    withCheckpointDir { dir =>
-      spark.conf.set("spark.graft.checkpoint.local", "true")
-      try {
-        val before = java.nio.file.Files.walk(dir).count()
-        assert(Blocks.cut(df).as[Int].head() === 7)
-        assert(java.nio.file.Files.walk(dir).count() === before,
-          "forced-local cut must not write checkpoint files")
-      } finally spark.conf.unset("spark.graft.checkpoint.local")
-    }
-  }
-
   test("hierarchy and components loops are unchanged under reliable checkpoints") {
     // depth-5 chain + a bushy 2-level tree, plus a 3-component graph
     val edges = Seq((2L, 1L), (3L, 2L), (4L, 3L), (5L, 4L), (6L, 5L),

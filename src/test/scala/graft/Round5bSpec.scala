@@ -51,36 +51,6 @@ class Round5bSpec extends SparkSpec {
     }
   }
 
-  test("trainPqCodebook: per-subspace k-means converges to the cluster means") {
-    // subspace 0 clusters at (0,0)/(10,10); subspace 1 at (5,5)/(-5,-5) —
-    // independent per-subspace structure full-vector k-means can't see
-    def v(a: Float, b: Float) = Array(a, a, b, b)
-    val corpus = (0 until 40).map { i =>
-      val eps = (i % 5) * 0.1f
-      (i.toLong, v(if (i % 2 == 0) 0f + eps else 10f + eps,
-        if (i % 3 == 0) 5f + eps else -5f + eps))
-    }.toDF("id", "vec")
-    val cb = Similarity.trainPqCodebook(corpus, m = 2, ksub = 2, iters = 4,
-      samplePct = 100)
-      .as[(Long, Seq[Float])].collect().sortBy(_._1)
-    assert(cb.length == 2)
-    val slices = cb.flatMap { case (_, vec) =>
-      Seq((0, vec.slice(0, 2)), (1, vec.slice(2, 4)))
-    }
-    def near(s: Seq[Float], c: Float) = s.forall(x => math.abs(x - c) < 1.0)
-    // each subspace's two codewords sit on its own two clusters
-    Seq(0 -> Seq(0f, 10f), 1 -> Seq(5f, -5f)).foreach { case (i, cents) =>
-      val mine = slices.filter(_._1 == i).map(_._2)
-      cents.foreach(c => assert(mine.exists(near(_, c)),
-        s"subspace $i: no codeword near $c: ${mine.map(_.toSeq).toSeq}"))
-    }
-    // and pqTopK consumes the trained codebook directly
-    val got = Similarity.pqTopK(corpus.filter($"id" < 2), corpus,
-      Similarity.trainPqCodebook(corpus, m = 2, ksub = 2, iters = 2, samplePct = 100),
-      k = 3, m = 2)
-    assert(got.count() == 6)
-  }
-
   // ---------------------------------------------------------- concurrency
 
   private def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)

@@ -122,7 +122,18 @@ class Round8Spec extends SparkSpec {
   test("dHash survives a resize re-encode within a small hamming distance") {
     import graft.multimodal.Multimodal
     val base = bmp((x, y) => (x * 3 + y * 2) % 256)
-    val resized = Multimodal.imageResizeBytes(base, 32, 32).get
+    // decode, scale to 32x32, re-encode as PNG
+    val resized = {
+      val img = new java.awt.image.BufferedImage(
+        32, 32, java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g = img.createGraphics()
+      try g.drawImage(javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(base)), 0, 0, 32, 32, null)
+      finally g.dispose()
+      val baos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(img, "png", baos)
+      baos.toByteArray
+    }
     val (h1, h2) = (Multimodal.dHash(base).get, Multimodal.dHash(resized).get)
     val ham = java.lang.Long.bitCount(h1 ^ h2)
     assert(ham <= 12, s"resize moved the hash $ham bits")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{AsOfJoin, Dedup, Similarity}
-import graft.sources.Bucketing
 
 class ScaleOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -40,95 +39,6 @@ class ScaleOpsSpec extends SparkSpec {
     assert(got == Map(1 -> 1, 2 -> 2, 3 -> -1))
   }
 
-  test("JDBC round-trip via in-memory Derby: write, read, partitioned read, pushdown") {
-    val url = "jdbc:derby:memory:graftjdbc;create=true"
-    val rows = (1 to 500).map(i => (i.toLong, s"name$i", i * 1.5))
-    val df = rows.toDF("id", "name", "amount")
-    sources.Jdbc.write(df, url, "t_roundtrip")
-    val back = sources.Jdbc.read(spark, url, "t_roundtrip")
-      .as[(Long, String, Double)].collect().sorted.toSeq
-    assert(back == rows.sorted.toSeq)
-    // partitioned read: same rows, several range-bounded queries
-    val part = sources.Jdbc.readPartitioned(spark, url, "t_roundtrip",
-      "id", 1L, 500L, numPartitions = 4)
-    assert(part.rdd.getNumPartitions == 4)
-    assert(part.as[(Long, String, Double)].collect().sorted.toSeq == back)
-    // filter + projection reach the generated SQL, not the Spark side
-    val pushed = part.filter($"id" <= 10).select($"id")
-    val scan = pushed.queryExecution.executedPlan.toString
-    assert(scan.contains("PushedFilters:") && scan.contains("LessThanOrEqual"),
-      s"filter not pushed:\n$scan")
-    assert(pushed.as[Long].collect().sorted.toSeq == (1L to 10L))
-    // append lands next to the original
-    sources.Jdbc.write(df.filter($"id" <= 3), url, "t_roundtrip",
-      mode = org.apache.spark.sql.SaveMode.Append)
-    assert(sources.Jdbc.read(spark, url, "t_roundtrip").count() == 503)
-  }
-
-  test("JSONL and ORC round-trips preserve documents; ORC pushes filters down") {
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft_fmt").toString
-    // JSONL: write, read back with the EXPLICIT schema (no inference pass)
-    sources.Formats.writeJsonl(docs, s"$dir/docs_jsonl")
-    val viaJson = sources.Formats
-      .readJsonlStrict(spark, s"$dir/docs_jsonl", docs.schema)
-      .select(docs.columns.map(col): _*)
-    assert(viaJson.schema == docs.schema)
-    val key = (d: org.apache.spark.sql.DataFrame) =>
-      d.select($"doc_id", $"text", $"lang", $"source", $"n_chars")
-        .as[(Long, String, String, String, Long)].collect().sorted.toSeq
-    assert(key(viaJson) == key(docs))
-    // ORC: columnar twin with parquet-grade pushdown
-    sources.Formats.writeOrc(docs, s"$dir/docs_orc")
-    val viaOrc = sources.Formats.readOrc(spark, s"$dir/docs_orc")
-    assert(key(viaOrc) == key(docs))
-    val pushed = viaOrc.filter($"doc_id" < 10).select($"doc_id")
-    val plan = pushed.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,10)]"),
-      s"ORC scan did not push the filter:\n$plan")
-  }
-
-  test("JSONL corrupt-line contract: permissive nulls the row, strict fails fast") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_jsonl").toString
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/in.json"),
-      """{"id": 1, "t": "ok"}
-        |{"id": 2 "t": "missing comma"}
-        |{"id": 3, "t": "also ok"}
-        |""".stripMargin)
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("id", org.apache.spark.sql.types.LongType)
-      .add("t", org.apache.spark.sql.types.StringType)
-    val permissive = sources.Formats.readJsonl(spark, s"$dir/in.json", schema)
-      .as[(Option[Long], Option[String])].collect().toSet
-    assert(permissive == Set(
-      (Some(1L), Some("ok")), (None, None), (Some(3L), Some("also ok"))))
-    val ex = intercept[Exception] {
-      sources.Formats.readJsonlStrict(spark, s"$dir/in.json", schema).collect()
-    }
-    def messages(t: Throwable): Seq[String] =
-      if (t == null) Nil
-      else Option(t.getMessage).toSeq ++ messages(t.getCause)
-    assert(messages(ex).exists(m =>
-      m.contains("FAILFAST") || m.contains("Malformed")), ex.toString)
-  }
-
-  test("bucketed tables join without any exchange") {
-    val a = (1 to 1000).map(i => (i.toLong, s"a$i")).toDF("k", "va")
-    val b = (1 to 1000).map(i => (i.toLong, i * 2.0)).toDF("k", "vb")
-    Bucketing.writeBucketed(a, "bkt_a", "k", 4, sortCol = Some("k"))
-    Bucketing.writeBucketed(b, "bkt_b", "k", 4, sortCol = Some("k"))
-    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val j = Bucketing.readTable(spark, "bkt_a")
-        .join(Bucketing.readTable(spark, "bkt_b"), "k")
-      assert(j.count() == 1000)
-      val plan = j.queryExecution.executedPlan.toString
-      assert(!plan.contains("Exchange"), s"plan has a shuffle:\n$plan")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-  }
-
   test("bucketed range join == naive range join") {
     val rnd = new scala.util.Random(7)
     val l = (1 to 300).map(i => (rnd.nextInt(3).toLong, i.toLong, rnd.nextInt(10000).toLong))
@@ -142,22 +52,6 @@ class ScaleOpsSpec extends SparkSpec {
     val bucketed = operators.RangeJoin.bucketed(l, r, "k", "l_ms", "r_ms", w)
       .groupBy("lid").count().as[(Long, Long)].collect().sorted.toSeq
     assert(bucketed == naive)
-  }
-
-  test("partitioned layout prunes non-matching partitions at plan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString
-    val df = (1 to 1000).map(i => (i.toLong, s"2024-01-0${i % 5 + 1}"))
-      .toDF("id", "dt")
-    sources.Partitioning.writePartitioned(df, dir, Seq("dt"))
-    val q = sources.Partitioning.read(spark, dir).filter($"dt" === "2024-01-03")
-    assert(q.count() == 200)
-    val scan = q.queryExecution.executedPlan.toString
-    assert(scan.contains("PartitionFilters") &&
-      scan.contains("dt#") && scan.contains("2024-01-03"),
-      s"expected partition pruning in:\n$scan")
-    // files actually read: only the matching partition directory
-    val files = q.queryExecution.executedPlan.collectLeaves().head.toString
-    assert(!files.contains("2024-01-01") || files.contains("PartitionFilters"))
   }
 
   test("salted join equals plain join") {

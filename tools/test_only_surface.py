@@ -1,0 +1,95 @@
+"""List the program surface that only tests reach.
+
+    python3 tools/test_only_surface.py [REPO]
+
+Scans every .scala file under src/main/scala for objects and defs that are
+public or private[graft] (overrides and private members are skipped, and so
+is every file that defines a `main`: an entry point is not a surface). A
+name is reported when it occurs under src/test but nowhere in the program:
+in no other file under src/main/scala or perfbench/src, and not in its own
+file outside its own definitions. Comments are ignored, so a scaladoc
+mention is not a use.
+
+The match is by name, not by symbol, so an overloaded or common name hides a
+test-only member behind any other member of that name. It only reports: the
+exit status is always 0.
+"""
+import os
+import re
+import sys
+
+DECL = re.compile(r"^[ \t]*((?:(?:private|protected)(?:\[\w+\])?|override|final|implicit|lazy)\s+)*"
+                  r"(def|object)\s+(\w+)", re.M)
+
+
+def strip_comments(text):
+    """Blank out // and /* */ comments, keeping string literals and line numbers."""
+    out, i, n = [], 0, len(text)
+    while i < n:
+        if text.startswith("//", i):
+            j = text.find("\n", i)
+            j = n if j < 0 else j
+            out.append(" " * (j - i))
+        elif text.startswith("/*", i):
+            j = text.find("*/", i + 2)
+            j = n if j < 0 else j + 2
+            out.append(re.sub(r"[^\n]", " ", text[i:j]))
+        elif text[i] == '"':
+            if text.startswith('"""', i):
+                j = text.find('"""', i + 3)
+                j = n if j < 0 else j + 3
+            else:
+                j = i + 1
+                while j < n and text[j] not in '"\n':
+                    j += 2 if text[j] == "\\" else 1
+                j += 1
+            out.append(text[i:j])
+        else:
+            j = i + 1
+            out.append(text[i])
+        i = j
+    return "".join(out)
+
+
+def read_all(root):
+    code = {}
+    for base, _, names in os.walk(root):
+        for name in sorted(names):
+            if name.endswith(".scala"):
+                path = os.path.join(base, name)
+                with open(path, encoding="utf-8") as f:
+                    code[path] = strip_comments(f.read())
+    return code
+
+
+def main():
+    repo = sys.argv[1] if len(sys.argv) > 1 else "."
+    program = read_all(os.path.join(repo, "src", "main", "scala"))
+    bench = read_all(os.path.join(repo, "perfbench", "src"))
+    tests = read_all(os.path.join(repo, "src", "test"))
+
+    found = 0
+    for path, code in sorted(program.items()):
+        if re.search(r"\bdef\s+main\s*\(", code):
+            continue
+        for m in DECL.finditer(code):
+            mods, kind, name = m.group(1) or "", m.group(2), m.group(3)
+            if "override" in mods or ("private" in mods or "protected" in mods) \
+                    and "private[graft]" not in mods:
+                continue
+            word = re.compile(r"\b%s\b" % re.escape(name))
+            own = len(re.findall(r"\b(?:def|object|class|trait|val|var)\s+%s\b" % re.escape(name), code))
+            if len(word.findall(code)) > own or any(
+                    word.search(c) for p, c in list(program.items()) + list(bench.items()) if p != path):
+                continue
+            callers = sorted(os.path.basename(p) for p, c in tests.items() if word.search(c))
+            if callers:
+                found += 1
+                print("%s:%d  %s %s  <- %s" % (os.path.relpath(path, repo), code.count("\n", 0, m.start()) + 1,
+                                               kind, name, ", ".join(callers)))
+    print("%d test-only names" % found)
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
