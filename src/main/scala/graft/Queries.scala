@@ -2077,32 +2077,32 @@ object Queries {
     * CTEs already rank exactly that corpus).
     */
   private def e3giSqlWith(entrySubquery: String) = s"""WITH ${knnGraphCtesWhere("WHERE vec_id % 5 <> 0")},
-    adj AS (SELECT qid AS s, cid AS d FROM g2 UNION SELECT cid, qid FROM g2),
-    vb AS (SELECT vec_id, embedding AS e FROM embeddings WHERE vec_id % 5 = 0),
-    vbn AS (SELECT vec_id, e,
+    adj AS MATERIALIZED (SELECT qid AS s, cid AS d FROM g2 UNION SELECT cid, qid FROM g2),
+    vb AS MATERIALIZED (SELECT vec_id, embedding AS e FROM embeddings WHERE vec_id % 5 = 0),
+    vbn AS MATERIALIZED (SELECT vec_id, e,
       sqrt(list_sum(list_transform(range(1, 65), i -> cast(e[i] as double) * cast(e[i] as double)))) AS nrm FROM vb),
-    qs AS (SELECT q.vec_id AS qid, c.vec_id AS node,
+    qs AS MATERIALIZED (SELECT q.vec_id AS qid, c.vec_id AS node,
         round($dotSql / (q.nrm * c.nrm), 6) AS sim
       FROM vbn q JOIN vn c ON q.vec_id <> c.vec_id),
-    v0 AS (SELECT qid, node, sim FROM qs
+    v0 AS MATERIALIZED (SELECT qid, node, sim FROM qs
       WHERE node IN ($entrySubquery)),
-    f0 AS (SELECT qid, node FROM v0
+    f0 AS MATERIALIZED (SELECT qid, node FROM v0
       QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) <= 4),
-    c1 AS (SELECT DISTINCT f0.qid, adj.d AS node FROM f0 JOIN adj ON f0.node = adj.s
+    c1 AS MATERIALIZED (SELECT DISTINCT f0.qid, adj.d AS node FROM f0 JOIN adj ON f0.node = adj.s
       WHERE adj.d <> f0.qid),
-    v1 AS (SELECT qid, node, sim FROM v0
+    v1 AS MATERIALIZED (SELECT qid, node, sim FROM v0
       UNION SELECT qs.qid, qs.node, qs.sim FROM qs JOIN c1 ON qs.qid = c1.qid AND qs.node = c1.node),
-    f1 AS (SELECT qid, node FROM v1
+    f1 AS MATERIALIZED (SELECT qid, node FROM v1
       QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) <= 4),
-    c2 AS (SELECT DISTINCT f1.qid, adj.d AS node FROM f1 JOIN adj ON f1.node = adj.s
+    c2 AS MATERIALIZED (SELECT DISTINCT f1.qid, adj.d AS node FROM f1 JOIN adj ON f1.node = adj.s
       WHERE adj.d <> f1.qid),
-    v2 AS (SELECT qid, node, sim FROM v1
+    v2 AS MATERIALIZED (SELECT qid, node, sim FROM v1
       UNION SELECT qs.qid, qs.node, qs.sim FROM qs JOIN c2 ON qs.qid = c2.qid AND qs.node = c2.node),
-    st AS (SELECT qid, node, sim FROM v2
+    st AS MATERIALIZED (SELECT qid, node, sim FROM v2
       QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) <= 4),
-    pb AS (SELECT greatest(1, count(*) // 4) AS stripe FROM vb),
+    pb AS MATERIALIZED (SELECT greatest(1, count(*) // 4) AS stripe FROM vb),
     ${ringCtesSql("b", "vb", 4)},
-    bbp AS (
+    bbp AS MATERIALIZED (
       SELECT a.vec_id AS q, b.vec_id AS c FROM brk0 a JOIN brk0 b
         ON a.vec_id <> b.vec_id
         AND a.r % (SELECT stripe FROM pb) = b.r % (SELECT stripe FROM pb)
@@ -2111,18 +2111,18 @@ object Queries {
       UNION
       SELECT a.qid, b.qid FROM st a JOIN st b
         ON a.node = b.node AND a.qid <> b.qid),
-    bb AS (SELECT a.vec_id AS qid, b.vec_id AS node,
+    bb AS MATERIALIZED (SELECT a.vec_id AS qid, b.vec_id AS node,
         round(list_sum(list_transform(range(1, 65), i -> cast(a.e[i] as double) * cast(b.e[i] as double))) / (a.nrm * b.nrm), 6) AS sim
       FROM vbn a JOIN vbn b ON a.vec_id <> b.vec_id
         JOIN bbp ON a.vec_id = bbp.q AND b.vec_id = bbp.c),
-    batchlists AS (SELECT qid, node, sim FROM
+    batchlists AS MATERIALIZED (SELECT qid, node, sim FROM
         (SELECT qid, node, sim FROM st UNION ALL SELECT qid, node, sim FROM bb) u
       QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) <= 3),
-    oldlists AS (SELECT qid, node, sim FROM
+    oldlists AS MATERIALIZED (SELECT qid, node, sim FROM
         (SELECT qid, cid AS node, sim FROM g2
          UNION ALL SELECT node AS qid, qid AS node, sim FROM st) u
       QUALIFY row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) <= 3),
-    fin AS (SELECT * FROM oldlists UNION ALL SELECT * FROM batchlists)
+    fin AS MATERIALIZED (SELECT * FROM oldlists UNION ALL SELECT * FROM batchlists)
     SELECT qid AS query_id,
       cast(row_number() OVER (PARTITION BY qid ORDER BY sim DESC, node) as int) AS rnk,
       node AS cand_id, sim FROM fin ORDER BY query_id, rnk"""
@@ -9995,18 +9995,18 @@ object Queries {
   val e2kcSql: String = {
     val rounds = 6
     val chain = (1 to rounds).map { r =>
-      s"""d${r - 1} AS (SELECT src, count(*) AS deg FROM e${r - 1} GROUP BY src),
-      k${r - 1} AS (SELECT src FROM d${r - 1} WHERE deg >= 2),
-      e$r AS (SELECT e.src, e.dst FROM e${r - 1} e
+      s"""d${r - 1} AS MATERIALIZED (SELECT src, count(*) AS deg FROM e${r - 1} GROUP BY src),
+      k${r - 1} AS MATERIALIZED (SELECT src FROM d${r - 1} WHERE deg >= 2),
+      e$r AS MATERIALIZED (SELECT e.src, e.dst FROM e${r - 1} e
         JOIN k${r - 1} a ON e.src = a.src JOIN k${r - 1} b ON e.dst = b.src)"""
     }.mkString(",\n")
-    s"""WITH v AS (SELECT vec_id, embedding AS e FROM embeddings),
-    p AS (SELECT q.vec_id AS a, c.vec_id AS b,
+    s"""WITH v AS MATERIALIZED (SELECT vec_id, embedding AS e FROM embeddings),
+    p AS MATERIALIZED (SELECT q.vec_id AS a, c.vec_id AS b,
         round($dotSql / (${normSql("q")} * ${normSql("c")}), 6) AS sim
       FROM v q JOIN v c ON q.vec_id < c.vec_id
         AND ${bucketSql("q")} = ${bucketSql("c")}),
-    g AS (SELECT a, b FROM p WHERE sim >= 0.1),
-    e0 AS (SELECT a AS src, b AS dst FROM g UNION ALL SELECT b, a FROM g),
+    g AS MATERIALIZED (SELECT a, b FROM p WHERE sim >= 0.1),
+    e0 AS MATERIALIZED (SELECT a AS src, b AS dst FROM g UNION ALL SELECT b, a FROM g),
     $chain
     SELECT src AS id, count(*) AS deg FROM e$rounds GROUP BY src ORDER BY id"""
   }

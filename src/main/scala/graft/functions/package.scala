@@ -153,6 +153,13 @@ package object functions {
     */
   val HashPrime = 1000000007L
 
+  /** Decimal scale of every score the graded oracles compare: operators
+    * round similarities, distances and probabilities to this many
+    * places, so rank ties and equality are engine-independent. The
+    * oracle SQL in `graft.Queries` writes the same value as a literal 6.
+    */
+  val ScoreDigits = 6
+
   /** Portable string hash: left-fold `acc*31 + codepoint(ch) mod p` over
     * the codepoints of `c`. Expressible identically in any engine with a
     * list-reduce (DuckDB `list_reduce`, Trino `reduce`). Unicode-safe:

@@ -608,19 +608,6 @@ object Multimodal {
       }(enc)
   }
 
-  /** Image near-dup pairs: dHash signatures through the banded hamming
-    * self-join shared with text SimHash ([[graft.operators.Dedup]]) —
-    * 4×16-bit bands guarantee any pair within hamming ≤ 3 shares a
-    * band (pigeonhole), the popcount verify runs inside the join stage,
-    * and payloads never shuffle. Returns (id1, id2, hamming).
-    */
-  def phashPairs(media: DataFrame, maxHamming: Int = 3): DataFrame =
-    graft.operators.Dedup.simhashPairsFromSigs64(
-      extractPhash(media).filter(col("is_real"))
-        .select(col("media_id").as("id"), lit(0L).as("blk"),
-          col("phash").as("sig")),
-      maxHamming)
-
   val decodedFrameSchema: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),
     StructField("frame_idx", IntegerType, nullable = false),

@@ -3,6 +3,7 @@ package graft.operators
 import graft.Blocks.CutSyntax
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.ScoreDigits
 
 /** Connected components over a pair list — the clustering step between
   * near-dup PAIR generation (MinHash/SimHash/embedding) and survivor
@@ -429,7 +430,7 @@ object Components {
         round(when(col("deg") >= 2,
           lit(2.0) * coalesce(col("n_tri"), lit(0L)).cast("double") /
             (col("deg").cast("double") * (col("deg").cast("double") - lit(1.0))))
-          .otherwise(lit(0.0)), 6).as("coeff"))
+          .otherwise(lit(0.0)), ScoreDigits).as("coeff"))
   }
 
   /** Fixed-round k-core peel: `rounds` rounds of simultaneously removing
@@ -449,9 +450,8 @@ object Components {
     *
     * Scale: each round is one map-side-combined degree aggregate and
     * two semi joins, lineage-cut so the plan stays flat; worst
-    * case needs O(n) rounds (a path peels from the ends), so at unknown
-    * depth prefer `kCore` (convergence-looped, one bounded count scalar
-    * per round).
+    * case needs O(n) rounds (a path peels from the ends), so `rounds`
+    * must cover the graph's peel depth; over-provisioning is safe.
     */
   def kCoreFixed(edges: DataFrame, srcCol: String, dstCol: String,
                  k: Int, rounds: Int): DataFrame = graft.Blocks.scoped { ps =>
@@ -666,33 +666,5 @@ object Components {
     untouched.select("id", "comp")
       .unionByName(solved.select("id", "comp"))
       .unionByName(selfs)
-  }
-
-  /** Convergence-looped [[kCoreFixed]]: peels until a round removes
-    * nothing (one bounded count scalar per round — the minLabel
-    * convergence discipline), so the result is the true k-core at any
-    * graph depth.
-    */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 64): DataFrame = graft.Blocks.scoped { ps =>
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    var e = ps.cut(
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
-    var n = e.count()
-    var done = false
-    var r = 0
-    while (!done && r < maxRounds) {
-      val keep = e.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select("src")
-      val next = ps.cut(e.join(keep, Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst"))
-      val m = next.count()
-      if (m == n) { ps.free(next); done = true }
-      else { ps.free(e); e = next; n = m }
-      r += 1
-    }
-    ps.result(e)
-    e.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
   }
 }

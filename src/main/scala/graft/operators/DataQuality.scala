@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.ScoreDigits
 
 /** Declarative data-quality rule engine — the validation gate an ETL
   * run publishes beside its load (row counts alone say nothing about
@@ -36,7 +37,7 @@ object DataQuality {
       }: _*)).as("r"))
       .select(col("r.rule"), col("r.n_violations"), col("r.n_checked"),
         round(col("r.n_violations").cast("double") /
-          col("r.n_checked").cast("double"), 6).as("violation_rate"))
+          col("r.n_checked").cast("double"), ScoreDigits).as("violation_rate"))
   }
 
   /** One FK-inference candidate: does `child.childCol` reference
@@ -80,7 +81,7 @@ object DataQuality {
           lit(s"${c.parentName}.${c.parentCol}").as("parent_key"),
           col("n_child_distinct"), col("n_parent_distinct"), col("n_matched"),
           round(col("n_matched").cast("double") /
-            col("n_child_distinct").cast("double"), 6).as("containment"),
+            col("n_child_distinct").cast("double"), ScoreDigits).as("containment"),
           when(col("__maxpn") === 1L, 1).otherwise(0).as("parent_unique"),
           when(col("n_matched") === col("n_child_distinct") &&
             col("__maxpn") === 1L, 1).otherwise(0).as("is_fk"))
@@ -103,6 +104,6 @@ object DataQuality {
     orph.crossJoin(totals)
       .select(lit(rule).as("rule"), col("n_violations"), col("n_checked"),
         round(col("n_violations").cast("double") /
-          col("n_checked").cast("double"), 6).as("violation_rate"))
+          col("n_checked").cast("double"), ScoreDigits).as("violation_rate"))
   }
 }

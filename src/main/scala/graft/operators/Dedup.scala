@@ -216,7 +216,7 @@ object Dedup {
       .join(baseN.select(col("id").as("new_id"), col("sh").as("__shn")), "new_id")
       .join(baseO.select(col("id").as("old_id"), col("sh").as("__sho")), "old_id")
       .select(col("new_id"), col("old_id"),
-        round(jaccardOf(col("__shn"), col("__sho")), 6).as("jaccard"))
+        round(jaccardOf(col("__shn"), col("__sho")), ScoreDigits).as("jaccard"))
       .filter(col("jaccard") >= jaccardThreshold)
     val result = verified.cut
     baseN.unpersist(); baseO.unpersist()
@@ -623,17 +623,6 @@ object Dedup {
     simhashPairsFromSigs(sigs, bands, maxHamming, band64Value(bands))
   }
 
-  /** Banded hamming pairs over PRE-COMPUTED 64-bit signatures (id, blk,
-    * sig) — the [[simhashPairsScalable]] tail exposed for other 64-bit
-    * signature families (image dHash in graft.multimodal). Same
-    * pigeonhole guarantee: lossless for maxHamming < bands.
-    */
-  private[graft] def simhashPairsFromSigs64(sigs: DataFrame, maxHamming: Int,
-                                            bands: Int = 4): DataFrame = {
-    require(64 % bands == 0 && bands > maxHamming)
-    simhashPairsFromSigs(sigs, bands, maxHamming, band64Value(bands))
-  }
-
   /** Band b of a 64-bit signature, by unsigned shift + mask. */
   private[graft] def band64Value(bands: Int)(b: Int): Column = {
     val w = 64 / bands
@@ -832,7 +821,7 @@ object Dedup {
       .select(col("s1"), col("s2"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
         round(coalesce(col("n_shared"), lit(0L)).cast("double") /
-          (col("n1") + col("n2") - coalesce(col("n_shared"), lit(0L))), 6)
+          (col("n1") + col("n2") - coalesce(col("n_shared"), lit(0L))), ScoreDigits)
           .as("jaccard"))
   }
 

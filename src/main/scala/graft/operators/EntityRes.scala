@@ -4,6 +4,7 @@ import graft.Blocks.CutSyntax
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.ScoreDigits
 
 /** Blocked entity resolution over structured records — the MDM/ETL
   * workload (one physical customer behind several near-identical rows):
@@ -67,8 +68,7 @@ object EntityRes {
   def candidatePairs(records: DataFrame, idCol: String,
                      blockCols: Seq[String], nameCol: String,
                      numCol: String, nameDenom: Double, numScale: Double,
-                     nameWeight: Double, threshold: Double,
-                     roundTo: Int = 6, qgram: Int = 3): DataFrame = {
+                     nameWeight: Double, threshold: Double, qgram: Int = 3): DataFrame = {
     def side(tag: String) = records.select(
       Seq(col(idCol).as(s"id$tag"), col(nameCol).as(s"n$tag"),
         col(numCol).as(s"v$tag")) ++
@@ -79,7 +79,7 @@ object EntityRes {
     val numSim = lit(1.0) -
       least(abs(col("v1") - col("v2")) / lit(numScale), lit(1.0))
     val scored = round(lit(nameWeight) * nameSim +
-      lit(1.0 - nameWeight) * numSim, roundTo).as("score")
+      lit(1.0 - nameWeight) * numSim, ScoreDigits).as("score")
     // edit bound implied by the score contract; +ε guards FP on the
     // exact-integer boundary (k at the boundary stays IN the gate)
     val k = if (nameWeight <= 0) Int.MaxValue

@@ -32,7 +32,11 @@ object Ids {
     * the driver. [[globalRank]], [[graft.star.Dims.probe]],
     * [[Hierarchy.extend]]/[[Hierarchy.extendPaths]],
     * [[Components.minLabelAdaptive]] and Similarity's bucket ranks gate
-    * on it; past it each runs its distributed path.
+    * on it; past it each runs its distributed path. The late folds
+    * ([[Sessionize.sessionsFoldLate]], [[graft.star.Scd2.applyChangesLate]])
+    * recompute in full past it; [[Similarity.ivfPqTopKFromCodes]]'s
+    * query side and [[Sessionize.markovStationary]]'s transition matrix
+    * fail past it.
     */
   val SmallBatchKeys: Long = 1L << 17
 

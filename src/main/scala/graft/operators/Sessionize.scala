@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
+import graft.functions.ScoreDigits
 
 /** E11 — event-time windowing and sessionization, batch form (the graded,
   * oracle-comparable path; the Structured Streaming variant lives in
@@ -198,11 +199,9 @@ object Sessionize {
     * Scale: the late-key set is the contract-violation tail — a
     * broadcast-bounded fraction of keys by the same ingest reality that
     * makes the fold worthwhile, ENFORCED: the tail collect is bounded
-    * to `spark.graft.sessions.lateMaxKeys` (default 1M) + 1 rows and an
-    * over-cap batch fails loud — or, with
-    * `spark.graft.sessions.lateFallback=true`, falls back to full
-    * re-sessionization automatically (the merge leg over ALL keys,
-    * property-proven equal). The two legs partition the snapshot by key
+    * to [[Ids.SmallBatchKeys]] + 1 rows, and a batch with more late
+    * keys takes full re-sessionization instead (the merge leg over ALL
+    * keys, property-proven equal). The two legs partition the snapshot by key
     * (one broadcast anti/semi join each, no snapshot shuffle); the
     * merge windows touch session rows of late keys only. Graded:
     * e11_sessions_incr_late (oracle = full recompute of history ∪
@@ -265,28 +264,15 @@ object Sessionize {
     // five identical batch-sized aggregate subtrees). The violating
     // tail is broadcast-bounded by the ingest reality — and GUARDED
     // (r18 verdict): the collect itself is bounded to cap+1 rows, so a
-    // batch where EVERY key is late either fails with a named error or
-    // (spark.graft.sessions.lateFallback=true) falls back to full
-    // re-sessionization via the merge leg over all keys — both
-    // semantics are property-proven equal, so the fallback costs one
-    // snapshot-wide window instead of a driver-killing collect.
-    val lateCap = batch.sparkSession.conf
-      .getOption("spark.graft.sessions.lateMaxKeys").map(_.toInt)
-      .getOrElse(1000000)
+    // batch where more keys are late takes full re-sessionization via
+    // the merge leg over all keys — property-proven equal, so it costs
+    // one snapshot-wide window instead of a driver-killing collect.
+    val lateCap = Ids.SmallBatchKeys.toInt
     val lkRows = batch.groupBy(col(keyCol))
       .agg(unix_millis(min(col(tsCol))).as("__bmin"))
       .filter(col("__bmin") <= smax) // the violating tail
       .select(col(keyCol)).limit(lateCap + 1).collect()
-    if (lkRows.length > lateCap) {
-      if (batch.sparkSession.conf
-          .getOption("spark.graft.sessions.lateFallback").contains("true"))
-        return mergedLeg(snapshot, batch)
-      throw new IllegalArgumentException(
-        s"sessionsFoldLate: more than $lateCap late keys — the batch is " +
-          "not a late TAIL; re-sessionize instead (set " +
-          "spark.graft.sessions.lateFallback=true to do that " +
-          "automatically, or raise spark.graft.sessions.lateMaxKeys)")
-    }
+    if (lkRows.length > lateCap) return mergedLeg(snapshot, batch)
     val lateKeys = {
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.types.StructType
@@ -359,7 +345,7 @@ object Sessionize {
             col("n_ended").cast("double") / col("n_risk")))
           .otherwise(lit(Double.NegativeInfinity)))
       .withColumn("survival",
-        round(exp(sum(col("__term")).over(survW)), 6))
+        round(exp(sum(col("__term")).over(survW)), ScoreDigits))
       .select(col("t_min").cast("long"), col("n_risk"), col("n_ended"),
         col("n_censored"), col("survival"))
   }
@@ -411,26 +397,21 @@ object Sessionize {
     * data-sized work is ONE lag window + one (prev, next) aggregate; the
     * K×K transition matrix is bounded by the event-type CARDINALITY
     * contract, so the fixed-count power iteration runs on the driver
-    * over the collected matrix. Iteration inputs are the ROUNDED (6 dp,
-    * portable) transition probabilities, x₀ is uniform, and every
-    * mat-vec product / renormalization is an explicitly-ordered chain of
-    * IEEE double ops (ascending state index, left fold), so an oracle
-    * replaying the same chain reproduces the vector bit-for-bit.
+    * over the collected matrix. Iteration inputs are the ROUNDED
+    * ([[graft.functions.ScoreDigits]] dp, portable) transition
+    * probabilities, x₀ is uniform, and every mat-vec product /
+    * renormalization is an explicitly-ordered chain of IEEE double ops
+    * (ascending state index, left fold), so an oracle replaying the same
+    * chain reproduces the vector bit-for-bit.
     * Renormalizing each step keeps mass at 1 even if a state has no
     * observed outgoing transitions (sub-stochastic row).
+    *
+    * The collected matrix is bounded to [[Ids.SmallBatchKeys]] (2^17)
+    * transitions, about 362 event types — far above any event-type
+    * taxonomy; more fails with a named error.
     */
-  /** Driver-matrix bound for [[markovStationary]] (default 1M rows ≈
-    * K=1000 states — far above any event-type taxonomy, far below what
-    * hurts a driver).
-    */
-  private def transitionCap(events: DataFrame): Int =
-    events.sparkSession.conf
-      .getOption("spark.graft.markov.maxTransitions").map(_.toInt)
-      .getOrElse(1000000)
-
   def markovStationary(events: DataFrame, userCol: String, typeCol: String,
-                       tsMsCol: String, tieCol: String, iters: Int,
-                       roundTo: Int = 6): DataFrame = {
+                       tsMsCol: String, tieCol: String, iters: Int): DataFrame = {
     val w = Window.partitionBy(userCol).orderBy(col(tsMsCol), col(tieCol))
     val wp = Window.partitionBy("prev")
     val trans = events
@@ -439,20 +420,18 @@ object Sessionize {
       .groupBy(col("prev"), col(typeCol).as("next"))
       .agg(count(lit(1)).as("n"))
       .withColumn("p", round(col("n").cast("double") /
-        sum(col("n")).over(wp).cast("double"), roundTo))
+        sum(col("n")).over(wp).cast("double"), ScoreDigits))
       .select("prev", "next", "p")
       // K^2 rows max — the type-cardinality contract, ENFORCED (r18
       // verdict): the collect is bounded to cap+1 rows, so a
       // high-cardinality type column (a user id mistaken for an event
       // type) fails with a named error instead of a driver OOM
-      .limit(transitionCap(events) + 1)
+      .limit(Ids.SmallBatchKeys.toInt + 1)
       .collect()
-    require(trans.length <= transitionCap(events),
-      s"markovStationary: more than ${transitionCap(events)} distinct " +
-        "(prev, next) transitions — the event-type CARDINALITY contract " +
-        "is violated (is the type column actually low-cardinality?); " +
-        "raise spark.graft.markov.maxTransitions only if a K x K matrix " +
-        "of this size belongs on the driver")
+    require(trans.length <= Ids.SmallBatchKeys,
+      s"markovStationary: more than Ids.SmallBatchKeys = ${Ids.SmallBatchKeys} " +
+        "distinct (prev, next) transitions — the event-type CARDINALITY " +
+        "contract is violated (is the type column actually low-cardinality?)")
     val states = trans.flatMap(r => Seq(r.getString(0), r.getString(1)))
       .distinct.sorted
     val k = states.length
@@ -475,6 +454,6 @@ object Sessionize {
     val spark = events.sparkSession
     import spark.implicits._
     states.zip(x).toSeq.toDF("state", "pi_raw")
-      .select(col("state"), round(col("pi_raw"), roundTo).as("pi"))
+      .select(col("state"), round(col("pi_raw"), ScoreDigits).as("pi"))
   }
 }

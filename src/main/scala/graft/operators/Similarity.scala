@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DataType
 import graft.expressions.BoundedTopK
+import graft.functions.ScoreDigits
 
 /** E3 — similarity search over an embedding column (`array<float>`).
   *
@@ -87,8 +88,7 @@ object Similarity {
     * corpus streams in place — no corpus shuffle, no driver collect of the
     * big side, parallelism = corpus partitions.
     */
-  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                     roundTo: Int = 6): DataFrame = {
+  def bruteForceTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     // norms computed once per row, not once per pair
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
       norm(col("vec")).as("qn"))
@@ -96,7 +96,7 @@ object Similarity {
       norm(col("vec")).as("cn"))
     val sims = broadcast(q).join(c, col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
@@ -108,55 +108,27 @@ object Similarity {
     * BoundedTopK over the rounded dot with candidate-id tie-break —
     * bruteForceTopK's plan shape minus the norm division.
     */
-  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-               roundTo: Int = 6): DataFrame = {
+  def mipsTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
     val c = corpus.select(col("id").as("cand_id"), col("vec").as("cv"))
     val sims = broadcast(q).join(c, col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
-  /** The norm-augmentation reduction from MIPS to cosine search
-    * (Bachrach et al., RecSys 2014): with M = the max corpus norm (ONE
-    * scalar — an index contract like the IVF centroids, shipped via a
-    * broadcast 1-row frame, no collect), append sqrt(M² − |x|²) to
-    * each corpus vector and 0 to each query. Every augmented corpus
-    * vector has norm EXACTLY M (they land on a sphere), queries keep
-    * their norm, and dot(q̂, x̂) = q·x — so augmented-space cosine is
-    * q·x / (|q|·M), MONOTONE in the inner product. Direction-only ANN
-    * machinery (sign-bucket LSH, IVF cells, PQ codes built over the
-    * augmented column) therefore answers MIPS: that transfer is the
-    * entire point of the reduction, and what makes MIPS tractable at
-    * 100 TB where the exact path's O(|Q|·N) scan is not.
-    *
-    * Returns (id, vec, vec_aug): the original rows with the augmented
-    * column added. The augmented component is stored float32 like the
-    * rest of the vector; rankings computed DOWNSTREAM should use the
-    * identity aug_cos = dot/(|q|·M) on the raw columns (exact in
-    * double) rather than re-deriving |x̂| from the rounded float —
-    * [[mipsAugCosineTopK]] does exactly that.
+  /** MIPS ranked THROUGH the norm-augmentation reduction to cosine
+    * search (Bachrach et al., RecSys 2014): with M = the max corpus norm
+    * (ONE scalar, shipped via a broadcast 1-row frame, no collect),
+    * appending sqrt(M² − |x|²) to each corpus vector and 0 to each query
+    * puts the corpus on a sphere of radius M, so augmented-space cosine
+    * is q·x/(|q|·M), MONOTONE in the inner product. Scores are that
+    * cosine, computed from the raw columns (exact in double). Must
+    * produce the same neighbour SETS as [[mipsTopK]] (monotone
+    * transform; spec-pinned) — graded independently (e3_mips_aug) so the
+    * reduction itself is oracle-pinned, not just the exact path.
     */
-  def augmentForMips(corpus: DataFrame): DataFrame = {
-    val m2 = corpus.agg(max(dot(col("vec"), col("vec"))).as("__m2"))
-    corpus.crossJoin(broadcast(m2))
-      .select(col("id"), col("vec"),
-        concat(col("vec"), array(sqrt(greatest(
-          col("__m2") - dot(col("vec"), col("vec")), lit(0.0))).cast("float")))
-          .as("vec_aug"))
-  }
-
-  /** MIPS ranked THROUGH the augmentation geometry: scores are the
-    * augmented-space cosine q·x/(|q|·M) — the exact monotone transform
-    * of the dot that cosine-ANN machinery over [[augmentForMips]]'s
-    * column approximates. Must produce the same neighbour SETS as
-    * [[mipsTopK]] (monotone transform; spec-pinned) — graded
-    * independently (e3_mips_aug) so the reduction itself is
-    * oracle-pinned, not just the exact path.
-    */
-  def mipsAugCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int,
-                        roundTo: Int = 6): DataFrame = {
+  def mipsAugCosineTopK(queries: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
     val m2 = corpus.agg(max(dot(col("vec"), col("vec"))).as("__m2"))
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
       norm(col("vec")).as("qn"))
@@ -165,17 +137,17 @@ object Similarity {
       .crossJoin(broadcast(m2))
       .select(col("query_id"), col("cand_id"),
         round(dot(col("qv"), col("cv")) / (col("qn") * sqrt(col("__m2"))),
-          roundTo).as("sim"))
+          ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
   /** IVF-accelerated MIPS — the augmentation reduction actually driving
     * an index: cells are Voronoi regions of the AUGMENTED space. Corpus
-    * rows assign by argmax of round(x·c + ax·ac, roundTo) where
+    * rows assign by argmax of round(x·c + ax·ac, ScoreDigits) where
     * ax = √(M²−|x|²) is the row's augmented component and ac the
     * centroid's (M² = max corpus self-dot — ONE collected scalar, an
     * index contract like the K centroids); queries carry augmented
-    * component 0, so their probe cell is argmax round(q·c, roundTo).
+    * component 0, so their probe cell is argmax round(q·c, ScoreDigits).
     * Search scores candidates with the RAW dot — the augmented dim
     * contributes q̂₆₅·x̂₆₅ = 0 — so returned scores are true inner
     * products while the index partitioning is the direction-only
@@ -185,7 +157,7 @@ object Similarity {
     * broadcast.
     */
   def mipsIvfTopK(queries: DataFrame, corpus: DataFrame,
-                  centroids: DataFrame, k: Int, roundTo: Int = 6): DataFrame = {
+                  centroids: DataFrame, k: Int): DataFrame = {
     val cents = collectCentroids(centroids, "mipsIvfTopK")
     val m2 = corpus.agg(max(dot(col("vec"), col("vec"))))
       .collect()(0).getDouble(0)
@@ -197,7 +169,7 @@ object Similarity {
     def augCell(vec: Column, ax: Column): Column =
       array_min(array(cents.map { case (cid, v) =>
         struct(negate(round(dot(vec, typedlit(v)) + ax * lit(acOf(cid)),
-          roundTo)).as("nd"), lit(cid).as("cid"))
+          ScoreDigits)).as("nd"), lit(cid).as("cid"))
       }: _*)).getField("cid")
     val c = corpus
       .select(col("id").as("cand_id"), col("vec").as("cv"),
@@ -210,15 +182,14 @@ object Similarity {
     val sims = broadcast(q).join(c, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
   /** LSH-bucketed approximate top-k: candidates restricted to the query's
     * sign bucket. The scale path — each query scans N/2^bits candidates.
     */
-  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, bits: Int = 8,
-              roundTo: Int = 6): DataFrame = {
+  def lshTopK(queries: DataFrame, corpus: DataFrame, k: Int, bits: Int = 8): DataFrame = {
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"),
       signBucket(col("vec"), bits).as("bucket"), norm(col("vec")).as("qn"))
     val c = corpus.select(col("id").as("cand_id"), col("vec").as("cv"),
@@ -226,7 +197,7 @@ object Similarity {
     val sims = broadcast(q).join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
@@ -268,28 +239,28 @@ object Similarity {
     * `orderBy(d.desc, cid)` without the N×K shuffle). ONE narrow
     * codegen'd projection per row.
     */
-  private def scoredCells(cents: Array[(Long, Array[Float])], roundTo: Int)
+  private def scoredCells(cents: Array[(Long, Array[Float])])
                          (vec: Column): Column =
     array(cents.map { case (cid, v) =>
-      struct(negate(round(dot(vec, typedlit(v)), roundTo)).as("nd"),
+      struct(negate(round(dot(vec, typedlit(v)), ScoreDigits)).as("nd"),
         lit(cid).as("cid"))
     }: _*)
 
-  private def cellExpr(cents: Array[(Long, Array[Float])], roundTo: Int)
+  private def cellExpr(cents: Array[(Long, Array[Float])])
                       (vec: Column): Column =
-    array_min(scoredCells(cents, roundTo)(vec)).getField("cid")
+    array_min(scoredCells(cents)(vec)).getField("cid")
 
   /** The query's `p` best cells (by the same rounded-similarity order), for
     * multi-probe search.
     */
-  private[graft] def cellsExpr(cents: Array[(Long, Array[Float])], roundTo: Int,
+  private[graft] def cellsExpr(cents: Array[(Long, Array[Float])],
                         p: Int)(vec: Column): Column =
-    transform(slice(array_sort(scoredCells(cents, roundTo)(vec)), 1, p),
+    transform(slice(array_sort(scoredCells(cents)(vec)), 1, p),
       s => s.getField("cid"))
 
   /** Driver-side twin of [[cellsExpr]]: a vector's `p` best cells by the
     * SAME order — dot accumulated left-to-right in double, HALF_UP
-    * rounding at `roundTo` (Spark's `round` on double goes through the
+    * rounding at `ScoreDigits` (Spark's `round` on double goes through the
     * decimal string form, hence `BigDecimal.decimal`), ties to the
     * smallest cell id, and -0.0 == 0.0 exactly as Spark's double
     * ordering ties them. Kept bit-identical to the expression so a
@@ -305,8 +276,7 @@ object Similarity {
     * `BigDecimal.decimal(NaN)` would throw NumberFormatException.
     */
   private[graft] def topCellsDriver(vec: Array[Float],
-                             cents: Array[(Long, Array[Float])], p: Int,
-                             roundTo: Int): Array[Long] = {
+                             cents: Array[(Long, Array[Float])], p: Int): Array[Long] = {
     // Spark's double ordering (SQLOrderingUtil): IEEE == first, so
     // -0.0 ties 0.0; NaN sorts greatest via Double.compare
     def cmp(a: Double, b: Double): Int =
@@ -322,7 +292,7 @@ object Similarity {
       val nd =
         if (acc.isNaN || acc.isInfinite) -acc // Round passes non-finite through
         else -BigDecimal.decimal(acc)
-          .setScale(roundTo, BigDecimal.RoundingMode.HALF_UP).toDouble
+          .setScale(ScoreDigits, BigDecimal.RoundingMode.HALF_UP).toDouble
       (nd, cid)
     }.sortWith { case ((d1, c1), (d2, c2)) =>
       val d = cmp(d1, d2)
@@ -345,7 +315,7 @@ object Similarity {
     * sample at corpus scale; here it is persisted for the loop.
     */
   def trainCentroids(corpus: DataFrame, k: Int, iters: Int = 5,
-                     samplePct: Int = 25, roundTo: Int = 6): DataFrame = {
+                     samplePct: Int = 25): DataFrame = {
     require(k > 0 && iters > 0)
     val spark = corpus.sparkSession
     val sample = corpus
@@ -373,7 +343,7 @@ object Similarity {
       // (cell, component) means of the assigned sample — one narrow
       // projection + one codegen'd aggregation; K×dim rows come back
       val means = sample
-        .select(cellExpr(cents, roundTo)(col("vec")).as("cell"),
+        .select(cellExpr(cents)(col("vec")).as("cell"),
           posexplode(col("vec")))
         .groupBy("cell", "pos")
         .agg(avg(col("col")).as("m"))
@@ -417,12 +387,12 @@ object Similarity {
     * cell for a shuffle-free search side.
     */
   def ivfTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-              k: Int, roundTo: Int = 6, nprobe: Int = 1): DataFrame = {
+              k: Int, nprobe: Int = 1): DataFrame = {
     val cents = collectCentroids(centroids, "ivfTopK")
     require(nprobe >= 1, "nprobe must be >= 1")
     val c = corpus
       .select(col("id").as("cand_id"), col("vec"),
-        cellExpr(cents, roundTo)(col("vec")).as("cell"))
+        cellExpr(cents)(col("vec")).as("cell"))
       .select(col("cand_id"), col("vec").as("cv"), col("cell"), norm(col("vec")).as("cn"))
     // multi-probe: the query fans out to its nprobe best cells (recall vs
     // probed-fraction is THE IVF dial — on cluster-free corpora recall
@@ -430,12 +400,12 @@ object Similarity {
     // Cells partition the corpus, so probes never duplicate a candidate.
     val q = queries
       .select(col("id").as("query_id"), col("vec"),
-        explode(cellsExpr(cents, roundTo, nprobe)(col("vec"))).as("cell"))
+        explode(cellsExpr(cents, nprobe)(col("vec"))).as("cell"))
       .select(col("query_id"), col("vec").as("qv"), col("cell"), norm(col("vec")).as("qn"))
     val sims = broadcast(q).join(c, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
@@ -452,10 +422,10 @@ object Similarity {
         (0 until m).map(i => dot(col(s"__s$i"), col(s"__s$i")).as(s"__daa$i"))): _*)
 
   /** |a − w|² over subspace i via a·a − 2·a·w + w·w, rounded. */
-  private def pqD2(w: Array[Float], i: Int, sub: Int, roundTo: Int): Column = {
+  private def pqD2(w: Array[Float], i: Int, sub: Int): Column = {
     val wl = typedlit(w.slice(i * sub, i * sub + sub))
     round(col(s"__daa$i") - lit(2.0) * dot(col(s"__s$i"), wl) + dot(wl, wl),
-      roundTo)
+      ScoreDigits)
   }
 
   private def pqGeometry(codebook: DataFrame, m: Int):
@@ -471,17 +441,16 @@ object Similarity {
     * are written AT REST next to the data (m·log2(ksub) bits per vector)
     * and search never touches raw vectors again.
     */
-  def pqEncode(corpus: DataFrame, codebook: DataFrame, m: Int = 4,
-               roundTo: Int = 6): DataFrame = {
+  def pqEncode(corpus: DataFrame, codebook: DataFrame, m: Int = 4): DataFrame = {
     val (cents, sub) = pqGeometry(codebook, m)
-    pqEncodeWith(corpus, cents, m, sub, roundTo)
+    pqEncodeWith(corpus, cents, m, sub)
   }
 
   private def pqEncodeWith(corpus: DataFrame, cents: Array[(Long, Array[Float])],
-                           m: Int, sub: Int, roundTo: Int,
+                           m: Int, sub: Int,
                            carry: Seq[String] = Nil): DataFrame = {
     // argmin codeword per subspace, ALLOCATION-FREE: distances are
-    // rounded to `roundTo` decimals, so d·10^roundTo is integral — pack
+    // rounded to `ScoreDigits` decimals, so d·10^ScoreDigits is integral — pack
     // (distance, code) into one long (dInt·ksub + code) and take
     // `least`, then pmod recovers the code. Identical result to the
     // array_min-over-struct idiom (lexicographic (d, code), ties to the
@@ -490,10 +459,10 @@ object Similarity {
     // ksub struct + one array allocation per row — measured 15x on the
     // encode stage, the per-corpus-row cost that dominates index builds.
     val ksub = cents.length
-    val scale = math.pow(10, roundTo)
+    val scale = math.pow(10, ScoreDigits)
     val codeCols = (0 until m).map { i =>
       val packed = cents.zipWithIndex.map { case ((_, w), c) =>
-        round(pqD2(w, i, sub, roundTo) * lit(scale)).cast("long") *
+        round(pqD2(w, i, sub) * lit(scale)).cast("long") *
           lit(ksub.toLong) + lit(c.toLong)
       }
       pmod(least(packed: _*), lit(ksub.toLong)).cast("int").as(s"__c$i")
@@ -508,27 +477,26 @@ object Similarity {
     * and every candidate costs m array lookups.
     */
   def pqTopKFromCodes(queries: DataFrame, codes: DataFrame,
-                      codebook: DataFrame, k: Int, m: Int = 4,
-                      roundTo: Int = 6): DataFrame = {
+                      codebook: DataFrame, k: Int, m: Int = 4): DataFrame = {
     val (cents, sub) = pqGeometry(codebook, m)
-    pqTopKFromCodesWith(queries, codes, cents, k, m, sub, roundTo)
+    pqTopKFromCodesWith(queries, codes, cents, k, m, sub)
   }
 
   private def pqTopKFromCodesWith(queries: DataFrame, codes: DataFrame,
                                   cents: Array[(Long, Array[Float])], k: Int,
-                                  m: Int, sub: Int, roundTo: Int): DataFrame = {
+                                  m: Int, sub: Int): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val idType = codes.schema("id").dataType
     val c = codes.withColumnRenamed("id", "cand_id")
     // query -> m distance tables (ksub entries each), position-indexed
     val dtCols = (0 until m).map { i =>
-      array(cents.map { case (_, w) => pqD2(w, i, sub, roundTo) }: _*).as(s"__dt$i")
+      array(cents.map { case (_, w) => pqD2(w, i, sub) }: _*).as(s"__dt$i")
     }
     val q = pqStaged(queries, "query_id", m, sub)
       .select(col("query_id") +: dtCols: _*)
     val adc = (0 until m)
       .map(i => element_at(col(s"__dt$i"), col(s"__c$i") + 1)
-        .cast(DecimalType(18, 6)))
+        .cast(DecimalType(18, ScoreDigits)))
       .reduce(_ + _).cast("double")
     val sims = broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("cand_id"))
@@ -555,7 +523,7 @@ object Similarity {
     * squared L2 per subspace via the three-dot identity
     * |a−b|² = a·a − 2·a·b + b·b (each dot the native codegen'd
     * [[dot]], so both encode and table build stay in whole-stage
-    * codegen), rounded to `roundTo` so argmin ties and ADC sums are
+    * codegen), rounded to `ScoreDigits` so argmin ties and ADC sums are
     * engine-reproducible; per-subspace table entries sum as exact
     * decimals. Ranking: (adc asc, cand_id asc).
     *
@@ -575,13 +543,13 @@ object Similarity {
     * composition exists for one-shot use.
     */
   def pqTopK(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-             k: Int, m: Int = 4, roundTo: Int = 6): DataFrame = {
+             k: Int, m: Int = 4): DataFrame = {
     val (cents, sub) = pqGeometry(codebook, m)
     // lazy: the barrier (LogicalRDD) is what stops the codegen deferral;
     // materialization can ride the first action instead of its own job
     pqTopKFromCodesWith(queries,
-      pqEncodeWith(corpus, cents, m, sub, roundTo).cutLazy,
-      cents, k, m, sub, roundTo)
+      pqEncodeWith(corpus, cents, m, sub).cutLazy,
+      cents, k, m, sub)
   }
 
   /** IVF-PQ — the composed production ANN index: coarse quantization
@@ -603,14 +571,12 @@ object Similarity {
     * the index contract, as in [[ivfTopK]]/[[pqTopK]]).
     */
   def ivfPqTopK(queries: DataFrame, corpus: DataFrame, centroids: DataFrame,
-                codebook: DataFrame, k: Int, m: Int = 4, nprobe: Int = 1,
-                roundTo: Int = 6): DataFrame =
+                codebook: DataFrame, k: Int, m: Int = 4, nprobe: Int = 1): DataFrame =
     // one-shot composition for test/ad-hoc use; the barrier stops codegen
     // deferring the encode into the search join (see pqTopK). The real
     // deployment is ivfPqIndex + write-at-rest + ivfPqTopKFromCodes.
-    ivfPqTopKFromCodes(queries, ivfPqIndex(corpus, centroids, codebook, m,
-        roundTo).cutLazy,
-      centroids, codebook, k, m, nprobe, roundTo)
+    ivfPqTopKFromCodes(queries, ivfPqIndex(corpus, centroids, codebook, m).cutLazy,
+      centroids, codebook, k, m, nprobe)
 
   /** Residual against the vector's assigned (or supplied) cell centroid:
     * shared by the IVF-PQ index build (corpus side, argmax cell) and
@@ -636,13 +602,12 @@ object Similarity {
     * vectors never load again after the build.
     */
   def ivfPqIndex(corpus: DataFrame, centroids: DataFrame,
-                 codebook: DataFrame, m: Int = 4,
-                 roundTo: Int = 6): DataFrame = {
+                 codebook: DataFrame, m: Int = 4): DataFrame = {
     val cents = collectCentroids(centroids, "ivfPqIndex")
     val (cbCents, sub) = pqGeometry(codebook, m)
     pqEncodeWith(
-      ivfResidual(corpus, centroids, cellExpr(cents, roundTo)(col("vec"))),
-      cbCents, m, sub, roundTo, carry = Seq("cell"))
+      ivfResidual(corpus, centroids, cellExpr(cents)(col("vec"))),
+      cbCents, m, sub, carry = Seq("cell"))
       .withColumnRenamed("id", "cand_id")
   }
 
@@ -652,12 +617,13 @@ object Similarity {
     * cell the query builds its RESIDUAL distance table (the residual
     * differs per cell — asymmetric twice over) and broadcast-joins the
     * stored codes on `cell`: the index side never shuffles and never
-    * touches a raw corpus vector.
+    * touches a raw corpus vector. The query frame is collected once and
+    * bounded to [[Ids.SmallBatchKeys]] rows; more fails with a named
+    * error.
     */
   def ivfPqTopKFromCodes(queries: DataFrame, codes: DataFrame,
                          centroids: DataFrame, codebook: DataFrame, k: Int,
-                         m: Int = 4, nprobe: Int = 1,
-                         roundTo: Int = 6): DataFrame = {
+                         m: Int = 4, nprobe: Int = 1): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val cents = collectCentroids(centroids, "ivfPqTopKFromCodes")
     require(nprobe >= 1, "nprobe must be >= 1")
@@ -677,20 +643,17 @@ object Similarity {
     // the collect itself is bounded to cap+1 rows, so a corpus-sized
     // "query" frame fails with a named error instead of an
     // executor-killing broadcast.
-    val qCap = queries.sparkSession.conf
-      .getOption("spark.graft.ann.maxQueryRows").map(_.toInt)
-      .getOrElse(100000)
     val qrows = queries.select(col("id"), col("vec"))
-      .limit(qCap + 1).collect()
-    require(qrows.length <= qCap,
-      s"ivfPqTopKFromCodes: query side exceeds $qCap rows — searches are " +
-        "broadcast-bounded by contract (queries << corpus); batch the " +
-        "query frame or raise spark.graft.ann.maxQueryRows")
+      .limit(Ids.SmallBatchKeys.toInt + 1).collect()
+    require(qrows.length <= Ids.SmallBatchKeys,
+      s"ivfPqTopKFromCodes: query side exceeds Ids.SmallBatchKeys = " +
+        s"${Ids.SmallBatchKeys} rows — searches are broadcast-bounded by " +
+        "contract (queries << corpus); batch the query frame")
     val centById = cents.toMap
     val probedSet = scala.collection.mutable.LinkedHashSet.empty[Long]
     val qresRows = qrows.toSeq.flatMap { r =>
       val qv = r.getSeq[Float](1).toArray
-      topCellsDriver(qv, cents, nprobe, roundTo).map { cid =>
+      topCellsDriver(qv, cents, nprobe).map { cid =>
         probedSet += cid
         val cv = centById(cid)
         val res = new Array[Float](math.min(qv.length, cv.length))
@@ -720,13 +683,13 @@ object Similarity {
       if (probed.isEmpty) codes.filter(lit(false))
       else codes.filter(col("cell").isin(probed.toIndexedSeq: _*))
     val dtCols = (0 until m).map { i =>
-      array(cbCents.map { case (_, w) => pqD2(w, i, sub, roundTo) }: _*).as(s"__dt$i")
+      array(cbCents.map { case (_, w) => pqD2(w, i, sub) }: _*).as(s"__dt$i")
     }
     val q = pqStaged(qresid, "query_id", m, sub, carry = Seq("cell"))
       .select(col("query_id") +: col("cell") +: dtCols: _*)
     val adc = (0 until m)
       .map(i => element_at(col(s"__dt$i"), col(s"__c$i") + 1)
-        .cast(DecimalType(18, 6)))
+        .cast(DecimalType(18, ScoreDigits)))
       .reduce(_ + _).cast("double")
     val sims = broadcast(q).join(cPruned, Seq("cell"))
       .filter(col("query_id") =!= col("cand_id"))
@@ -753,9 +716,9 @@ object Similarity {
     * every other top-k here.
     */
   def pqRerank(queries: DataFrame, corpus: DataFrame, codebook: DataFrame,
-               k: Int, c: Int, m: Int = 4, roundTo: Int = 6): DataFrame = {
+               k: Int, c: Int, m: Int = 4): DataFrame = {
     require(c >= k, s"re-rank pool c=$c must be >= k=$k")
-    val adc = pqTopK(queries, corpus, codebook, c, m, roundTo)
+    val adc = pqTopK(queries, corpus, codebook, c, m)
       .select(col("query_id"), col("cand_id"))
     val cand = adc.join(
       corpus.select(col("id").as("cand_id"), col("vec").as("cv"),
@@ -765,7 +728,7 @@ object Similarity {
       norm(col("vec")).as("qn"))
     val sims = cand.join(broadcast(q), Seq("query_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
@@ -779,8 +742,7 @@ object Similarity {
     * (Spark's `bucketBy`) and neither side moves at all.
     * Vectors alone in their bucket yield no row (no candidates).
     */
-  def knnJoin(corpus: DataFrame, k: Int, bits: Int = 8,
-              roundTo: Int = 6): DataFrame = {
+  def knnJoin(corpus: DataFrame, k: Int, bits: Int = 8): DataFrame = {
     val b = corpus.select(col("id"), col("vec"),
       signBucket(col("vec"), bits).as("bucket"), norm(col("vec")).as("nrm"))
     val l = b.select(col("bucket"), col("id").as("query_id"),
@@ -790,7 +752,7 @@ object Similarity {
     val sims = l.join(r, Seq("bucket"))
       .filter(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo).as("sim"))
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits).as("sim"))
     topKPerQuery(sims, k, corpus.schema("id").dataType)
   }
 
@@ -892,8 +854,8 @@ object Similarity {
     * 4.32, e3_graph_search 4.63 → 4.10).
     */
   def nnDescentGraph(corpus: DataFrame, k: Int, iters: Int = 3,
-                     initBits: Int = 6, roundTo: Int = 6,
-                     initRings: Int = 4): DataFrame = graft.Blocks.scoped { ps =>
+                     initBits: Int = 6, initRings: Int = 4): DataFrame =
+      graft.Blocks.scoped { ps =>
     val idType = corpus.schema("id").dataType
     val c = ps.cut(
       corpus.select(col("id"), col("vec"), norm(col("vec")).as("nrm")))
@@ -906,7 +868,7 @@ object Similarity {
       .join(c.select(col("id").as("cand_id"), col("vec").as("cv"),
         col("nrm").as("cn")), Seq("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits)
           .as("sim"))
 
     // all `initRings` ring legs from ONE fused corpus scan + ordering
@@ -1092,8 +1054,8 @@ object Similarity {
     */
   def graphSearchTopK(graph: DataFrame, corpus: DataFrame,
                       queries: DataFrame, k: Int, beam: Int, hops: Int,
-                      entries: Int = 0, roundTo: Int = 6): DataFrame =
-    graphSearchCore(graph, corpus, queries, k, beam, hops, roundTo,
+                      entries: Int = 0): DataFrame =
+    graphSearchCore(graph, corpus, queries, k, beam, hops,
       if (entries > 0)
         corpus.select(col("id").as("node")).orderBy(col("node").asc)
           .limit(entries)
@@ -1126,21 +1088,20 @@ object Similarity {
   def graphSearchTopKAuto(graph: DataFrame, corpus: DataFrame,
                           queries: DataFrame, k: Int, beam: Int, hops: Int,
                           entryBits: Int = DefaultEntryBits,
-                          entryRings: Int = DefaultEntryRings,
-                          roundTo: Int = 6): DataFrame =
-    graphSearchCore(graph, corpus, queries, k, beam, hops, roundTo,
+                          entryRings: Int = DefaultEntryRings): DataFrame =
+    graphSearchCore(graph, corpus, queries, k, beam, hops,
       bucketEntryReps(corpus, entryBits, entryRings))
 
   /** The ONE pair of structural dials behind every derived entry set —
-    * the Auto variants' defaults AND the `entries = 0` default paths of
-    * [[graphSearchTopK]]/[[knnGraphExtend]] read these, so retuning
+    * [[graphSearchTopKAuto]]'s defaults AND the `entries = 0` default
+    * paths of [[graphSearchTopK]]/[[knnGraphExtend]] read these, so retuning
     * them cannot silently diverge the documented equivalence (the
     * graded auto oracles mirror four 6-bit projections).
     */
   private[graft] val DefaultEntryBits = 6
   private[graft] val DefaultEntryRings = 4
 
-  /** The shared entry-derivation pass of the two Auto operators: the
+  /** The shared entry-derivation pass of the derived-entry operators: the
     * min-id representative of every occupied (projection, bucket) cell,
     * computed in ONE corpus scan — per row, explode `rings` composite
     * keys `ring·2^bits + bucket` (disjoint per ring since bucket <
@@ -1189,8 +1150,7 @@ object Similarity {
 
   private def graphSearchCore(graph: DataFrame, corpus: DataFrame,
                               queries: DataFrame, k: Int, beam: Int,
-                              hops: Int, roundTo: Int,
-                              entry: DataFrame): DataFrame =
+                              hops: Int, entry: DataFrame): DataFrame =
       graft.Blocks.scoped { ps =>
     val idType = corpus.schema("id").dataType
     val c = ps.cut(
@@ -1213,7 +1173,7 @@ object Similarity {
         .join(c.select(col("id").as("node"), col("vec").as("cv"),
           col("nrm").as("cn")), Seq("node"))
         .select(col("query_id"), col("node"),
-          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
+          round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits)
             .as("sim"))
 
     def topPerQuery(scored: DataFrame, n: Int): DataFrame =
@@ -1328,46 +1288,19 @@ object Similarity {
     */
   def knnGraphExtend(existing: DataFrame, oldCorpus: DataFrame,
                      batch: DataFrame, k: Int, beam: Int, hops: Int,
-                     entries: Int = 0, roundTo: Int = 6,
-                     initRings: Int = 4): DataFrame =
-    knnGraphExtendCore(existing, oldCorpus, batch, k, beam, hops, roundTo,
-      initRings,
+                     entries: Int = 0, initRings: Int = 4): DataFrame =
+    knnGraphExtendCore(existing, oldCorpus, batch, k, beam, hops, initRings,
       if (entries > 0)
         oldCorpus.select(col("id").as("node")).orderBy(col("node").asc)
           .limit(entries)
       else bucketEntryReps(oldCorpus, DefaultEntryBits, DefaultEntryRings))
 
-  /** [[knnGraphExtend]] with the search leg's entry points DERIVED from
-    * the STANDING corpus (the [[graphSearchTopKAuto]] move carried to
-    * the fold — the ingest loop is exactly where nobody can hand-pick
-    * the connectivity dial per day): entries = the min-id
-    * representative of every occupied sign bucket of `oldCorpus`
-    * across `entryRings` dim-slice projections. Same legs, same
-    * terminal-cut/ownership contract; only the newcomers' beam-search
-    * entry set differs. Round15Spec pins batch-fold recall ≥ 0.9 on
-    * the 40-cluster fixture with defaults (no per-corpus constant).
-    *
-    * Scale point (ProbeFold r16, idle host, local[32], fixed
-    * 400-vector batch, standing corpus 1,600 → 19,600): auto fold
-    * 3.02 → 4.10 s (1.36× vs the 10.0 linear bar; fixed-dial twin
-    * 2.94 → 3.42 s). The auto delta is the ONE standing-corpus-sized
-    * pass the derivation adds — [[bucketEntryReps]]'s map-side-combined
-    * explode+min aggregate — everything else stays batch-sized.
-    */
-  def knnGraphExtendAuto(existing: DataFrame, oldCorpus: DataFrame,
-                         batch: DataFrame, k: Int, beam: Int, hops: Int,
-                         entryBits: Int = DefaultEntryBits,
-                         entryRings: Int = DefaultEntryRings,
-                         roundTo: Int = 6, initRings: Int = 4): DataFrame =
-    knnGraphExtendCore(existing, oldCorpus, batch, k, beam, hops, roundTo,
-      initRings, bucketEntryReps(oldCorpus, entryBits, entryRings))
-
-  /** [[knnGraphExtendAuto]] with the entry set read from a STORED
-    * entry-rep index ([[entryReps]]/[[entryRepsMerge]] output) instead
-    * of derived by scanning the standing corpus — the incremental form
-    * of the auto fold (r16 verdict item 3). A maintained index equals
-    * the fresh derivation exactly (min-merge, spec-pinned), so results
-    * are identical to [[knnGraphExtendAuto]]; the cost drops to
+  /** [[knnGraphExtend]]'s derived-entry fold (`entries = 0`) with the
+    * entry set read from a STORED entry-rep index
+    * ([[entryReps]]/[[entryRepsMerge]] output) instead of derived by
+    * scanning the standing corpus (r16 verdict item 3). A maintained
+    * index equals the fresh derivation exactly (min-merge,
+    * spec-pinned), so results are identical; the cost drops to
     * batch-sized everywhere (the standing corpus is touched only by
     * the search leg's key joins). The ingest loop this targets:
     *   reps(day N+1) = entryRepsMerge(reps(day N), batch)   // at rest
@@ -1375,9 +1308,8 @@ object Similarity {
     */
   def knnGraphExtendFromReps(existing: DataFrame, oldCorpus: DataFrame,
                              batch: DataFrame, reps: DataFrame, k: Int,
-                             beam: Int, hops: Int, roundTo: Int = 6,
-                             initRings: Int = 4): DataFrame =
-    knnGraphExtendCore(existing, oldCorpus, batch, k, beam, hops, roundTo,
+                             beam: Int, hops: Int, initRings: Int = 4): DataFrame =
+    knnGraphExtendCore(existing, oldCorpus, batch, k, beam, hops,
       initRings, reps.select("node").distinct())
 
   /** [[graphSearchTopKAuto]] against a stored entry-rep index: the
@@ -1387,14 +1319,13 @@ object Similarity {
     */
   def graphSearchTopKFromReps(graph: DataFrame, corpus: DataFrame,
                               queries: DataFrame, reps: DataFrame, k: Int,
-                              beam: Int, hops: Int,
-                              roundTo: Int = 6): DataFrame =
-    graphSearchCore(graph, corpus, queries, k, beam, hops, roundTo,
+                              beam: Int, hops: Int): DataFrame =
+    graphSearchCore(graph, corpus, queries, k, beam, hops,
       reps.select("node").distinct())
 
   private def knnGraphExtendCore(existing: DataFrame, oldCorpus: DataFrame,
                                  batch: DataFrame, k: Int, beam: Int,
-                                 hops: Int, roundTo: Int, initRings: Int,
+                                 hops: Int, initRings: Int,
                                  entry: DataFrame): DataFrame =
       graft.Blocks.scoped { ps =>
     val idType = oldCorpus.schema("id").dataType
@@ -1403,7 +1334,7 @@ object Similarity {
     // handle so this operator frees it before returning (or on a throw)
     val searchedPinned = ps.adopt(
       graphSearchCore(existing, oldCorpus, batch, k = beam, beam = beam,
-        hops = hops, roundTo = roundTo, entry = entry))
+        hops = hops, entry = entry))
     val searched = searchedPinned.drop("rnk")
     // leg 2: stripe pairs among the batch, scored exactly
     val b = ps.cut(
@@ -1425,7 +1356,7 @@ object Similarity {
       .join(b.select(col("id").as("cand_id"), col("vec").as("cv"),
         col("nrm").as("cn")), Seq("cand_id"))
       .select(col("query_id"), col("cand_id"),
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo)
+        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), ScoreDigits)
           .as("sim"))
     val batchLists = topKPerQuery(
       searched.unionByName(bb), k, idType)
@@ -1455,12 +1386,12 @@ object Similarity {
     * projection — no shuffle, no state. Zero vectors get scale 1 so
     * codes are well-defined (all zero).
     */
-  def int8Quantize(corpus: DataFrame, roundTo: Int = 6): DataFrame = {
+  def int8Quantize(corpus: DataFrame): DataFrame = {
     val maxAbs = array_max(transform(col("vec"), x => abs(x.cast("double"))))
     val scale = when(maxAbs > 0, maxAbs / lit(127.0)).otherwise(lit(1.0))
     corpus.select(col("id"), col("vec"), scale.as("__sc"))
       .select(col("id"),
-        round(col("__sc"), roundTo).as("scale"),
+        round(col("__sc"), ScoreDigits).as("scale"),
         transform(col("vec"),
           x => round(x.cast("double") / col("__sc")).cast("int")).as("codes"))
   }
@@ -1481,7 +1412,7 @@ object Similarity {
     * is one narrow codegen'd projection over the ORIGINAL values — no
     * join, no second shuffle. Zero-variance dimensions map to 0.
     */
-  def standardizeDims(corpus: DataFrame, roundTo: Int = 6): DataFrame = {
+  def standardizeDims(corpus: DataFrame): DataFrame = {
     val S = 1048576.0 // 2^20
     val stats = corpus
       .select(posexplode(col("vec")))
@@ -1512,7 +1443,7 @@ object Similarity {
       transform(col("vec"), (x, i) => {
         val sg = element_at(sigLit, i + 1)
         when(sg > 0,
-          round((x.cast("double") - element_at(muLit, i + 1)) / sg, roundTo))
+          round((x.cast("double") - element_at(muLit, i + 1)) / sg, ScoreDigits))
           .otherwise(lit(0.0))
       }).as("z"))
   }
@@ -1565,8 +1496,7 @@ object Similarity {
     * no mutable hash buffer, irrelevant at hit cardinality).
     */
   def semanticDecontaminateExact(train: DataFrame, eval: DataFrame,
-                                 threshold: Double,
-                                 roundTo: Int = 6): DataFrame = {
+                                 threshold: Double): DataFrame = {
     // zero-norm vectors (failed-embedding artifacts) have no direction:
     // without the guard their cosine is NaN, and Spark orders NaN above
     // every double, so ONE degenerate eval vector would flag the entire
@@ -1578,7 +1508,7 @@ object Similarity {
       .filter(col("tn") > 0)
       .crossJoin(broadcast(ev))
       .select(col("id"), col("eval_id"),
-        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), roundTo)
+        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), ScoreDigits)
           .as("sim"))
       .filter(col("sim") >= threshold)
     decontamFlags(hits)
@@ -1612,7 +1542,7 @@ object Similarity {
     */
   def semanticDecontaminate(train: DataFrame, eval: DataFrame,
                             threshold: Double, bits: Int = 8,
-                            rings: Int = 4, roundTo: Int = 6): DataFrame = {
+                            rings: Int = 4): DataFrame = {
     def ringKeys(v: Column): Column =
       array((0 until math.max(1, rings)).map(j =>
         signBucketAt(v, bits, j * bits) + lit(j.toLong * (1L << bits))): _*)
@@ -1625,7 +1555,7 @@ object Similarity {
       .filter(col("tn") > 0)
       .join(broadcast(ev), Seq("__b"))
       .select(col("id"), col("eval_id"),
-        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), roundTo)
+        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), ScoreDigits)
           .as("sim"))
       .filter(col("sim") >= threshold)
       .distinct() // a pair sharing r rings scored r times, identically
@@ -1639,13 +1569,12 @@ object Similarity {
     * Build once per benchmark release; decontamination runs read it
     * forever after.
     */
-  def evalIvfIndex(eval: DataFrame, centroids: DataFrame,
-                   roundTo: Int = 6): DataFrame = {
+  def evalIvfIndex(eval: DataFrame, centroids: DataFrame): DataFrame = {
     val cents = collectCentroids(centroids, "evalIvfIndex")
     // same zero-norm exclusion contract as the exact path (NaN cosine)
     eval.select(col("id").as("eval_id"), col("vec").as("ev"),
         norm(col("vec")).as("en"),
-        cellExpr(cents, roundTo)(col("vec")).as("cell"))
+        cellExpr(cents)(col("vec")).as("cell"))
       .filter(col("en") > 0)
   }
 
@@ -1665,18 +1594,17 @@ object Similarity {
     */
   def semanticDecontaminateIvfIndexed(train: DataFrame, evalIndex: DataFrame,
                                       centroids: DataFrame, threshold: Double,
-                                      nprobe: Int = 1,
-                                      roundTo: Int = 6): DataFrame = {
+                                      nprobe: Int = 1): DataFrame = {
     val cents = collectCentroids(centroids, "semanticDecontaminateIvfIndexed")
     require(nprobe >= 1, "nprobe must be >= 1")
     val hits = train
       .select(col("id"), col("vec"), norm(col("vec")).as("tn"),
-        explode(cellsExpr(cents, roundTo, nprobe)(col("vec"))).as("cell"))
+        explode(cellsExpr(cents, nprobe)(col("vec"))).as("cell"))
       .filter(col("tn") > 0)
       .join(broadcast(evalIndex.select(col("eval_id"), col("ev"),
         col("en"), col("cell"))), Seq("cell"))
       .select(col("id"), col("eval_id"),
-        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), roundTo)
+        round(dot(col("vec"), col("ev")) / (col("tn") * col("en")), ScoreDigits)
           .as("sim"))
       .filter(col("sim") >= threshold)
     decontamFlags(hits)
@@ -1688,10 +1616,9 @@ object Similarity {
     */
   def semanticDecontaminateIvf(train: DataFrame, eval: DataFrame,
                                centroids: DataFrame, threshold: Double,
-                               nprobe: Int = 1, roundTo: Int = 6): DataFrame =
+                               nprobe: Int = 1): DataFrame =
     semanticDecontaminateIvfIndexed(train,
-      evalIvfIndex(eval, centroids, roundTo), centroids, threshold, nprobe,
-      roundTo)
+      evalIvfIndex(eval, centroids), centroids, threshold, nprobe)
 
   /** Shared tail of the decontamination pair scorers: collapse hit
     * pairs to one row per contaminated train id with a deterministic
@@ -1708,8 +1635,7 @@ object Similarity {
   /** E2 (embedding flavour) — near-duplicate pairs by cosine >= threshold,
     * blocked by shared LSH bucket so the self-join never goes quadratic.
     */
-  def nearDupPairs(corpus: DataFrame, threshold: Double, bits: Int = 8,
-                   roundTo: Int = 6): DataFrame = {
+  def nearDupPairs(corpus: DataFrame, threshold: Double, bits: Int = 8): DataFrame = {
     val b = corpus.select(col("id"), col("vec"),
       signBucket(col("vec"), bits).as("bucket"), norm(col("vec")).as("nrm"))
     val l = b.select(col("bucket"), col("id").as("id1"), col("vec").as("v1"),
@@ -1719,7 +1645,7 @@ object Similarity {
     l.join(r, Seq("bucket"))
       .filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
-        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), roundTo).as("sim"))
+        round(dot(col("v1"), col("v2")) / (col("n1") * col("n2")), ScoreDigits).as("sim"))
       .filter(col("sim") >= threshold)
   }
 
@@ -1736,7 +1662,7 @@ object Similarity {
     * ~dims² wide row), then the pair rows unfold from that single row —
     * no per-pair pass, no shuffle of the data by pair.
     */
-  def dimCovariance(corpus: DataFrame, dims: Int, roundTo: Int = 6): DataFrame = {
+  def dimCovariance(corpus: DataFrame, dims: Int): DataFrame = {
     val S = 1048576.0 // 2^20
     val pairs = for { i <- 1 to dims; j <- i to dims } yield (i, j)
     val q = corpus.select((1 to dims).map(i =>
@@ -1753,7 +1679,7 @@ object Similarity {
       struct(lit(i).as("i"), lit(j).as("j"),
         round(col(s"p${i}_$j") / (col("n") * lit(S) * lit(S)) -
           (col(s"s$i") / (col("n") * lit(S))) *
-            (col(s"s$j") / (col("n") * lit(S))), roundTo).as("cov"))
+            (col(s"s$j") / (col("n") * lit(S))), ScoreDigits).as("cov"))
     }
     a.select(explode(array(rows: _*)).as("pr"))
       .select(col("pr.i").as("i"), col("pr.j").as("j"), col("pr.cov").as("cov"))
@@ -1801,13 +1727,12 @@ object Similarity {
     * half: the component ships as literals, the dot product is a fixed
     * chain, one narrow pass over the corpus.
     */
-  def pcaProject(corpus: DataFrame, dims: Int, iters: Int,
-                 roundTo: Int = 6): DataFrame = {
+  def pcaProject(corpus: DataFrame, dims: Int, iters: Int): DataFrame = {
     val v = pcaComponent(corpus, dims, iters)
     val proj = (2 to dims).foldLeft(
       element_at(col("vec"), 1).cast("double") * lit(v(0)): Column)((acc, j) =>
       acc + element_at(col("vec"), j).cast("double") * lit(v(j - 1)))
-    corpus.select(col("id"), round(proj, roundTo).as("proj"))
+    corpus.select(col("id"), round(proj, ScoreDigits).as("proj"))
   }
 
   /** Discounted-gain weight for rank r (binary relevance): 1/log2(r+1).
@@ -1853,8 +1778,8 @@ object Similarity {
       .reduceLeft(_ + _)
     agged.select(col("query_id"), col("n_rel").cast("long").as("n_rel"),
       round(when(col("__fr").isNotNull,
-        lit(1.0) / col("__fr").cast("double")).otherwise(lit(0.0)), 6).as("mrr"),
-      round(when(col("n_rel") > 0, dcg / idcg).otherwise(lit(0.0)), 6).as("ndcg"))
+        lit(1.0) / col("__fr").cast("double")).otherwise(lit(0.0)), ScoreDigits).as("mrr"),
+      round(when(col("n_rel") > 0, dcg / idcg).otherwise(lit(0.0)), ScoreDigits).as("ndcg"))
   }
 
   /** SemDeDup/D4-style prototypicality triage (Abbas et al. 2023;
@@ -1881,8 +1806,7 @@ object Similarity {
     * approx-quantile cosine threshold per label to avoid the per-label
     * sort; the graded query pins the exact rank semantics.
     */
-  def protoPrune(corpus: DataFrame, dims: Int, tailFrac: Double,
-                 roundTo: Int = 6): DataFrame = {
+  def protoPrune(corpus: DataFrame, dims: Int, tailFrac: Double): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val S = 1048576.0 // 2^20 — same fixed-point scale as dimCovariance
     val q = corpus.select(Seq(col("id"), col("label"), col("vec")) ++
@@ -1899,7 +1823,7 @@ object Similarity {
       .select(col("id"), col("label"),
         round(dotHof(col("vec"), col("cent")) /
           (sqrt(dotHof(col("vec"), col("vec"))) *
-            sqrt(dotHof(col("cent"), col("cent")))), roundTo).as("cos"))
+            sqrt(dotHof(col("cent"), col("cent")))), ScoreDigits).as("cos"))
     val w = Window.partitionBy("label")
     val tail = ceil(lit(tailFrac) * col("nn").cast("double"))
     cos

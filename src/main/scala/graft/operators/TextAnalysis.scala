@@ -83,7 +83,7 @@ object TextAnalysis {
     qualityMetrics(df, idCol, textCol, carry).withColumn("quality",
       round(least(col("n_tokens").cast("double") / lit(100.0), lit(1.0)) * lit(0.5)
         + col("distinct_ratio") * lit(0.3)
-        + least(col("stopword_ratio") * lit(5.0), lit(1.0)) * lit(0.2), 6))
+        + least(col("stopword_ratio") * lit(5.0), lit(1.0)) * lit(0.2), ScoreDigits))
 
   /** Document fingerprint: portable 30-bit polynomial hash of the text —
     * the cheap exact-dup / shard-routing key (rolling hash over chars).
@@ -402,7 +402,7 @@ object TextAnalysis {
         .otherwise(lit(0.0))
     }.reduce(_ + _)
     perDoc.crossJoin(broadcast(stats))
-      .select(col(idCol), round(score, 6).as("score"))
+      .select(col(idCol), round(score, ScoreDigits).as("score"))
   }
 
   /** Inverted index (token -> posting list): the retrieval-side artifact
@@ -451,7 +451,7 @@ object TextAnalysis {
       .join(hits, Seq("id"), "left")
       .select(col("id"), col("n_tokens"),
         round(coalesce(col("n_invocab"), lit(0L)).cast("double")
-          / col("n_tokens"), 6).as("coverage"))
+          / col("n_tokens"), ScoreDigits).as("coverage"))
   }
 
   /** Unigram language-model score — avg log p(token) under the corpus'
@@ -475,11 +475,11 @@ object TextAnalysis {
     val total = tf.agg(sum(col("tf")).cast("double").as("n_total"))
     ex.join(tf, "token")
       .crossJoin(broadcast(total))
-      .select(col("id"), round(log(col("tf").cast("double") / col("n_total")), 6)
-        .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("lp"))
+      .select(col("id"), round(log(col("tf").cast("double") / col("n_total")), ScoreDigits)
+        .cast(org.apache.spark.sql.types.DecimalType(18, ScoreDigits)).as("lp"))
       .groupBy("id")
       .agg(count(lit(1)).as("n_tokens"),
-        round((sum(col("lp")).cast("double") / count(lit(1))), 6).as("avg_logprob"))
+        round((sum(col("lp")).cast("double") / count(lit(1))), ScoreDigits).as("avg_logprob"))
   }
 
   /** C4-style rule-chain document filter: the classic cheap cleaning
@@ -545,7 +545,7 @@ object TextAnalysis {
     docTok.join(dfreq, "token")
       .crossJoin(broadcast(nDocs))
       .select(col("doc"), col("token"), col("tf"),
-        round(col("tf") * log(col("n_docs") / col("df")), 6).as("tfidf"))
+        round(col("tf") * log(col("n_docs") / col("df")), ScoreDigits).as("tfidf"))
   }
 
   /** Fixed-COUNT per-stratum deterministic sample: exactly
@@ -660,7 +660,7 @@ object TextAnalysis {
         size(array_distinct(col("sh"))).as("n_distinct"),
         when(size(col("sh")) > 0,
           round(lit(1.0) - size(array_distinct(col("sh"))).cast("double") /
-            size(col("sh")).cast("double"), 6))
+            size(col("sh")).cast("double"), ScoreDigits))
           .otherwise(lit(0.0)).as("rep_ratio"))
 
   /** Lexical-diversity stats per document: token count, type count
@@ -691,7 +691,7 @@ object TextAnalysis {
         size(filter(sequence(lit(1), col("n_tokens")),
           i => firstOfRun(i) && lastOfRun(i))).as("n_hapax"))
       .withColumn("ttr",
-        round(col("n_types").cast("double") / col("n_tokens"), 6))
+        round(col("n_types").cast("double") / col("n_tokens"), ScoreDigits))
   }
 
   /** Bigram LM score: avg log p(w_i | w_{i-1}) under the corpus' own
@@ -725,12 +725,12 @@ object TextAnalysis {
     val lpByBigram = tf2
       .join(ctx, split(col("bg"), " ").getItem(0) === ctx("w1"))
       .select(col("bg"),
-        round(log(col("tf2").cast("double") / col("c1").cast("double")), 6)
-          .cast(org.apache.spark.sql.types.DecimalType(18, 6)).as("lp"))
+        round(log(col("tf2").cast("double") / col("c1").cast("double")), ScoreDigits)
+          .cast(org.apache.spark.sql.types.DecimalType(18, ScoreDigits)).as("lp"))
     ex.join(lpByBigram, "bg")
       .groupBy("id")
       .agg(count(lit(1)).as("n_bigrams"),
-        round(sum(col("lp")).cast("double") / count(lit(1)), 6).as("avg_logprob"))
+        round(sum(col("lp")).cast("double") / count(lit(1)), ScoreDigits).as("avg_logprob"))
   }
 
   /** Epoch schedule for multi-source token equalization — the upsampling
@@ -808,11 +808,11 @@ object TextAnalysis {
       .select(col("id"),
         coalesce(col("__tot2"), lit(0L)).cast("int").as("n_2grams"),
         when(col("__tot2").isNotNull,
-          round(col("__top2") / col("__tot2"), 6))
+          round(col("__top2") / col("__tot2"), ScoreDigits))
           .otherwise(lit(0.0)).as("top_2gram_frac"),
         coalesce(col("__tot3"), lit(0L)).cast("int").as("n_3grams"),
         when(col("__tot3").isNotNull,
-          round(col("__top3") / col("__tot3"), 6))
+          round(col("__top3") / col("__tot3"), ScoreDigits))
           .otherwise(lit(0.0)).as("top_3gram_frac"))
   }
 
@@ -859,32 +859,23 @@ object TextAnalysis {
   def preTokens(text: Column): Column =
     regexp_extract_all(text, lit(PreTokenRe), lit(0))
 
-  /** Subword VOCABULARY from the corpus' own statistics: every substring
-    * of length 2..maxSubLen of every pre-token, weighted by the
-    * pre-token's corpus frequency; the `vocabSize` heaviest substrings
-    * (weight desc, then lexicographic — a deterministic total order)
-    * form the vocab. Single characters are implicitly always in-vocab
-    * (the UNK fallback), like a byte-level BPE's base alphabet.
+  /** Subword VOCABULARY from the corpus' own statistics, over a (pt, cf)
+    * pre-token frequency frame: every substring of length 2..maxSubLen
+    * of every pre-token, weighted by the pre-token's corpus frequency;
+    * the `vocabSize` heaviest substrings (weight desc, then
+    * lexicographic — a deterministic total order) form the vocab.
+    * Single characters are implicitly always in-vocab (the UNK
+    * fallback), like a byte-level BPE's base alphabet.
     *
     * Scale: substrings explode over the DISTINCT-pre-token frequency
     * table (Zipf-bounded), never the corpus; the top-k window runs over
     * the aggregated substring table (same contract as vocabCoverage —
     * swap a heavy-hitters sketch at true scale, the shape is unchanged).
+    * [[subwordCounts]] shares one frequency table between the vocab
+    * build and the walk.
     */
-  def subwordVocab(df: DataFrame, textCol: String, vocabSize: Int = 256,
-                   maxSubLen: Int = 6): DataFrame =
-    subwordVocabFromPtf(
-      df.select(explode(preTokens(col(textCol))).as("pt"))
-        .groupBy("pt").agg(count(lit(1)).as("cf")),
-      vocabSize, maxSubLen)
-
-  /** [[subwordVocab]] over a precomputed (pt, cf) pre-token frequency
-    * frame — callers that already hold the Zipf-bounded frequency table
-    * (subwordCounts shares one between the vocab build and the walk)
-    * skip re-exploding the corpus.
-    */
-  def subwordVocabFromPtf(ptf: DataFrame, vocabSize: Int,
-                          maxSubLen: Int): DataFrame = {
+  private[graft] def subwordVocabFromPtf(ptf: DataFrame, vocabSize: Int,
+                                         maxSubLen: Int): DataFrame = {
     require(vocabSize > 0 && maxSubLen >= 2)
     val subs = ptf
       .select(col("pt"), col("cf"),
@@ -907,7 +898,7 @@ object TextAnalysis {
   }
 
   /** GREEDY longest-match subword token counts per document against
-    * [[subwordVocab]] — real subword-denominated counts for the
+    * [[subwordVocabFromPtf]] — real subword-denominated counts for the
     * budget/packing/mixture operators, one step past the whitespace
     * counter. Encoding: per pre-token, from the left repeatedly take
     * the longest vocab substring starting at the cursor (one char when
@@ -996,8 +987,7 @@ object TextAnalysis {
     * token skew), one scalar rollup. Nothing driver-side but the two
     * total counts.
     */
-  def tokenDrift(ref: DataFrame, cur: DataFrame, textCol: String,
-                 roundTo: Int = 6): DataFrame = {
+  def tokenDrift(ref: DataFrame, cur: DataFrame, textCol: String): DataFrame = {
     def counts(df: DataFrame) = df
       .select(explode(tokens(col(textCol))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
@@ -1017,7 +1007,7 @@ object TextAnalysis {
       .agg(max(col("rt")).as("n_ref_tokens"), max(col("ct")).as("n_cur_tokens"),
         round(sum(round(term, 9)
           .cast(org.apache.spark.sql.types.DecimalType(38, 9))).cast("double"),
-          roundTo).as("js_divergence"))
+          ScoreDigits).as("js_divergence"))
   }
 
   def epochSchedule(df: DataFrame, idCol: String, textCol: String,
@@ -1088,7 +1078,7 @@ object TextAnalysis {
           .orderBy(desc("__sim"), col("id"))))
       .filter(col("rnk") <= k)
       .select(col("query_id"), col("rnk").cast("int").as("rnk"),
-        col("id").as(idCol), round(col("__sim"), 6).as("sim"))
+        col("id").as(idCol), round(col("__sim"), ScoreDigits).as("sim"))
   }
 
   /** DSIR-style importance weights (Xie et al. 2023, "Data Selection
@@ -1147,6 +1137,6 @@ object TextAnalysis {
     hist.join(broadcast(lr), "b")
       .groupBy("id")
       .agg(sum(col("c").cast("decimal(18,0)") * col("lr")).as("w"))
-      .select(col("id").as(idCol), round(col("w").cast("double"), 6).as("dsir_logw"))
+      .select(col("id").as(idCol), round(col("w").cast("double"), ScoreDigits).as("dsir_logw"))
   }
 }

@@ -3,6 +3,7 @@ package graft.star
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Ids
 
 /** Type-2 slowly-changing dimension builder — the historization step the
   * reference's star schema stops short of (its dims are snapshot-only;
@@ -140,11 +141,10 @@ object Scd2 {
     * same-attribute events, because the watermark saw them.
     *
     * Scale: the late-key set is the contract-violation tail, ENFORCED —
-    * the tail collect is bounded to `spark.graft.scd2.lateMaxKeys`
-    * (default 1M) + 1 rows and an over-cap batch fails loud — or, with
-    * `spark.graft.scd2.lateFallback=true`, rebuilds the whole dimension
-    * from `rawEvents` ∪ `changes` automatically (exactly the full
-    * rebuild the per-key late leg approximates). The collected tail becomes
+    * the tail collect is bounded to [[Ids.SmallBatchKeys]] + 1 rows,
+    * and a batch with more late keys rebuilds the whole dimension from
+    * `rawEvents` ∪ `changes` instead (exactly the full rebuild the
+    * per-key late leg approximates). The collected tail becomes
     * a broadcast local relation consumed by the four anti/semi joins
     * (collected ONCE — left lazy, each broadcast would re-run the
     * batch aggregate, the e11_sessions_incr_late plan audit). Work is
@@ -162,23 +162,14 @@ object Scd2 {
                        nk: Seq[String], ts: Column, tieBreak: Seq[Column],
                        attrs: Seq[String]): DataFrame = {
     val spark = prior.sparkSession
-    val lateCap = spark.conf.getOption("spark.graft.scd2.lateMaxKeys")
-      .map(_.toInt).getOrElse(1000000)
+    val lateCap = Ids.SmallBatchKeys.toInt
     val lkRows = changes.groupBy(nk.map(col): _*).agg(min(ts).as("__cmin"))
       .join(hwm, nk)
       .filter(col("__cmin") <= col("hwm_ts")) // the violating tail
       .select(nk.map(col): _*).limit(lateCap + 1).collect()
-    if (lkRows.length > lateCap) {
-      if (spark.conf.getOption("spark.graft.scd2.lateFallback")
-          .contains("true"))
-        return build(rawEvents.select(changes.columns.map(col).toSeq: _*)
-          .unionByName(changes), nk, ts, tieBreak, attrs)
-      throw new IllegalArgumentException(
-        s"applyChangesLate: more than $lateCap late keys — the batch is " +
-          "not a late TAIL; rebuild from raw events instead (set " +
-          "spark.graft.scd2.lateFallback=true to do that automatically), " +
-          "or raise spark.graft.scd2.lateMaxKeys")
-    }
+    if (lkRows.length > lateCap)
+      return build(rawEvents.select(changes.columns.map(col).toSeq: _*)
+        .unionByName(changes), nk, ts, tieBreak, attrs)
     val lateKeys = {
       import scala.jdk.CollectionConverters._
       import org.apache.spark.sql.types.StructType

@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.ScoreDigits
 
 /** Structured Streaming twins of the batch event operators (E11 garnish —
   * the graded, oracle-compared path is graft.operators.Sessionize; these
@@ -97,9 +98,7 @@ object StreamingOps {
     * the batch extractor; state is ONE long per distinct hash in the
     * horizon. Non-decodable payloads fall back to the labeled payload
     * hash, so distinct garbage rows are never merged. Hamming-0 twins
-    * only (re-encodes, metadata changes); batch
-    * [[graft.multimodal.Multimodal.phashPairs]] remains the tool for
-    * hamming > 0.
+    * only (re-encodes, metadata changes).
     */
   def imageDedup(media: DataFrame, tsCol: String,
                  watermark: String = "30 minutes"): DataFrame = {
@@ -176,8 +175,7 @@ object StreamingOps {
     * would flag everything), and a zero-norm STREAM row survives (it
     * cannot be semantically close to anything).
     */
-  def decontamFilter(stream: DataFrame, eval: DataFrame, threshold: Double,
-                     roundTo: Int = 6): DataFrame = {
+  def decontamFilter(stream: DataFrame, eval: DataFrame, threshold: Double): DataFrame = {
     val ev = eval
       .select(col("id").as("__eid"), col("vec").as("__ev"),
         graft.operators.Similarity.norm(col("vec")).as("__en"))
@@ -187,7 +185,7 @@ object StreamingOps {
       .withColumn("__tn", graft.operators.Similarity.norm(col("vec")))
       .join(broadcast(ev),
         col("__tn") > 0 &&
-          round(dot / (col("__tn") * col("__en")), roundTo) >= threshold,
+          round(dot / (col("__tn") * col("__en")), ScoreDigits) >= threshold,
         "left_anti")
       .drop("__tn")
   }

@@ -53,7 +53,7 @@ class Round15Spec extends SparkSpec {
     assert(recall >= 0.9, f"auto-entry recall $recall%.4f below 0.9")
   }
 
-  test("knnGraphExtendAuto: fold recall >= 0.9 with operator-derived entries (no dial)") {
+  test("knnGraphExtendFromReps: fold recall >= 0.9 with operator-derived entries") {
     val rnd = new scala.util.Random(42)
     def unit(): Array[Float] = {
       val v = Array.fill(64)(rnd.nextGaussian())
@@ -72,10 +72,11 @@ class Round15Spec extends SparkSpec {
       .select("query_id", "cand_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val g = operators.Similarity.nnDescentGraph(old, 5, iters = 3)
-    // defaults only — the fold derives its search-leg entry set from
-    // the standing corpus (Round14Spec's twin hand-sets entries = 64)
-    val ext = operators.Similarity.knnGraphExtendAuto(
-      g, old, batch, k = 5, beam = 8, hops = 3)
+    // the search-leg entry set is derived from the standing corpus
+    // (Round14Spec's twin hand-sets entries = 64)
+    val ext = operators.Similarity.knnGraphExtendFromReps(
+      g, old, batch, operators.Similarity.entryReps(old), k = 5, beam = 8,
+      hops = 3)
     val exactB = edges(operators.Similarity.bruteForceTopK(batch, all, 5))
     val gotB = edges(ext.filter(col("query_id") % 200 < 40))
     val recallB = (gotB & exactB).size.toDouble / exactB.size

@@ -188,14 +188,15 @@ class Round17Spec extends SparkSpec {
     val fresh = Similarity.entryReps(e).orderBy("__eb").collect().toSeq
     assert(folded == fresh)
     // and therefore the incremental fold is RESULT-IDENTICAL to the
-    // corpus-rescanning auto fold (same entries -> same beam search)
+    // corpus-rescanning fold, knnGraphExtend's derived-entry default
+    // (same entries -> same beam search)
     val old = e.filter(col("id") % 5 =!= 0)
     val batch = e.filter(col("id") % 5 === 0)
     val reps = Similarity.entryRepsMerge(
       Similarity.entryReps(old.filter(col("id") % 5 <= 2)),
       old.filter(col("id") % 5 >= 3))
     val g = Similarity.nnDescentGraph(old, k = 3, iters = 2, initBits = 6)
-    val auto = Similarity.knnGraphExtendAuto(g, old, batch,
+    val auto = Similarity.knnGraphExtend(g, old, batch,
       k = 3, beam = 4, hops = 2)
     val fromReps = Similarity.knnGraphExtendFromReps(g, old, batch, reps,
       k = 3, beam = 4, hops = 2)

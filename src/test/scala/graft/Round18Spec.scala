@@ -200,11 +200,11 @@ class Round18Spec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray)).sortBy(_._1)
     for (p <- Seq(1, 2, 4)) {
       val want = e.select(col("id"),
-          Similarity.cellsExpr(cents, 6, p)(col("vec")).as("cells"))
+          Similarity.cellsExpr(cents, p)(col("vec")).as("cells"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
       val got = e.select(col("id"), col("vec")).collect().map { r =>
         r.getLong(0) -> Similarity.topCellsDriver(
-          r.getSeq[Float](1).toArray, cents, p, 6).toSeq
+          r.getSeq[Float](1).toArray, cents, p).toSeq
       }.toMap
       assert(got == want, s"nprobe=$p driver cells diverge from cellsExpr")
     }

@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
-import graft.operators.{Dedup, Sessionize, Similarity}
+import graft.operators.{Dedup, Ids, Sessionize, Similarity}
 import graft.star.Scd2
 
 /** Round-19 pins.
@@ -12,18 +12,19 @@ import graft.star.Scd2
   * The last three "bounded by contract" driver collects are now
   * bounded by GUARD (r18 verdict item 2): sessionsFoldLate's late
   * tail, ivfPqTopKFromCodes' query side, and markovStationary's
-  * transition matrix each collect at most cap+1 rows and fail with a
-  * named error over the cap — plus the stretch item: the late fold can
-  * fall back to full re-sessionization automatically
-  * (spark.graft.sessions.lateFallback), both semantics being
-  * property-proven equal.
+  * transition matrix each collect at most Ids.SmallBatchKeys + 1 rows.
+  * Past that gate the late fold takes full re-sessionization (the two
+  * semantics are property-proven equal) and the other two fail with a
+  * named error. Each case here crosses the real gate, with
+  * Ids.SmallBatchKeys + 1 keys, rows or transitions.
   *
   * SCD2 completes the sessionsFoldLate pattern (r18 verdict item 3):
   * the per-key event-time high-watermark at rest gates EXACTLY — it
   * catches the mid-regime replay the dimension-only gate provably
   * cannot (the blind-spot fixture here shows applyChanges silently
   * diverging) — and applyChangesLate routes violating keys through a
-  * raw-event replay that equals the full rebuild.
+  * raw-event replay that equals the full rebuild, or rebuilds the whole
+  * dimension past the same gate.
   *
   * The pack pipeline's at-rest twin (r18 verdict item 4): packing
   * derives every corpus-wide decision from stored counts and
@@ -57,109 +58,88 @@ class Round19Spec extends SparkSpec {
     p +: kids.flatMap(flatten)
   }
 
-  private def ev(rows: Seq[(Long, Long, Long)]): DataFrame = {
-    import spark.implicits._
-    rows.toDF("user_id", "tsMs", "event_id")
-      .select(col("user_id"), timestamp_millis(col("tsMs")).as("ts"),
-        col("event_id"))
-  }
-
-  private def canonSess(d: DataFrame): Seq[(Long, Long, Long, Long, Int)] =
-    d.select("user_id", "start_ms", "end_ms", "n_events", "open")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getInt(4))).sorted.toSeq
-
   private val G = 600000L // the 10-minute gap in ms
 
   // ---------------------------------------------------------------------
   // Guarded collects (r18 verdict item 2)
   // ---------------------------------------------------------------------
 
-  test("sessionsFoldLate fails loud when the late tail exceeds the key cap") {
-    // history: users 1 and 2 each with one event at t=2G; batch: BOTH
-    // users replay an event at t=0 (every key late)
-    val snap = Sessionize.sessionsSnapshot(
-      ev(Seq((1L, 2 * G, 1L), (2L, 2 * G, 2L))), "user_id", "ts", "event_id", 10)
-    val batch = ev(Seq((1L, 0L, 3L), (2L, 0L, 4L)))
-    spark.conf.set("spark.graft.sessions.lateMaxKeys", "1")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Sessionize.sessionsFoldLate(snap, batch, "user_id", "ts",
-          "event_id", 10).collect()
-      }
-      assert(e.getMessage.contains("late keys"))
-      assert(e.getMessage.contains("lateFallback"))
-    } finally spark.conf.unset("spark.graft.sessions.lateMaxKeys")
-  }
+  /** Ids.SmallBatchKeys + 1: one unit past every gate below. */
+  private val overGate = Ids.SmallBatchKeys + 1
+
+  /** Both frames hold the same rows, duplicates included. */
+  private def sameRows(a: DataFrame, b: DataFrame): Boolean =
+    a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
 
   test("sessionsFoldLate over-cap auto-fallback equals full re-sessionization") {
-    // same over-cap fixture, fallback on: result must equal recomputing
-    // sessions over ALL events — including cross-session fusion (user 1's
-    // late event at G bridges nothing; user 2's at 2G-G/2 fuses)
-    val hist = Seq((1L, 2 * G, 1L), (2L, 2 * G, 2L), (2L, 3 * G + 1, 5L))
-    val late = Seq((1L, 0L, 3L), (2L, 2 * G - G / 2, 4L))
-    val snap = Sessionize.sessionsSnapshot(ev(hist), "user_id", "ts",
+    // every one of overGate users is late: history holds one event at
+    // 2G (plus 3G+1 for even users), the batch replays one at 0 for odd
+    // users (a new session) and at 2G - G/2 for even users (fuses)
+    val u = spark.range(overGate).select(col("id").as("user_id"))
+    def at(ms: Column, eid: Column) = u.select(col("user_id"),
+      timestamp_millis(ms).as("ts"), eid.as("event_id"))
+    val even = col("user_id") % 2 === 0
+    val hist = at(lit(2 * G), col("user_id"))
+      .unionByName(at(lit(3 * G + 1), col("user_id") + overGate).filter(even))
+    val late = at(when(even, lit(2 * G - G / 2)).otherwise(lit(0L)),
+      col("user_id") + 2 * overGate)
+    val snap = Sessionize.sessionsSnapshot(hist, "user_id", "ts",
       "event_id", 10)
-    spark.conf.set("spark.graft.sessions.lateMaxKeys", "1")
-    spark.conf.set("spark.graft.sessions.lateFallback", "true")
-    try {
-      val got = Sessionize.sessionsFoldLate(snap, ev(late), "user_id", "ts",
-        "event_id", 10)
-      val want = Sessionize.sessionsSnapshot(ev(hist ++ late), "user_id",
-        "ts", "event_id", 10)
-      assert(canonSess(got) == canonSess(want))
-    } finally {
-      spark.conf.unset("spark.graft.sessions.lateMaxKeys")
-      spark.conf.unset("spark.graft.sessions.lateFallback")
-    }
+    val got = Sessionize.sessionsFoldLate(snap, late, "user_id", "ts",
+      "event_id", 10)
+    val want = Sessionize.sessionsSnapshot(hist.unionByName(late), "user_id",
+      "ts", "event_id", 10)
+    val cols = Seq("user_id", "start_ms", "end_ms", "n_events", "open").map(col)
+    assert(want.count() == 2 * overGate)
+    assert(sameRows(got.select(cols: _*), want.select(cols: _*)))
   }
 
   test("ivfPqTopKFromCodes fails loud when the query frame exceeds the row cap") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id").as("id"), col("embedding").as("vec"))
-    val cents = emb.filter(col("id") >= 8 && col("id") < 12)
-    val cb = emb.filter(col("id") < 8)
-    val idx = Similarity.ivfPqIndex(emb, cents, cb, m = 4)
-    val queries = emb.filter(col("id") < 3)
-    spark.conf.set("spark.graft.ann.maxQueryRows", "2")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Similarity.ivfPqTopKFromCodes(queries, idx, cents, cb, k = 1)
-          .collect()
-      }
-      assert(e.getMessage.contains("maxQueryRows"))
-    } finally spark.conf.unset("spark.graft.ann.maxQueryRows")
+    import spark.implicits._
+    val v = (x: Float) => Array(x, 1f - x, 0.5f, x / 2)
+    val corpus = Seq((0L, v(0.1f)), (1L, v(0.9f)), (2L, v(0.5f))).toDF("id", "vec")
+    val cents = corpus.filter(col("id") < 2)
+    val idx = Similarity.ivfPqIndex(corpus, cents, corpus, m = 4)
+    val queries = spark.range(overGate)
+      .select(col("id"), typedLit(v(0.3f).toSeq).as("vec"))
+    val e = intercept[IllegalArgumentException] {
+      Similarity.ivfPqTopKFromCodes(queries, idx, cents, corpus, k = 1)
+        .collect()
+    }
+    assert(e.getMessage.contains("Ids.SmallBatchKeys"))
   }
 
   test("markovStationary fails loud when transitions exceed the cardinality cap") {
-    import spark.implicits._
-    val events = Seq(
-      (1L, "a", 1L, 1L), (1L, "b", 2L, 2L), (1L, "c", 3L, 3L),
-      (1L, "a", 4L, 4L), (1L, "c", 5L, 5L))
-      .toDF("user_id", "event_type", "ts_ms", "event_id")
-    spark.conf.set("spark.graft.markov.maxTransitions", "2")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Sessionize.markovStationary(events, "user_id", "event_type",
-          "ts_ms", "event_id", iters = 3).collect()
-      }
-      assert(e.getMessage.contains("CARDINALITY"))
-    } finally spark.conf.unset("spark.graft.markov.maxTransitions")
+    // 363 types, one two-event user per (a, b) pair: 363^2 = 131,769
+    // distinct transitions, past the 2^17 gate
+    val t = 363
+    val users = spark.range(t.toLong * t).select(col("id").as("user_id"))
+    def step(typ: Column, ts: Long) = users.select(col("user_id"),
+      concat(lit("t"), typ.cast("string")).as("event_type"),
+      lit(ts).as("ts_ms"), (col("user_id") * 2 + ts).as("event_id"))
+    val events = step((col("user_id") / t).cast("long"), 0L)
+      .unionByName(step(col("user_id") % t, 1L))
+    val e = intercept[IllegalArgumentException] {
+      Sessionize.markovStationary(events, "user_id", "event_type",
+        "ts_ms", "event_id", iters = 3).collect()
+    }
+    assert(e.getMessage.contains("CARDINALITY"))
+    assert(e.getMessage.contains("Ids.SmallBatchKeys"))
   }
 
   test("topCellsDriver fails loud on dimension mismatch and survives non-finite dots") {
     val cents = Array((0L, Array(1.0f, 0.0f)), (1L, Array(0.0f, 1.0f)))
     val e = intercept[IllegalArgumentException] {
-      Similarity.topCellsDriver(Array(1.0f), cents, p = 1, roundTo = 6)
+      Similarity.topCellsDriver(Array(1.0f), cents, p = 1)
     }
     assert(e.getMessage.contains("dim"))
     // a NaN component used to crash BigDecimal.decimal; Round passes
     // non-finite through, and so must the driver twin
     val nan = Similarity.topCellsDriver(Array(Float.NaN, 1.0f), cents,
-      p = 2, roundTo = 6)
+      p = 2)
     assert(nan.length == 2)
     val inf = Similarity.topCellsDriver(
-      Array(Float.MaxValue, Float.MaxValue), cents, p = 1, roundTo = 6)
+      Array(Float.MaxValue, Float.MaxValue), cents, p = 1)
     assert(inf.length == 1)
   }
 
@@ -241,30 +221,24 @@ class Round19Spec extends SparkSpec {
     assert(folded.toSeq == Seq((1L, 20L), (2L, 30L)))
   }
 
-  test("applyChangesLate fails loud when the late tail exceeds the key cap") {
-    val hist = scdEv(Seq((1L, 20L, 1L, "A"), (2L, 20L, 2L, "X")))
-    val batch = scdEv(Seq((1L, 5L, 3L, "B"), (2L, 5L, 4L, "Y")))
+  test("applyChangesLate past the key gate equals the full rebuild") {
+    // overGate keys, each with history at t=20 and a late change at t=5
+    val keys = spark.range(overGate).select(col("id").as("k"))
+    val hist = keys.select(col("k"), lit(20L).as("ts"), col("k").as("tb"),
+      lit("A").as("attr"))
+    val batch = keys.select(col("k"), lit(5L).as("ts"),
+      (col("k") + overGate).as("tb"), lit("B").as("attr"))
     val nk = Seq("k")
     val prior = Scd2.build(hist, nk, col("ts"), Seq(col("tb")), Seq("attr"))
     val hwm = Scd2.highWatermark(hist, nk, col("ts"))
-    spark.conf.set("spark.graft.scd2.lateMaxKeys", "1")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        Scd2.applyChangesLate(prior, hwm, hist, batch, nk, col("ts"),
-          Seq(col("tb")), Seq("attr")).collect()
-      }
-      assert(e.getMessage.contains("lateMaxKeys"))
-      // over-cap auto-fallback: the whole dimension rebuilds from raw
-      spark.conf.set("spark.graft.scd2.lateFallback", "true")
-      val got = Scd2.applyChangesLate(prior, hwm, hist, batch, nk,
-        col("ts"), Seq(col("tb")), Seq("attr"))
-      val want = Scd2.build(hist.unionByName(batch), nk, col("ts"),
-        Seq(col("tb")), Seq("attr"))
-      assert(canonScd(got) == canonScd(want))
-    } finally {
-      spark.conf.unset("spark.graft.scd2.lateMaxKeys")
-      spark.conf.unset("spark.graft.scd2.lateFallback")
-    }
+    val got = Scd2.applyChangesLate(prior, hwm, hist, batch, nk,
+      col("ts"), Seq(col("tb")), Seq("attr"))
+    val want = Scd2.build(hist.unionByName(batch), nk, col("ts"),
+      Seq(col("tb")), Seq("attr"))
+    val cols = Seq("k", "attr", "valid_from", "valid_to", "version",
+      "is_current").map(col)
+    assert(want.count() == 2 * overGate)
+    assert(sameRows(got.select(cols: _*), want.select(cols: _*)))
   }
 
   // ---------------------------------------------------------------------

@@ -48,7 +48,9 @@ object Round7PropsSpec extends Properties("graft.round7") {
     Prop.forAll(corpus, Gen.chooseNum(4, 24)) { (docs, vocabSize) =>
       docs.nonEmpty ==> {
         val df = docs.toDF("doc_id", "text")
-        val vocab = TextAnalysis.subwordVocab(df, "text", vocabSize, 6)
+        val ptf = df.select(explode(TextAnalysis.preTokens(col("text"))).as("pt"))
+          .groupBy("pt").agg(count(lit(1)).as("cf"))
+        val vocab = TextAnalysis.subwordVocabFromPtf(ptf, vocabSize, 6)
           .select("sub").as[String].collect().toSet
         val preRe = TextAnalysis.PreTokenRe.r
         val expected = docs.map { case (id, text) =>

@@ -104,21 +104,6 @@ class Round8Spec extends SparkSpec {
     baos.toByteArray
   }
 
-  test("phashPairs: banded hamming join finds the near-dup image pair and only it") {
-    import graft.multimodal.Multimodal
-    val base = (x: Int, y: Int) => (x * 3 + y * 2) % 256
-    val media = Seq(
-      (1L, "image", bmp(base)),
-      (2L, "image", bmp((x, y) =>
-        if (x >= 48 && x < 60 && y < 12) math.min(base(x, y) + 60, 255) else base(x, y))),
-      (3L, "image", bmp((x, y) => if ((x / 8 + y / 8) % 2 == 0) 230 else 20)),
-      (4L, "image", "junk".getBytes("UTF-8")))
-      .toDF("media_id", "kind", "payload")
-    val pairs = Multimodal.phashPairs(media, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(pairs == Set((1L, 2L, 1)))
-  }
-
   test("dHash survives a resize re-encode within a small hamming distance") {
     import graft.multimodal.Multimodal
     val base = bmp((x, y) => (x * 3 + y * 2) % 256)

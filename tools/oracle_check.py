@@ -13,9 +13,11 @@ import pandas as pd
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 # DuckDB's defaults (80% of the host's RAM, one thread per core) let the
-# self-join oracles (e2_kcore, e3_knn_graph_incr*) run out of memory on a
-# shared host. A fixed memory cap, fewer threads (each holds its own
-# buffers) and an explicit spill directory make them spill to disk instead.
+# large self-join oracles run out of memory on a shared host. A fixed
+# memory cap, fewer threads (each holds its own buffers) and an explicit
+# spill directory make them spill to disk instead. Under this cap the
+# e2_kcore and e3_knn_graph_incr* oracles only fit because their SQL marks
+# its chained CTEs AS MATERIALIZED; inlined, each ran out of memory.
 DUCKDB_CONFIG = {
     "memory_limit": "6GB",
     "threads": 2,

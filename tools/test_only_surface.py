@@ -11,8 +11,15 @@ file outside its own definitions. Comments are ignored, so a scaladoc
 mention is not a use.
 
 The match is by name, not by symbol, so an overloaded or common name hides a
-test-only member behind any other member of that name. It only reports: the
-exit status is always 0.
+test-only member behind any other member of that name.
+
+It then lists every "spark.graft.*" conf key that src/main/scala reads (a
+string literal outside a `.set(`/`.config(` call) and where it is set: in a
+`.set(`/`.config(` call in the program or perfbench/src, or as `KEY=` in a
+file under perfbench/ or tools/. A key set only under src/test is a switch
+nothing in the program turns.
+
+It only reports: the exit status is always 0.
 """
 import os
 import re
@@ -62,6 +69,36 @@ def read_all(root):
     return code
 
 
+CONF_KEY = re.compile(r'"(spark\.graft\.[\w.]+)"')
+CONF_SET = re.compile(r'\.(?:set|config)\(\s*$')
+
+
+def conf_keys(code):
+    """(key, is_set) for every "spark.graft.*" literal in comment-stripped code."""
+    return [(m.group(1), bool(CONF_SET.search(code[max(0, m.start() - 40):m.start()])))
+            for m in CONF_KEY.finditer(code)]
+
+
+def report_confs(repo, program, bench, tests):
+    read = sorted({k for c in program.values() for k, is_set in conf_keys(c) if not is_set})
+    launch = {}
+    for sub in ("perfbench", "tools"):
+        for base, _, names in os.walk(os.path.join(repo, sub)):
+            for name in sorted(names):
+                if name.endswith((".py", ".sh", ".json", ".md")):
+                    path = os.path.join(base, name)
+                    with open(path, encoding="utf-8") as f:
+                        launch[path] = f.read()
+    for key in read:
+        setters = sorted({os.path.relpath(p, repo) for p, c in list(program.items()) + list(bench.items())
+                          if (key, True) in conf_keys(c)} |
+                         {os.path.relpath(p, repo) for p, c in launch.items() if key + "=" in c})
+        by_tests = sorted(os.path.basename(p) for p, c in tests.items() if (key, True) in conf_keys(c))
+        print("%s  set outside src/test: %s  <- tests: %s" % (
+            key, ", ".join(setters) or "nothing", ", ".join(by_tests) or "none"))
+    print("%d spark.graft keys read" % len(read))
+
+
 def main():
     repo = sys.argv[1] if len(sys.argv) > 1 else "."
     program = read_all(os.path.join(repo, "src", "main", "scala"))
@@ -88,6 +125,7 @@ def main():
                 print("%s:%d  %s %s  <- %s" % (os.path.relpath(path, repo), code.count("\n", 0, m.start()) + 1,
                                                kind, name, ", ".join(callers)))
     print("%d test-only names" % found)
+    report_confs(repo, program, bench, tests)
     return 0
 
 
