@@ -109,7 +109,8 @@ object Blocks {
     * that are not checkpoint-backed — which includes any frame DERIVED
     * from a pin (`pinned.select(...)` is a Project over the LogicalRDD,
     * not the LogicalRDD): free the pinned handle itself, never a view
-    * of it (r16: minLabel leaked one block set per round this way).
+    * of it (r16: the min-label components loop leaked one block set
+    * per round this way).
     */
   def free(df: Dataset[_]): Unit = df.queryExecution.logical match {
     case lr: LogicalRDD =>

@@ -99,9 +99,10 @@ object Pipelines {
     * so the split stays deterministic and stable under corpus growth
     * exactly like the per-doc variant.
     *
-    * Scale shape: banded LSH pairs (never all-pairs) + O(log diameter)
-    * components + one narrow hash expression — the same machinery as
-    * e2_cc_largestar with a split gate on top.
+    * Scale shape: banded LSH pairs (never all-pairs) + the one
+    * components solver (driver union-find under the gate, O(log
+    * diameter) rounds past it) + one narrow hash expression — the same
+    * machinery as e2_dedup_clusters with a split gate on top.
     */
   def leakageSafeSplit(docs: DataFrame, idCol: String, textCol: String,
                        jaccardThreshold: Double = 0.4,
@@ -109,7 +110,7 @@ object Pipelines {
     val pairs = Dedup.minhashLsh(docs, idCol, textCol,
         jaccardThreshold = jaccardThreshold)
       .select("id1", "id2")
-    val comps = Components.largeStarSmallStar(pairs, "id1", "id2",
+    val comps = Components.minLabelAdaptive(pairs, "id1", "id2",
       docs.select(idCol), idCol)
     docs.select(col(idCol))
       .join(comps.select(col("id").as(idCol), col("comp")), Seq(idCol))

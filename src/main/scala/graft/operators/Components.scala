@@ -10,118 +10,59 @@ import graft.functions.ScoreDigits
   * selection: duplicates are transitive (A~B, B~C => one cluster), so a
   * dedup pipeline keeps one representative per COMPONENT, not per pair.
   *
-  * Algorithm: min-label propagation. Every node starts labelled with its
-  * own id; each round every node takes the min of its own and its
-  * neighbours' labels; fixpoint = every node carries the min id of its
-  * component. Each round is one join + one map-side-combined min
-  * aggregation (both hash-partitioned on id), and lineage is cut per
-  * round with Blocks.cut, so the plan stays flat at any iteration
-  * count. Rounds needed = graph diameter — near-dup graphs are unions of
-  * small dense clusters, so this converges in a handful of rounds. For
-  * adversarially long path graphs use `largeStarSmallStar` below:
-  * O(log diameter) rounds, same per-round cost shape.
+  * One solver, [[minLabelAdaptive]]: a driver-side union-find for graphs
+  * under the [[Ids.SmallBatchKeys]] gate, and past it the alternating
+  * large-star/small-star rounds of [[largeStarSmallStar]] — O(log
+  * diameter) rounds, so a long duplicate chain costs a few rounds, not
+  * one per hop. Each round's lineage is cut with Blocks.cut, so the
+  * plan stays flat at any round count; a loop that reaches
+  * `MaxRounds` without a fixpoint throws rather than return partial
+  * labels.
   *
-  * The per-round driver `count()` is the convergence check of an
+  * The per-round driver collect is the convergence check of an
   * iterative algorithm, not a data collect — each round's work is fully
   * distributed.
   */
 object Components {
 
-  /** `edges`: (srcCol, dstCol) undirected pairs; `nodes`: (idCol) the
-    * full vertex set (vertices without edges become singleton
-    * components). Returns (id, comp) where comp = min id in the
-    * component.
+  /** Rounds [[largeStarSmallStar]] may take before it gives up and
+    * throws: each round halves path lengths, so 40 covers any diameter
+    * a cluster can reach.
     */
-  def minLabel(edges: DataFrame, srcCol: String, dstCol: String,
-               nodes: DataFrame, idCol: String,
-               maxIter: Int = 50): DataFrame = graft.Blocks.scoped { ps =>
-    // checkpoint the edge list FIRST: both union branches (and every
-    // round's join) read the materialized rows — without it the caller's
-    // pair-generation plan executes once per branch (round 8: resolve's
-    // candidate join ran twice inside round 1's materialization)
-    val e = ps.cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst")))
-    // persist (not checkpoint): read every round, released on exit —
-    // Dataset.unpersist works for persists, so no block can leak.
-    val sym = ps.persist(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
-    // Iterate ONLY over edge-incident nodes: a near-dup / entity-res
-    // pair graph is tiny relative to the record set (most records are
-    // singletons), so per-round frames track the GRAPH size, not the
-    // corpus size. Singletons rejoin after the fixpoint (round 8 —
-    // previously every round carried all |nodes| labels).
-    var labels = ps.cut(sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id")))
-    // the PINNED handle behind `labels` — freeing must target the
-    // checkpointed frame itself: Blocks.free silently no-ops on a
-    // Project over a LogicalRDD, so freeing the `.select(...)` view
-    // (the r15 form) leaked one block set per round past the first
-    var pin: DataFrame = labels
-    var changed = 1L
-    var iter = 0
-    while (changed > 0 && iter < maxIter) {
-      val srcLbl = labels.select(col("id").as("src"), col("comp").as("srcComp"))
-      val nbrMin = sym.join(srcLbl, "src")
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("srcComp")).as("nbrComp"))
-      // carry the previous label through the checkpoint so convergence
-      // is a scan of the materialized round, not an extra join+shuffle
-      val next = ps.cut(labels.join(nbrMin, Seq("id"), "left")
-        .select(col("id"),
-          least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp"),
-          col("comp").as("prev")))
-      changed = next.filter(col("comp") < col("prev")).count()
-      // the superseded round's checkpoint blocks are dead the moment
-      // `changed` is computed — free them NOW, don't wait for GC
-      // (round 2 leaked one block per round per invocation).
-      ps.free(pin)
-      pin = next
-      labels = next.select(col("id"), col("comp"))
-      iter += 1
-    }
-    ps.unpersist(sym)
-    ps.free(e)
-    // singletons (nodes with no edges) map to themselves; the join is
-    // one shuffle keyed on id, after the loop — not per round. The
-    // returned lazy frame still reads the final round's pin, which
-    // survives the scope (ps.result) for the caller/harness to sweep.
-    ps.result(pin)
-    nodes.select(col(idCol).as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-  }
+  private val MaxRounds = 40
 
-  /** [[minLabel]] with an ADAPTIVE small-graph fast path — the
+  /** Connected components with an ADAPTIVE small-graph fast path — the
     * components analogue of AQE's broadcast-join decision: one bounded
     * collect of at most bound + 1 edges decides the gate; when the edges
     * fit the bound, solve components with a driver-side union-find over
     * that collect and broadcast the (edge-node → component) table back —
-    * replacing O(diameter) rounds of join+aggregate+checkpoint jobs with
-    * ONE bounded collect and one broadcast join. Past the bound the edge
-    * list is cut and handed to the distributed loop untouched. `edges`
-    * is read twice past the bound, so it should be pinned (the MinHash
-    * pair sets are checkpointed).
+    * ONE bounded collect and one broadcast join instead of a loop of
+    * jobs. Past the bound the edge list goes to [[largeStarSmallStar]].
+    * `edges` is read twice past the bound, so it should be pinned (the
+    * MinHash pair sets are checkpointed).
+    *
+    * `edges`: (srcCol, dstCol) undirected pairs; `nodes`: (idCol) the
+    * full vertex set (vertices without edges become singleton
+    * components). Returns (id, comp), both long, where comp = min id in
+    * the component.
     *
     * The collect is bounded by contract ([[Ids.SmallBatchKeys]] = 2¹⁷
     * edges ≈ a few MB — same order as Spark's own broadcast
     * threshold), never by hope: a 100 TB near-dup graph with billions
     * of candidate edges takes the distributed path. Entity-res graphs
     * sit far below the bound (duplicates are rare by construction), and
-    * the per-round fixed cost of the iterative loop dominates its
+    * the per-round fixed cost of an iterative loop dominates its
     * actual work there.
     */
   def minLabelAdaptive(edges: DataFrame, srcCol: String, dstCol: String,
-                       nodes: DataFrame, idCol: String)
-      : DataFrame = graft.Blocks.scoped { ps =>
+                       nodes: DataFrame, idCol: String): DataFrame = {
     val e = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
     val rows = e.limit(Ids.SmallBatchKeys.toInt + 1).collect()
     if (rows.length > Ids.SmallBatchKeys) {
-      val pinned = ps.cut(e)
       // cast nodes to long too, so both paths emit the same schema
-      val out = minLabel(pinned, "src", "dst",
+      largeStarSmallStar(e, "src", "dst",
         nodes.select(col(idCol).cast("long").as(idCol)), idCol)
-      ps.free(pinned)
-      out
     } else {
       // union-find with min-id roots: find(x) is the smallest id seen
       // so far in x's tree; union keeps the smaller root on top, so the
@@ -154,9 +95,9 @@ object Components {
 
   /** Connected components by the alternating LARGE-STAR / SMALL-STAR
     * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SOCC'14): min-label propagation needs O(diameter) rounds —
-    * fine for near-dup graphs (unions of small dense clusters), hopeless
-    * for adversarially long duplicate CHAINS (real in crawl data: A≈B≈C≈…
+    * Beyond", SOCC'14) — the distributed path of [[minLabelAdaptive]].
+    * Min-label propagation needs O(diameter) rounds, hopeless for
+    * adversarially long duplicate CHAINS (real in crawl data: A≈B≈C≈…
     * with no direct A≈C edge). Each large-star/small-star round HALVES
     * path lengths, so convergence is O(log diameter) rounds.
     *
@@ -172,14 +113,15 @@ object Components {
     * detected by an order-insensitive edge-set signature (count +
     * xxhash64 sum) instead of a full EXCEPT. Per round the edge set is
     * cut (flat plan at any round count) and the superseded
-    * round's blocks are freed immediately.
+    * round's blocks are freed immediately. No fixpoint within
+    * `MaxRounds` rounds throws.
     *
     * Returns (id, comp), comp = min id of the component; vertices in
     * `nodes` without edges map to themselves.
     */
-  def largeStarSmallStar(edges: DataFrame, srcCol: String, dstCol: String,
-                         nodes: DataFrame, idCol: String,
-                         maxIter: Int = 40): DataFrame = graft.Blocks.scoped { ps =>
+  private[graft] def largeStarSmallStar(edges: DataFrame, srcCol: String,
+                                        dstCol: String, nodes: DataFrame,
+                                        idCol: String): DataFrame = graft.Blocks.scoped { ps =>
     var cur = ps.cut(edges
       .select(col(srcCol).as("u"), col(dstCol).as("v"))
       .filter(col("u") =!= col("v"))
@@ -194,7 +136,9 @@ object Components {
     var sig = signature(cur)
     var iter = 0
     var stable = false
-    while (!stable && iter < maxIter) {
+    while (!stable) {
+      if (iter == MaxRounds) throw new IllegalStateException(
+        s"Components.largeStarSmallStar: no fixpoint after $MaxRounds rounds")
       // large-star over the symmetric closure: for each node u take
       // m = min(neighbourhood ∪ self), link larger neighbours to m
       val sym = cur.union(cur.select(col("v").as("u"), col("u").as("v")))
@@ -250,37 +194,15 @@ object Components {
     * rules. Dangling-node mass is dropped (standard simplification);
     * determinism is unaffected.
     *
-    * Scale shape: per iteration one join of the (replicated-undirected)
-    * edge list against the rank vector — both hash-partitioned on the
-    * node id — and one map-side-combined sum. Lineage is cut per round
-    * and superseded checkpoint blocks are freed immediately, exactly as
-    * in `minLabel`. The only driver-side value is N (a scalar count).
+    * Scale shape: see [[walk]]. The only driver-side value is N (a
+    * scalar count).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                nodes: DataFrame, idCol: String,
-               iters: Int = 4): DataFrame = graft.Blocks.scoped { ps =>
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = ps.persist(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-    val n = nodes.count()
-    val init = 1000000000L / n
-    val base = (15L * init) / 100L
-    var pr = ps.cut(nodes.select(col(idCol).as("id"), lit(init).as("pr")))
-    for (_ <- 1 to iters) {
-      val contrib = sym.join(deg, "src")
-        .join(pr.select(col("id").as("src"), col("pr")), "src")
-        .groupBy(col("dst").as("id"))
-        .agg(sum(expr("pr div deg")).as("cs"))
-      val next = ps.cut(nodes.select(col(idCol).as("id"))
-        .join(contrib, Seq("id"), "left")
-        .select(col("id"),
-          (lit(base) + expr("(85 * coalesce(cs, 0)) div 100")).as("pr")))
-      ps.free(pr)
-      pr = next
-    }
-    ps.unpersist(sym)
-    ps.result(pr)
+               iters: Int = 4): DataFrame = {
+    val init = 1000000000L / nodes.count()
+    walk(edges, srcCol, dstCol, nodes.select(col(idCol).as("id"),
+      lit(init).as("pr"), lit((15L * init) / 100L).as("tp")), iters)
   }
 
   /** Personalized PageRank (random walk with restart): the teleport
@@ -289,40 +211,55 @@ object Components {
     * recommender over a similarity graph. Same integer-arithmetic
     * iteration discipline as [[pageRank]] (init = 1e9 / |seeds|,
     * 15 % restart, div-truncated flows — bit-stable across engines);
-    * non-seed nodes start at 0 and receive only walked-in mass.
+    * non-seed nodes start at 0 and receive only walked-in mass. With
+    * every node a seed it IS [[pageRank]].
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String, dstCol: String,
                            nodes: DataFrame, idCol: String,
                            seeds: DataFrame,
                            iters: Int = 4): DataFrame = graft.Blocks.scoped { ps =>
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val sym = ps.persist(
-      e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
-    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
     val sd = seeds.select(col(idCol).as("id")).distinct()
     val nSeeds = sd.count()
     require(nSeeds > 0, "personalizedPageRank needs at least one seed")
     val init = 1000000000L / nSeeds
     val base = (15L * init) / 100L
     val seeded = ps.persist(nodes.select(col(idCol).as("id"))
-      .join(sd.withColumn("__s", lit(1)), Seq("id"), "left")
-      .select(col("id"), coalesce(col("__s"), lit(0)).as("__s")))
-    var pr = ps.cut(seeded
-      .select(col("id"), (col("__s").cast("long") * init).as("pr")))
+      .join(sd.withColumn("__s", lit(1L)), Seq("id"), "left")
+      .select(col("id"), coalesce(col("__s"), lit(0L)).as("__s")))
+    val out = walk(edges, srcCol, dstCol, seeded.select(col("id"),
+      (col("__s") * init).as("pr"), (col("__s") * base).as("tp")), iters)
+    ps.unpersist(seeded)
+    out
+  }
+
+  /** The rank loop of [[pageRank]] and [[personalizedPageRank]]: `start`
+    * holds (id, pr, tp) — a node's initial rank and the teleport mass it
+    * gets every round — and is read once per round. Per iteration one
+    * join of the (replicated-undirected) edge list against the rank
+    * vector — both hash-partitioned on the node id — and one
+    * map-side-combined sum; lineage is cut per round and superseded
+    * checkpoint blocks are freed immediately.
+    */
+  private def walk(edges: DataFrame, srcCol: String, dstCol: String,
+                   start: DataFrame, iters: Int): DataFrame = graft.Blocks.scoped { ps =>
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val sym = ps.persist(
+      e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
+    val deg = sym.groupBy("src").agg(count(lit(1)).as("deg"))
+    var pr = ps.cut(start.select("id", "pr"))
     for (_ <- 1 to iters) {
       val contrib = sym.join(deg, "src")
         .join(pr.select(col("id").as("src"), col("pr")), "src")
         .groupBy(col("dst").as("id"))
         .agg(sum(expr("pr div deg")).as("cs"))
-      val next = ps.cut(seeded
+      val next = ps.cut(start
         .join(contrib, Seq("id"), "left")
         .select(col("id"),
-          (col("__s").cast("long") * base +
-            expr("(85 * coalesce(cs, 0)) div 100")).as("pr")))
+          (col("tp") + expr("(85 * coalesce(cs, 0)) div 100")).as("pr")))
       ps.free(pr)
       pr = next
     }
-    ps.unpersist(sym); ps.unpersist(seeded)
+    ps.unpersist(sym)
     ps.result(pr)
   }
 
@@ -474,44 +411,12 @@ object Components {
 
   /** Multi-source BFS hop distance: shortest hop count from any seed to
     * every node within `rounds` hops (nodes beyond the horizon are
-    * absent). Returns (id, hops).
-    *
-    * This is the FRONTIER formulation, not naive min-plus relaxation:
-    * hop distance never improves once set, so each round expands only
-    * the nodes discovered LAST round (one keyed join + distinct + one
-    * anti join against the known set) and every node is processed
-    * exactly once across the whole run — at 100 TB the per-round work
-    * tracks the frontier's size, while re-relaxing the full distance
-    * table every round (the naive shape) would rescan everything
-    * discovered so far. Lineage is cut per round (Blocks.cut) so
-    * the plan stays flat at any horizon; seeds deduplicate defensively.
+    * absent). Returns (id, hops). Runs [[frontier]].
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-              seeds: DataFrame, idCol: String,
-              rounds: Int): DataFrame = graft.Blocks.scoped { ps =>
-    require(rounds >= 0)
-    val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val e = ps.cut(
-      e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
-    var known = ps.cut(seeds.select(col(idCol).as("id")).distinct()
-      .withColumn("hops", lit(0)))
-    var frontier = known
-    for (r <- 1 to rounds) {
-      val fresh = e
-        .join(frontier.select(col("id").as("src")), "src")
-        .select(col("dst").as("id")).distinct()
-        .join(known, Seq("id"), "left_anti")
-        .withColumn("hops", lit(r))
-      val nextKnown = ps.cut(known.union(fresh))
-      ps.free(known)
-      known = nextKnown
-      // re-derive the frontier from the checkpointed union so `fresh`'s
-      // lineage (which still references the previous round) is dropped
-      frontier = known.filter(col("hops") === r)
-    }
-    ps.free(e)
-    ps.result(known)
-  }
+              seeds: DataFrame, idCol: String, rounds: Int): DataFrame =
+    frontier(edges, srcCol, dstCol,
+      seeds.select(col(idCol).as("id")).distinct(), Nil, rounds)
 
   /** Multi-source BFS: per-(node, seed) hop distances from a landmark
     * set in one synchronized frontier — the labeled generalization of
@@ -519,31 +424,49 @@ object Components {
     * distance vectors are the standard cheap proxy for closeness /
     * harmonic centrality and a common graph-ML feature; state is
     * (node, seed) SPARSE pairs, so cost tracks reached pairs — the
-    * landmark-count contract, not the node universe — and each round is
-    * one key-partitioned join + distinct + anti-join, lineage cut as in
-    * [[bfsHops]].
+    * landmark-count contract, not the node universe. Returns
+    * (id, seed, hops). Runs [[frontier]].
     */
   def multiSourceHops(edges: DataFrame, srcCol: String, dstCol: String,
-                      seeds: DataFrame, idCol: String,
-                      rounds: Int): DataFrame = graft.Blocks.scoped { ps =>
+                      seeds: DataFrame, idCol: String, rounds: Int): DataFrame =
+    frontier(edges, srcCol, dstCol,
+      seeds.select(col(idCol).as("id")).distinct()
+        .select(col("id"), col("id").as("seed")), Seq("seed"), rounds)
+
+  /** The FRONTIER loop of [[bfsHops]] and [[multiSourceHops]], not naive
+    * min-plus relaxation: hop distance never improves once set, so each
+    * round expands only the states discovered LAST round (one keyed join
+    * + distinct + one anti join against the known set) and every state
+    * is processed exactly once across the whole run — at 100 TB the
+    * per-round work tracks the frontier's size, while re-relaxing the
+    * full distance table every round (the naive shape) would rescan
+    * everything discovered so far. A state is (id, labels…): `start`
+    * holds the hop-0 states, and `labels` ride along every expansion.
+    * Lineage is cut per round (Blocks.cut) so the plan stays flat at any
+    * horizon.
+    */
+  private def frontier(edges: DataFrame, srcCol: String, dstCol: String,
+                       start: DataFrame, labels: Seq[String],
+                       rounds: Int): DataFrame = graft.Blocks.scoped { ps =>
     require(rounds >= 0)
+    val key = "id" +: labels
     val e0 = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
     val e = ps.cut(
       e0.union(e0.select(col("dst").as("src"), col("src").as("dst"))))
-    var known = ps.cut(seeds.select(col(idCol).as("id")).distinct()
-      .select(col("id"), col("id").as("seed"))
-      .withColumn("hops", lit(0)))
-    var frontier = known
+    var known = ps.cut(start.withColumn("hops", lit(0)))
+    var front = known
     for (r <- 1 to rounds) {
       val fresh = e
-        .join(frontier.select(col("id").as("src"), col("seed")), "src")
-        .select(col("dst").as("id"), col("seed")).distinct()
-        .join(known.select("id", "seed"), Seq("id", "seed"), "left_anti")
+        .join(front.select(col("id").as("src") +: labels.map(col): _*), "src")
+        .select(col("dst").as("id") +: labels.map(col): _*).distinct()
+        .join(known.select(key.map(col): _*), key, "left_anti")
         .withColumn("hops", lit(r))
       val nextKnown = ps.cut(known.union(fresh))
       ps.free(known)
       known = nextKnown
-      frontier = known.filter(col("hops") === r)
+      // re-derive the frontier from the checkpointed union so `fresh`'s
+      // lineage (which still references the previous round) is dropped
+      front = known.filter(col("hops") === r)
     }
     ps.free(e)
     ps.result(known)
@@ -631,9 +554,9 @@ object Components {
     * touches: comps containing any batch endpoint reconstruct as star
     * edges (member → comp label — the label is the comp's min member by
     * convention, so the star preserves reachability AND the min),
-    * union the batch, and re-solve through [[minLabel]]; every other
-    * mapping row passes through an anti join untouched; nodes covered
-    * by neither (brand-new singletons) self-map. Work scales with the
+    * union the batch, and re-solve through [[minLabelAdaptive]]; every
+    * other mapping row passes through an anti join untouched; nodes
+    * covered by neither (brand-new singletons) self-map. Work scales with the
     * affected subgraph + batch, never the standing graph — the
     * ingest-time clustering shape (e2_incremental's candidate
     * discipline applied to the COMPONENT solve itself). Incremental ==
@@ -654,7 +577,7 @@ object Components {
     val affected = ps.cut(mapping.join(touched, Seq("comp"), "left_semi"))
     val star = affected.select(col("id").as("src"), col("comp").as("dst"))
     val subNodes = affected.select("id").union(endpoints).distinct()
-    val solved = minLabel(star.union(e), "src", "dst", subNodes, "id")
+    val solved = minLabelAdaptive(star.union(e), "src", "dst", subNodes, "id")
     val untouched = mapping.join(affected.select("id"), Seq("id"), "left_anti")
     val covered = untouched.select("id").union(solved.select("id"))
     val selfs = allNodes.select(col(idCol).as("id"))

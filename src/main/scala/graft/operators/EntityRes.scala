@@ -26,10 +26,11 @@ import graft.functions.ScoreDigits
   * density, not corpus size. All-pairs is never formed either way;
   * every shuffle is keyed (block, gram) or (id) — narrow and high-entropy.
   * Scoring is a codegen'd per-row expression (levenshtein + scaled
-  * numeric distance — no UDF); entity ids come from the min-label
-  * components pass (O(diameter) rounds; duplicate clusters are shallow
-  * by construction, so 2-3 rounds in practice — switch to
-  * [[Components.largeStarSmallStar]] if a pathological chain appears).
+  * numeric distance — no UDF); entity ids come from
+  * [[Components.minLabelAdaptive]]: duplicate pairs are rare by
+  * construction, so the pair graph sits under its gate and is solved
+  * by one bounded collect and a driver-side union-find; past the gate
+  * it runs O(log diameter) distributed rounds.
   *
   * Cross-engine determinism: levenshtein is an exact integer, the score
   * is a fixed chain of IEEE double ops rounded to 6 dp, ties cannot

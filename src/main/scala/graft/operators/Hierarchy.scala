@@ -35,14 +35,20 @@ import org.apache.spark.sql.functions._
   */
 object Hierarchy {
 
+  /** Doubling rounds every loop here runs at most: 2^30 covers any depth
+    * a forest can reach, so only a cycle — whose members never settle —
+    * exhausts it.
+    */
+  private val MaxRounds = 30
+
   /** `edges`: (idCol, parentCol) rows, one per NON-root node; roots are
     * nodes that appear as parents (or in `extraRoots`) but never as
     * ids. Returns (id, root, depth) for EVERY node including roots
     * (depth 0). Cycles are a contract violation (the loop stops at
-    * `maxIter`; nodes on a cycle keep a non-root ancestor).
+    * `MaxRounds`; nodes on a cycle keep a non-root ancestor).
     */
-  def rootAndDepth(edges: DataFrame, idCol: String, parentCol: String,
-                   maxIter: Int = 30): DataFrame = graft.Blocks.scoped { ps =>
+  def rootAndDepth(edges: DataFrame, idCol: String,
+                   parentCol: String): DataFrame = graft.Blocks.scoped { ps =>
     val e = edges.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"))
     val roots = e.select(col("anc").as("id"))
@@ -52,27 +58,16 @@ object Hierarchy {
     // root, reached early), d the distance to it, s whether anc is
     // known to BE the root (settled: full depth reached). Roots carry
     // (root, root, 0, true) so every pointer join hits.
-    // each round is ONE job: Blocks.cutCount fuses the round's lineage
-    // cut with its convergence count (r12)
-    var (cur, active) = ps.cutCount(
+    val cur = doubling(ps,
       e.select(col("id"), col("anc"), lit(1L).as("d"),
           lit(false).as("s"))
         .unionByName(roots.select(col("id"), col("id").as("anc"),
-          lit(0L).as("d"), lit(true).as("s"))),
-      !col("s"))
-    var iter = 0
-    while (active > 0 && iter < maxIter) {
-      val jumped = cur.filter(!col("s")).as("a")
+          lit(0L).as("d"), lit(true).as("s")))) { cur =>
+      cur.filter(!col("s")).as("a")
         .join(cur.select(col("id").as("anc"), col("anc").as("anc2"),
           col("d").as("d2"), col("s").as("s2")).as("b"), Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"), col("s2").as("s"))
-      val (next, nAct) = ps.cutCount(
-        cur.filter(col("s")).unionByName(jumped), !col("s"))
-      ps.free(cur)
-      cur = next
-      active = nAct
-      iter += 1
     }
     ps.result(cur)
     cur.select(col("id"), col("anc").as("root"), col("d").as("depth"))
@@ -86,8 +81,8 @@ object Hierarchy {
     * OUTPUT's own size, not overhead. Returns (id, root, depth, path).
     */
   def materializedPaths(edges: DataFrame, idCol: String, parentCol: String,
-                        sep: String = "/", maxIter: Int = 30): DataFrame =
-    doubledArrays(edges, idCol, parentCol, maxIter)
+                        sep: String = "/"): DataFrame =
+    doubledArrays(edges, idCol, parentCol)
       .select(col("id"), col("anc").as("root"), col("d").as("depth"),
         concat_ws(sep, concat(reverse(col("arr")), array(col("id")))
           .cast("array<string>")).as("path"))
@@ -100,7 +95,7 @@ object Hierarchy {
     */
   def ancestorClosure(edges: DataFrame, idCol: String,
                       parentCol: String): DataFrame =
-    doubledArrays(edges, idCol, parentCol, 30)
+    doubledArrays(edges, idCol, parentCol)
       .select(col("id"),
         explode(concat(col("arr"), array(col("id")))).as("ancestor"))
 
@@ -134,17 +129,17 @@ object Hierarchy {
     * distributed loop entirely: see [[smallBatch]].
     */
   def extend(settled: DataFrame, newEdges: DataFrame, idCol: String,
-             parentCol: String, maxIter: Int = 30): DataFrame = {
+             parentCol: String): DataFrame = {
     val e = newEdges.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"))
     smallBatch(e) match {
       case Some(edges) => extendSmall(settled, edges, withPaths = false)
-      case None => extendDistributed(settled, e, maxIter)
+      case None => extendDistributed(settled, e)
     }
   }
 
-  private[graft] def extendDistributed(settled: DataFrame, e: DataFrame,
-                                maxIter: Int): DataFrame =
+  private[graft] def extendDistributed(settled: DataFrame,
+                                       e: DataFrame): DataFrame =
       graft.Blocks.scoped { ps =>
     val base = settled.select(col("id").cast("long").as("id"),
       col("root").cast("long").as("anc"),
@@ -170,25 +165,16 @@ object Hierarchy {
       .unionByName(newRoots.withColumn("__new", lit(true))))
     ps.free(attach)
     val fixed = fixedF.drop("__new")
-    var (cur, active) = ps.cutCount(
+    val cur = doubling(ps,
       e.select(col("id"), col("anc"), lit(1L).as("d"),
-        lit(false).as("s")),
-      !col("s"))
-    var iter = 0
-    while (active > 0 && iter < maxIter) {
+        lit(false).as("s"))) { cur =>
       val target = fixed.unionByName(cur)
         .select(col("id").as("anc"), col("anc").as("anc2"),
           col("d").as("d2"), col("s").as("s2"))
-      val jumped = cur.filter(!col("s"))
+      cur.filter(!col("s"))
         .join(target, Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"), col("s2").as("s"))
-      val (next, nAct) = ps.cutCount(
-        cur.filter(col("s")).unionByName(jumped), !col("s"))
-      ps.free(cur)
-      cur = next
-      active = nAct
-      iter += 1
     }
     // the returned lazy union reads both surviving pins
     ps.result(fixedF); ps.result(cur)
@@ -214,18 +200,17 @@ object Hierarchy {
     * along, exactly as in the full [[materializedPaths]] build.
     */
   def extendPaths(settled: DataFrame, newEdges: DataFrame, idCol: String,
-                  parentCol: String, sep: String = "/",
-                  maxIter: Int = 30): DataFrame = {
+                  parentCol: String, sep: String = "/"): DataFrame = {
     val e = newEdges.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"))
     smallBatch(e) match {
       case Some(edges) => extendSmall(settled, edges, withPaths = true, sep)
-      case None => extendPathsDistributed(settled, e, sep, maxIter)
+      case None => extendPathsDistributed(settled, e, sep)
     }
   }
 
   private[graft] def extendPathsDistributed(settled: DataFrame, e: DataFrame,
-                                     sep: String, maxIter: Int): DataFrame =
+                                            sep: String): DataFrame =
       graft.Blocks.scoped { ps =>
     val sepRe = java.util.regex.Pattern.quote(sep)
     val parts = split(col("path"), sepRe)
@@ -247,26 +232,17 @@ object Hierarchy {
       .unionByName(newRoots.withColumn("__new", lit(true))))
     ps.free(attach)
     val fixed = fixedF.drop("__new")
-    var (cur, active) = ps.cutCount(
+    val cur = doubling(ps,
       e.select(col("id"), col("anc"), lit(1L).as("d"),
-        array(col("anc")).as("arr"), lit(false).as("s")),
-      !col("s"))
-    var iter = 0
-    while (active > 0 && iter < maxIter) {
+        array(col("anc")).as("arr"), lit(false).as("s"))) { cur =>
       val target = fixed.unionByName(cur)
         .select(col("id").as("anc"), col("anc").as("anc2"),
           col("d").as("d2"), col("arr").as("arr2"), col("s").as("s2"))
-      val jumped = cur.filter(!col("s"))
+      cur.filter(!col("s"))
         .join(target, Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"),
           concat(col("arr"), col("arr2")).as("arr"), col("s2").as("s"))
-      val (next, nAct) = ps.cutCount(
-        cur.filter(col("s")).unionByName(jumped), !col("s"))
-      ps.free(cur)
-      cur = next
-      active = nAct
-      iter += 1
     }
     def pathOf(idc: Column, arr: Column): Column =
       concat_ws(sep, concat(reverse(arr), array(idc)).cast("array<string>"))
@@ -288,38 +264,51 @@ object Hierarchy {
     * through the union; the per-round concat work is frontier-sized.
     */
   private def doubledArrays(edges: DataFrame, idCol: String,
-                            parentCol: String,
-                            maxIter: Int): DataFrame = graft.Blocks.scoped { ps =>
+                            parentCol: String): DataFrame = graft.Blocks.scoped { ps =>
     val e = edges.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"))
     val roots = e.select(col("anc").as("id"))
       .except(e.select(col("id")))
       .distinct()
-    var (cur, active) = ps.cutCount(
+    val cur = doubling(ps,
       e.select(col("id"), col("anc"), lit(1L).as("d"),
           array(col("anc")).as("arr"), lit(false).as("s"))
         .unionByName(roots.select(col("id"), col("id").as("anc"),
           lit(0L).as("d"), array().cast("array<long>").as("arr"),
-          lit(true).as("s"))),
-      !col("s"))
-    var iter = 0
-    while (active > 0 && iter < maxIter) {
-      val jumped = cur.filter(!col("s")).as("a")
+          lit(true).as("s")))) { cur =>
+      cur.filter(!col("s")).as("a")
         .join(cur.select(col("id").as("anc"), col("anc").as("anc2"),
           col("d").as("d2"), col("arr").as("arr2"), col("s").as("s2"))
           .as("b"), Seq("anc"))
         .select(col("id"), col("anc2").as("anc"),
           (col("d") + col("d2")).as("d"),
           concat(col("arr"), col("arr2")).as("arr"), col("s2").as("s"))
+    }
+    ps.result(cur)
+    cur.drop("s")
+  }
+
+  /** The pointer-doubling loop every flattening here runs: `start` is
+    * the round-0 state (its `s` column marks settled rows), and `jump`
+    * maps a round's state to the next round's rows for its unsettled
+    * ones; settled rows ride each round's union untouched. Stops when
+    * nothing is unsettled or after `MaxRounds` rounds. Each round is
+    * ONE job: Blocks.cutCount fuses the round's lineage cut with its
+    * convergence count (r12); the superseded round is freed at once.
+    */
+  private def doubling(ps: graft.Blocks.Scope, start: DataFrame)
+                      (jump: DataFrame => DataFrame): DataFrame = {
+    var (cur, active) = ps.cutCount(start, !col("s"))
+    var iter = 0
+    while (active > 0 && iter < MaxRounds) {
       val (next, nAct) = ps.cutCount(
-        cur.filter(col("s")).unionByName(jumped), !col("s"))
+        cur.filter(col("s")).unionByName(jump(cur)), !col("s"))
       ps.free(cur)
       cur = next
       active = nAct
       iter += 1
     }
-    ps.result(cur)
-    cur.drop("s")
+    cur
   }
 
   /** Batch-size gate for [[extend]]/[[extendPaths]] — the

@@ -1459,12 +1459,14 @@ object Similarity {
     *
     * Scale design: inherits nearDupPairs' bucket-join (never all-pairs —
     * O(N²/2^bits) candidate work, hash-partitioned by bucket) and
-    * largeStarSmallStar's O(log diameter) rounds; nothing driver-side.
+    * `Components.minLabelAdaptive`: one bounded collect of at most
+    * `Ids.SmallBatchKeys` + 1 pairs, a driver-side union-find under that
+    * gate, O(log diameter) distributed rounds past it.
     */
   def semanticDedup(corpus: DataFrame, threshold: Double,
                     bits: Int = 8): DataFrame = {
     val pairs = nearDupPairs(corpus, threshold, bits).select("id1", "id2")
-    Components.largeStarSmallStar(pairs, "id1", "id2",
+    Components.minLabelAdaptive(pairs, "id1", "id2",
       corpus.select("id"), "id")
   }
 

@@ -1,7 +1,6 @@
 package graft.star
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import scala.jdk.CollectionConverters._
@@ -25,8 +24,9 @@ import graft.operators.Ids
   * order, numbered on the driver for dimension-sized results and by
   * [[Ids.globalRankDist]] past the small-batch gate. If density is not
   * required, `xxhash64(keys)` is cheaper still (no sort).
-  * [[Dims.firstWinsDim]] stays a separate window: its per-key survivor
-  * would force the shared aggregate onto a sort-based plan.
+  * The first-wins `dim_empreendimento` stays a separate window
+  * (`Dedup.exact`): its per-key survivor would force the shared
+  * aggregate onto a sort-based plan.
   */
 object Dims {
 
@@ -118,25 +118,4 @@ object Dims {
     * calendar row.
     */
   private def probeCap(nDims: Int): Int = (nDims * (Ids.SmallBatchKeys + 1) + 1).toInt
-
-  /** A1 (empreendimento pattern, FullETLGenerator.java:114-122): dedup key
-    * is a strict subset of the carried attributes, so WHICH row survives is
-    * observable. The reference keeps the first in file order;
-    * `dropDuplicates` is nondeterministic about the survivor, so we take
-    * rn=1 over an explicit stable ordering (SURVEY.md §7.4).
-    *
-    * Scale note: this is a single shuffle on `key` (hash-partitioned);
-    * the window is per-key, so it parallelizes across keys and never
-    * funnels through one task. Skewed keys only matter if one natural key
-    * repeats millions of times — then pre-aggregate min(order) per key and
-    * self-join instead.
-    */
-  def firstWinsDim(df: DataFrame, key: Seq[String], attrs: Seq[String],
-                   order: Seq[Column]): DataFrame = {
-    val w = Window.partitionBy(key.map(col): _*).orderBy(order: _*)
-    df.select((key ++ attrs).map(col): _*)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

@@ -5,6 +5,7 @@ import java.util.concurrent.{ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions._
+import graft.operators.Dedup
 
 /** The reference's complete pipeline, Spark-first: one ANEEL SIGA CSV in,
   * a Kimball star schema out (5 dims + 1 fact) —
@@ -46,19 +47,17 @@ object StarSchemaJob {
       .csv(path)
 
   /** S2 — CSV sink with the reference's codec (FullETLGenerator.java:36-38).
-    * `coalesce(1)` mirrors the reference's single-file-per-table output;
-    * drop it for genuinely large tables. Blocks until the write job ends;
+    * `coalesce(1)` mirrors the reference's single-file-per-table output:
+    * every table is one part file. Blocks until the write job ends;
     * it is safe to call from several threads at once on different `dir`s,
     * which is how `run` writes its six tables.
     */
-  def writeCsv(df: DataFrame, dir: String, singleFile: Boolean = true): Unit = {
-    val out = if (singleFile) df.coalesce(1) else df
-    out.write.mode("overwrite")
+  def writeCsv(df: DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite")
       .option("sep", ";")
       .option("header", "true")
       .option("encoding", "ISO-8859-1")
       .csv(dir)
-  }
 
   final case class Star(
       dimGeracao: DataFrame,
@@ -115,11 +114,12 @@ object StarSchemaJob {
     // J3 — dim_empreendimento is keyed by the natural CodCEG, no surrogate;
     // first-wins survivor on the attrs (FullETLGenerator.java:114-122).
     // File order isn't observable in a distributed read, so "first" is
-    // defined by a stable attribute ordering (SURVEY.md §7.4).
-    val dimEmpreendimento = Dims.firstWinsDim(s,
-      key = Seq("CodCEG"),
-      attrs = Seq("NomEmpreendimento", "DscPropriRegimePariticipacao"),
-      order = Seq(col("NomEmpreendimento"), col("DscPropriRegimePariticipacao")))
+    // defined by a stable attribute ordering (SURVEY.md §7.4): rn = 1 per
+    // key, one shuffle on CodCEG.
+    val dimEmpreendimento = Dedup.exact(
+      s.select("CodCEG", "NomEmpreendimento", "DscPropriRegimePariticipacao"),
+      Seq("CodCEG"),
+      Seq(col("NomEmpreendimento"), col("DscPropriRegimePariticipacao")))
 
     val (lo, hi) = range.getOrElse((null, null))
     val dimTempo = CalendarDim.overRange(s.sparkSession, lo, hi)

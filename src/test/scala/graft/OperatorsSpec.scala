@@ -134,7 +134,8 @@ class OperatorsSpec extends SparkSpec {
     val noNodes = Seq.empty[Long].toDF("id")
     assert(Components.largeStarSmallStar(noEdges, "src", "dst", noNodes, "id")
       .count() == 0)
-    assert(Components.minLabel(noEdges, "src", "dst", noNodes, "id").count() == 0)
+    assert(Components.minLabelAdaptive(noEdges, "src", "dst", noNodes, "id")
+      .count() == 0)
   }
 
   test("curate is idempotent: a second pass removes nothing") {
@@ -162,7 +163,7 @@ class OperatorsSpec extends SparkSpec {
     val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (6L, 7L), (5L, 7L))
       .toDF("src", "dst")
     val nodes = (1L to 7L).toDF("id")
-    val got = Components.minLabel(edges, "src", "dst", nodes, "id")
+    val got = Components.minLabelAdaptive(edges, "src", "dst", nodes, "id")
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 5L))
@@ -176,9 +177,9 @@ class OperatorsSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 4L,
       5L -> 5L, 6L -> 5L, 7L -> 5L))
-    // a path graph of diameter 400: min-label needs ~400 rounds (its
-    // default budget is 50); the alternating algorithm converges in
-    // O(log diameter) — well inside maxIter = 40
+    // a path graph of diameter 400: min-label propagation would need
+    // ~400 rounds; the alternating algorithm converges in O(log
+    // diameter), well inside its 40-round cap
     val n = 400
     val path = (0 until n).map(i => (i.toLong, (i + 1).toLong)).toDF("src", "dst")
     val pathNodes = (0L to n.toLong).toDF("id")

@@ -102,7 +102,8 @@ object ComponentsProperties extends Properties("components") {
     Prop.forAll(Gen.chooseNum(150, 350), Gen.chooseNum(0L, Long.MaxValue)) {
       (n, seed) =>
         // a path over PERMUTED ids: the component minimum sits at an
-        // arbitrary position, diameter n >> minLabel's 50-round default
+        // arbitrary position, diameter n in the hundreds: a solver that
+        // needed one round per hop would need hundreds of rounds
         val rnd = new scala.util.Random(seed)
         val ids = rnd.shuffle((0L to n.toLong).toVector)
         val edges = ids.sliding(2).map(p => (p(0), p(1))).toSeq.toDF("src", "dst")
@@ -113,7 +114,7 @@ object ComponentsProperties extends Properties("components") {
         got.length == n + 1 && got.forall(_._2 == 0L)
     }
 
-  property("large-star/small-star == min-label on random sparse graphs") =
+  property("large-star/small-star == union-find (random graphs)") =
     Prop.forAll(Gen.chooseNum(0L, Long.MaxValue)) { seed =>
       val rnd = new scala.util.Random(seed)
       val n = 40
@@ -123,8 +124,9 @@ object ComponentsProperties extends Properties("components") {
       val a = operators.Components
         .largeStarSmallStar(edges, "src", "dst", nodes, "id")
         .as[(Long, Long)].collect().sorted.toSeq
+      // 30 edges sit far under the gate: the driver-side union-find
       val b = operators.Components
-        .minLabel(edges, "src", "dst", nodes, "id")
+        .minLabelAdaptive(edges, "src", "dst", nodes, "id")
         .as[(Long, Long)].collect().sorted.toSeq
       a == b
     }

@@ -34,7 +34,7 @@ class Round12Spec extends SparkSpec {
     def asMap(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val fast = asMap(Hierarchy.extend(day1, batch, "id", "parent"))
-    val slow = asMap(Hierarchy.extendDistributed(day1, batchEdges(batch), 30))
+    val slow = asMap(Hierarchy.extendDistributed(day1, batchEdges(batch)))
     assert(fast == slow)
     assert(fast(4000L) == (4000L, 0L) && fast(5001L) == (4000L, 2L))
     assert(fast(1000L) == (0L, 1000L)) // 401-deep new-on-new chain
@@ -78,7 +78,7 @@ class Round12Spec extends SparkSpec {
         .toMap
     val fast = asMap(Hierarchy.extendPaths(day1, batch, "id", "parent"))
     val slow = asMap(
-      Hierarchy.extendPathsDistributed(day1, batchEdges(batch), "/", 30))
+      Hierarchy.extendPathsDistributed(day1, batchEdges(batch), "/"))
     assert(fast == slow)
     assert(fast(9000L) == (8000L, 1L, "8000/9000"))
     assert(fast(9001L) == (8000L, 2L, "8000/9000/9001"))

@@ -22,8 +22,9 @@ package graft
   * Pin hygiene (r15 advice items 2/3/4): Blocks.scoped frees every
   * operator-created pin (and persist) when an iterative body throws
   * mid-build — graded for the similarity graph tier AND the components
-  * loops; minLabel's superseded rounds actually free (the r15 form
-  * freed a Project-wrapped view, which Blocks.free silently no-ops);
+  * loops; the components loop's superseded rounds actually free (the
+  * r15 min-label form freed a Project-wrapped view, which Blocks.free
+  * silently no-ops);
   * denseIds' verify mode turns the nondeterministic-input silent drop
   * into a loud failure.
   */
@@ -275,21 +276,22 @@ class Round16Spec extends SparkSpec {
     Blocks.free(g)
   }
 
-  test("minLabel frees every superseded round (the Project-wrapped free was a silent no-op)") {
+  test("largeStarSmallStar frees every superseded round") {
     import spark.implicits._
-    // a 12-node path: min-label needs ~11 rounds to converge, so the
-    // r15 form (free on the `.select` view, which Blocks.free no-ops)
-    // left one block set pinned per round past the first
+    // a 12-node path takes several rounds to converge; a free that
+    // missed the round's pinned frame itself (the r15 min-label form
+    // freed a `.select` view, which Blocks.free no-ops) would leave one
+    // block set pinned per round past the first
     val chain = (0L until 11L).map(i => (i, i + 1)).toDF("a", "b")
     val nodes = spark.range(12).toDF("id")
     Blocks.sweep(spark.sparkContext)
     val before = livePins()
-    val out = operators.Components.minLabel(chain, "a", "b", nodes, "id")
+    val out = operators.Components.largeStarSmallStar(chain, "a", "b", nodes, "id")
     assert(out.collect().forall(_.getLong(1) == 0L), "chain must collapse to comp 0")
-    // exactly ONE pin may remain: the final round's labels, which the
-    // returned (lazy) frame still reads — the harness sweep reclaims it
+    // exactly ONE pin may remain: the cut result the caller reads —
+    // the harness sweep reclaims it
     assert(livePins() <= before + 1,
-      s"minLabel leaked superseded rounds: ${livePins()} vs $before before")
+      s"largeStarSmallStar leaked superseded rounds: ${livePins()} vs $before before")
   }
 
   test("nnDescentGraph initRings <= 0 degrades to one ring, never an analysis error") {
@@ -319,10 +321,10 @@ class Round16Spec extends SparkSpec {
     assert(livePins() == before,
       s"failed pageRank leaked pins/persists: ${livePins()} vs $before")
     intercept[Exception] {
-      operators.Components.minLabel(edges, "a", "b", nodes, "id")
+      operators.Components.largeStarSmallStar(edges, "a", "b", nodes, "id")
     }
     assert(livePins() == before,
-      s"failed minLabel leaked pins/persists: ${livePins()} vs $before")
+      s"failed largeStarSmallStar leaked pins/persists: ${livePins()} vs $before")
   }
 
   test("semanticDecontaminate: exact copies are never missed; blocked hits are a subset of exact") {

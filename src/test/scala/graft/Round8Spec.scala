@@ -198,19 +198,27 @@ class Round8Spec extends SparkSpec {
       s"target mean ${bySrc(1)} should exceed non-target ${bySrc(0)}")
   }
 
-  test("minLabelAdaptive == minLabel on random graphs, both sides of the bound") {
+  test("minLabelAdaptive == plain-Scala labels, both sides of the bound") {
     import graft.operators.Components
     for (seed <- Seq(11L, 222L)) {
       val rnd = prng(seed)
-      val edges = (0 until 60).map(_ =>
-        (math.floorMod(rnd.next(), 40), math.floorMod(rnd.next(), 40)))
-        .filter(p => p._1 != p._2).toDF("a", "b")
+      val pairs = (0 until 60).map(_ =>
+        (math.floorMod(rnd.next(), 40L), math.floorMod(rnd.next(), 40L)))
+        .filter(p => p._1 != p._2)
       val nodes = (0L until 40L).toDF("id")
-      val viaLoop = Components.minLabel(edges, "a", "b", nodes, "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val viaUf = Components.minLabelAdaptive(edges, "a", "b", nodes, "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(viaUf == viaLoop, s"seed=$seed adaptive != loop")
+      // reference: min-label propagation to its fixpoint, in plain Scala
+      var want = (0L until 40L).map(i => i -> i).toMap
+      var changed = true
+      while (changed) {
+        val next = pairs.foldLeft(want) { case (m, (a, b)) =>
+          val l = math.min(m(a), m(b)); m.updated(a, l).updated(b, l)
+        }
+        changed = next != want
+        want = next
+      }
+      val viaUf = Components.minLabelAdaptive(pairs.toDF("a", "b"), "a", "b",
+        nodes, "id").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(viaUf == want, s"seed=$seed adaptive != reference")
     }
     // past the bound: SmallBatchKeys + 1 edges forming 4-node chains
     // 4i+1 - 4i - 4i+3 - 4i+2 (ids out of chain order), every component

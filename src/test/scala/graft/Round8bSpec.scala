@@ -174,11 +174,13 @@ class Round8bSpec extends SparkSpec {
       val (histE, batchE) = edges.partition { case (a, b) =>
         math.floorMod(rnd.next(), 2L) == 0 // random split incl. cross-comp merges
       }
-      val mapping = Components.minLabel(histE.toDF("a", "b"), "a", "b", nodes, "id")
+      val mapping = Components.minLabelAdaptive(histE.toDF("a", "b"), "a", "b",
+        nodes, "id")
       val inc = Components.minLabelIncremental(mapping,
         batchE.toDF("a", "b"), "a", "b", nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val full = Components.minLabel(edges.toDF("a", "b"), "a", "b", nodes, "id")
+      val full = Components.minLabelAdaptive(edges.toDF("a", "b"), "a", "b",
+        nodes, "id")
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(inc == full, s"seed=$seed incremental diverged from rebuild")
     }

@@ -19,6 +19,15 @@ string literal outside a `.set(`/`.config(` call) and where it is set: in a
 file under perfbench/ or tools/. A key set only under src/test is a switch
 nothing in the program turns.
 
+Last it lists every parameter with a default value, on a public or
+private[graft] def in those same files, that no call under src/main/scala or
+perfbench/src sets: a knob every program call leaves at its default. A call
+is any `name(` outside the def's own declaration; it sets a parameter when it
+passes it by name (`param = ...`) or passes enough positional arguments in
+that parameter list to reach it. Calls, too, are matched by name, so a
+positional use of the parameter's slot by a call to any same-named def hides
+the parameter from this list.
+
 It only reports: the exit status is always 0.
 """
 import os
@@ -99,6 +108,125 @@ def report_confs(repo, program, bench, tests):
     print("%d spark.graft keys read" % len(read))
 
 
+def split_top(text):
+    """Split `text` at the commas outside brackets and string literals."""
+    parts, depth, cur, i = [], 0, [], 0
+    while i < len(text):
+        ch = text[i]
+        if ch == '"':
+            j = text.find('"""', i + 3) + 3 if text.startswith('"""', i) else i + 1
+            if j == i + 1:
+                while j < len(text) and text[j] != '"':
+                    j += 2 if text[j] == "\\" else 1
+                j += 1
+            cur.append(text[i:j])
+            i = j
+            continue
+        if ch in "([{":
+            depth += 1
+        elif ch in ")]}":
+            depth -= 1
+        elif ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+            i += 1
+            continue
+        cur.append(ch)
+        i += 1
+    if "".join(cur).strip():
+        parts.append("".join(cur))
+    return parts
+
+
+def group(code, i, open_ch, close_ch):
+    """(inner text, end index) of the bracket group opening at code[i]."""
+    depth, j = 0, i
+    while j < len(code):
+        ch = code[j]
+        if ch == '"':
+            if code.startswith('"""', j):
+                j = code.find('"""', j + 3) + 3
+            else:
+                j += 1
+                while j < len(code) and code[j] != '"':
+                    j += 2 if code[j] == "\\" else 1
+                j += 1
+            continue
+        if ch == open_ch:
+            depth += 1
+        elif ch == close_ch:
+            depth -= 1
+            if depth == 0:
+                return code[i + 1:j], j + 1
+        j += 1
+    return code[i + 1:], len(code)
+
+
+def arg_lists(code, i):
+    """The bracketed argument (or parameter) lists that follow code[i:], after
+    an optional type-argument list: a list of inner texts."""
+    j = i
+    while j < len(code) and code[j] in " \t":
+        j += 1
+    if code.startswith("[", j):
+        _, j = group(code, j, "[", "]")
+    lists = []
+    while True:
+        k = j
+        while k < len(code) and code[k] in " \t\n":
+            k += 1
+        if not code.startswith("(", k):
+            return lists
+        inner, j = group(code, k, "(", ")")
+        lists.append(inner)
+
+
+NAMED = re.compile(r"^\s*(\w+)\s*=(?!=)")
+
+
+def report_defaults(repo, program, bench):
+    """Default-valued parameters that no program call sets (see the docstring)."""
+    calls = {}
+    for code in list(program.values()) + list(bench.values()):
+        for m in re.finditer(r"(?<![\w$])(\w+)\s*(?=[\[(])", code):
+            if re.search(r"\bdef\s+$", code[max(0, m.start() - 8):m.start()]):
+                continue
+            calls.setdefault(m.group(1), []).append((code, m.end()))
+    found = 0
+    for path, code in sorted(program.items()):
+        if re.search(r"\bdef\s+main\s*\(", code):
+            continue
+        for m in DECL.finditer(code):
+            mods, kind, name = m.group(1) or "", m.group(2), m.group(3)
+            if kind != "def" or "override" in mods or ("private" in mods or "protected" in mods) \
+                    and "private[graft]" not in mods:
+                continue
+            for li, params in enumerate(arg_lists(code, m.end())):
+                if params.lstrip().startswith("implicit"):
+                    break
+                for pi, p in enumerate(split_top(params)):
+                    pm = re.match(r"\s*(\w+)\s*:(?:[^=]|=>)*=(?!>)(.*)$", p, re.S)
+                    if not pm:
+                        continue
+                    pname = pm.group(1)
+                    set_by_call = False
+                    for ccode, at in calls.get(name, []):
+                        args = arg_lists(ccode, at)
+                        if len(args) > li:
+                            parts = split_top(args[li])
+                            pos = [a for a in parts if not NAMED.match(a)]
+                            named = {NAMED.match(a).group(1) for a in parts if NAMED.match(a)}
+                            if pname in named or len(pos) > pi:
+                                set_by_call = True
+                                break
+                    if not set_by_call:
+                        found += 1
+                        print("%s:%d  def %s(%s = %s)" % (
+                            os.path.relpath(path, repo), code.count("\n", 0, m.start()) + 1,
+                            name, pname, " ".join(pm.group(2).split())))
+    print("%d default parameters no program call sets" % found)
+
+
 def main():
     repo = sys.argv[1] if len(sys.argv) > 1 else "."
     program = read_all(os.path.join(repo, "src", "main", "scala"))
@@ -126,6 +254,7 @@ def main():
                                                kind, name, ", ".join(callers)))
     print("%d test-only names" % found)
     report_confs(repo, program, bench, tests)
+    report_defaults(repo, program, bench)
     return 0
 
 
