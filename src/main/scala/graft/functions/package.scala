@@ -52,24 +52,18 @@ package object functions {
   /** F1 — Brazilian-locale decimal parse (FullETLGenerator.java:232-239).
     * "1.234,56" -> 1234.56; null/empty/malformed -> 0.0.
     * `.` is a thousands separator (stripped), `,` the decimal mark.
+    *
+    * A guarded cast: defined under BOTH ANSI and legacy cast semantics
+    * (ANSI throws on malformed input; the reference requires a silent 0.0
+    * — FullETLGenerator.java:237). The guard accepts the
+    * Double.parseDouble grammar the reference inherits: optional sign,
+    * leading/trailing-dot forms (",5" / "5,"), exponent, f/d suffix,
+    * surrounding spaces. Intentionally narrower than Java on
+    * "Infinity"/"NaN"/hex-float literals — impossible in a BR-locale
+    * numeric field; they parse to 0.0 here. One per-row kernel
+    * ([[graft.expressions.BrDouble]], its exact semantics there).
     */
-  def parseBrDouble(c: Column): Column = {
-    // one per-character mapping: `.` dropped, `,` -> `.` (the same as
-    // stripping dots then swapping the comma, without two regex passes)
-    val normalized = trim(translate(c, ",.", "."))
-    // Regex-guarded cast: defined behavior under BOTH ANSI and legacy cast
-    // semantics (ANSI cast throws on malformed input; the reference
-    // requires silent 0.0 — FullETLGenerator.java:237). The guard accepts
-    // the Double.parseDouble grammar the reference inherits: optional
-    // sign, leading/trailing-dot forms (",5" / "5,"), exponent, f/d
-    // suffix, surrounding whitespace. Intentionally narrower than Java on
-    // "Infinity"/"NaN"/hex-float literals — impossible in a BR-locale
-    // numeric field; they parse to 0.0 here.
-    val guarded = normalized
-      .rlike("^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?[fFdD]?$")
-    when(guarded, regexp_replace(normalized, "[fFdD]$", "").cast("double"))
-      .otherwise(lit(0.0))
-  }
+  def parseBrDouble(c: Column): Column = graft.expressions.BrDouble(c)
 
   /** F2 — prefix date parse (FullETLGenerator.java:241-248).
     * Takes the first 10 chars of an ISO-like timestamp string and parses

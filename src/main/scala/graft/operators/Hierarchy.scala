@@ -35,17 +35,11 @@ import org.apache.spark.sql.functions._
   */
 object Hierarchy {
 
-  /** Doubling rounds every loop here runs at most: 2^30 covers any depth
-    * a forest can reach, so only a cycle — whose members never settle —
-    * exhausts it.
-    */
-  private val MaxRounds = 30
-
   /** `edges`: (idCol, parentCol) rows, one per NON-root node; roots are
     * nodes that appear as parents (or in `extraRoots`) but never as
     * ids. Returns (id, root, depth) for EVERY node including roots
-    * (depth 0). Cycles are a contract violation (the loop stops at
-    * `MaxRounds`; nodes on a cycle keep a non-root ancestor).
+    * (depth 0). Cycles are a contract violation: the call fails with an
+    * `IllegalStateException` naming it (see [[doubling]]).
     */
   def rootAndDepth(edges: DataFrame, idCol: String,
                    parentCol: String): DataFrame = graft.Blocks.scoped { ps =>
@@ -58,7 +52,7 @@ object Hierarchy {
     // root, reached early), d the distance to it, s whether anc is
     // known to BE the root (settled: full depth reached). Roots carry
     // (root, root, 0, true) so every pointer join hits.
-    val cur = doubling(ps,
+    val cur = doubling(ps, "Hierarchy.rootAndDepth",
       e.select(col("id"), col("anc"), lit(1L).as("d"),
           lit(false).as("s"))
         .unionByName(roots.select(col("id"), col("id").as("anc"),
@@ -82,7 +76,7 @@ object Hierarchy {
     */
   def materializedPaths(edges: DataFrame, idCol: String, parentCol: String,
                         sep: String = "/"): DataFrame =
-    doubledArrays(edges, idCol, parentCol)
+    doubledArrays(edges, idCol, parentCol, "Hierarchy.materializedPaths")
       .select(col("id"), col("anc").as("root"), col("d").as("depth"),
         concat_ws(sep, concat(reverse(col("arr")), array(col("id")))
           .cast("array<string>")).as("path"))
@@ -95,7 +89,7 @@ object Hierarchy {
     */
   def ancestorClosure(edges: DataFrame, idCol: String,
                       parentCol: String): DataFrame =
-    doubledArrays(edges, idCol, parentCol)
+    doubledArrays(edges, idCol, parentCol, "Hierarchy.ancestorClosure")
       .select(col("id"),
         explode(concat(col("arr"), array(col("id")))).as("ancestor"))
 
@@ -165,7 +159,7 @@ object Hierarchy {
       .unionByName(newRoots.withColumn("__new", lit(true))))
     ps.free(attach)
     val fixed = fixedF.drop("__new")
-    val cur = doubling(ps,
+    val cur = doubling(ps, "Hierarchy.extend",
       e.select(col("id"), col("anc"), lit(1L).as("d"),
         lit(false).as("s"))) { cur =>
       val target = fixed.unionByName(cur)
@@ -232,7 +226,7 @@ object Hierarchy {
       .unionByName(newRoots.withColumn("__new", lit(true))))
     ps.free(attach)
     val fixed = fixedF.drop("__new")
-    val cur = doubling(ps,
+    val cur = doubling(ps, "Hierarchy.extendPaths",
       e.select(col("id"), col("anc"), lit(1L).as("d"),
         array(col("anc")).as("arr"), lit(false).as("s"))) { cur =>
       val target = fixed.unionByName(cur)
@@ -263,14 +257,14 @@ object Hierarchy {
     * as [[rootAndDepth]] — settled rows carry their finished array
     * through the union; the per-round concat work is frontier-sized.
     */
-  private def doubledArrays(edges: DataFrame, idCol: String,
-                            parentCol: String): DataFrame = graft.Blocks.scoped { ps =>
+  private def doubledArrays(edges: DataFrame, idCol: String, parentCol: String,
+                            caller: String): DataFrame = graft.Blocks.scoped { ps =>
     val e = edges.select(col(idCol).cast("long").as("id"),
       col(parentCol).cast("long").as("anc"))
     val roots = e.select(col("anc").as("id"))
       .except(e.select(col("id")))
       .distinct()
-    val cur = doubling(ps,
+    val cur = doubling(ps, caller,
       e.select(col("id"), col("anc"), lit(1L).as("d"),
           array(col("anc")).as("arr"), lit(false).as("s"))
         .unionByName(roots.select(col("id"), col("id").as("anc"),
@@ -292,21 +286,29 @@ object Hierarchy {
     * the round-0 state (its `s` column marks settled rows), and `jump`
     * maps a round's state to the next round's rows for its unsettled
     * ones; settled rows ride each round's union untouched. Stops when
-    * nothing is unsettled or after `MaxRounds` rounds. Each round is
-    * ONE job: Blocks.cutCount fuses the round's lineage cut with its
-    * convergence count (r12); the superseded round is freed at once.
+    * nothing is unsettled. While anything is, a forest settles at least
+    * one row per round (the unsettled row nearest a settled one points
+    * at a settled row, and the jump lands on its root), so a round that
+    * settles none means the parent pointers form a cycle: the loop then
+    * throws an `IllegalStateException` naming `caller`. A forest of depth
+    * D takes at most ⌈log₂ D⌉ + 1 rounds. Each round is ONE job:
+    * Blocks.cutCount fuses the round's lineage cut with its convergence
+    * count (r12); the superseded round is freed at once.
     */
-  private def doubling(ps: graft.Blocks.Scope, start: DataFrame)
+  private def doubling(ps: graft.Blocks.Scope, caller: String, start: DataFrame)
                       (jump: DataFrame => DataFrame): DataFrame = {
     var (cur, active) = ps.cutCount(start, !col("s"))
-    var iter = 0
-    while (active > 0 && iter < MaxRounds) {
+    var round = 0
+    while (active > 0) {
       val (next, nAct) = ps.cutCount(
         cur.filter(col("s")).unionByName(jump(cur)), !col("s"))
       ps.free(cur)
       cur = next
+      round += 1
+      if (nAct == active) throw new IllegalStateException(
+        s"$caller: doubling round $round settled none of $nAct nodes: the parent " +
+          "pointers form a cycle")
       active = nAct
-      iter += 1
     }
     cur
   }
@@ -336,8 +338,8 @@ object Hierarchy {
   /** Driver-side resolve for a small batch (see [[smallBatch]]).
     * Semantics match the distributed loop: a parent outside both the
     * batch and the settled map becomes a brand-new root (depth 0,
-    * path = itself); cycle members (a contract violation there too)
-    * keep a non-root ancestor.
+    * path = itself); a cycle (a contract violation there too) fails with
+    * an `IllegalStateException` naming the caller.
     */
   private def extendSmall(settled: DataFrame, edges: Array[(Long, Long)],
                           withPaths: Boolean,
@@ -365,29 +367,25 @@ object Hierarchy {
         if (withPaths) r.getString(3) else null)
     }
     val newRoots = scala.collection.mutable.ArrayBuffer.empty[Long]
+    val caller = if (withPaths) "Hierarchy.extendPaths" else "Hierarchy.extend"
     def chase(start: Long): Unit = {
       var x = start
       var stack = List.empty[Long]
       val seen = scala.collection.mutable.HashSet.empty[Long]
       while (!memo.contains(x)) {
-        if (!seen.add(x)) { // cycle: pin a non-root ancestor and stop
-          memo(x) = (parent(x), 1L,
-            if (withPaths) s"${parent(x)}$sep$x" else null)
-        } else parent.get(x) match {
+        if (!seen.add(x)) throw new IllegalStateException(
+          s"$caller: node $x is its own ancestor: the parent pointers form a cycle")
+        parent.get(x) match {
           case Some(p) => stack ::= x; x = p
           case None =>
             memo(x) = (x, 0L, if (withPaths) x.toString else null)
             newRoots += x
         }
       }
+      // every node on the stack resolves from its parent, resolved before it
       stack.foreach { y =>
-        if (!memo.contains(y)) memo.get(parent(y)) match {
-          case Some((r, d, pth)) =>
-            memo(y) = (r, d + 1, if (withPaths) s"$pth$sep$y" else null)
-          case None => // unreachable outside cycles
-            memo(y) = (parent(y), 1L,
-              if (withPaths) s"${parent(y)}$sep$y" else null)
-        }
+        val (r, d, pth) = memo(parent(y))
+        memo(y) = (r, d + 1, if (withPaths) s"$pth$sep$y" else null)
       }
     }
     edges.foreach { case (id, _) => chase(id) }

@@ -1,8 +1,15 @@
 package graft.star
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.time.LocalDate
+import java.time.temporal.ChronoUnit
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.functions._
+import graft.operators.Ids
 
 /** G1 — calendar dimension generator
   * (`/root/reference/src/FullETLGenerator.java:182-204`).
@@ -13,7 +20,9 @@ import graft.functions._
   *
   * Generation is `sequence(start, stop, interval 1 day)` + `explode`: the
   * range array is built once per row of a 1-row frame, then exploded into a
-  * distributed Dataset. A century of days is ~36k rows — trivially
+  * distributed Dataset ([[build]]); a range known on the driver and at
+  * most [[Ids.SmallBatchKeys]] days long is a local relation instead
+  * ([[overRange]]). A century of days is ~36k rows — trivially
   * broadcastable; callers join facts to it by the int `ChaveData` key with
   * a broadcast hint.
   */
@@ -35,9 +44,11 @@ object CalendarDim {
   }
 
   /** Build from an explicit 1-row (lo, hi) DataFrame of DateType. */
-  def build(range: DataFrame): DataFrame = {
-    val days = range
-      .select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("d"))
+  def build(range: DataFrame): DataFrame =
+    columns(range.select(explode(sequence(col("lo"), col("hi"), expr("interval 1 day"))).as("d")))
+
+  /** The G1 columns of every day `d` of `days`. */
+  private def columns(days: DataFrame): DataFrame =
     days.select(
       dateKeyOf(col("d")).as("ChaveData"),
       col("d").as("DataCompleta"),
@@ -47,16 +58,32 @@ object CalendarDim {
       dayofmonth(col("d")).as("Dia"),
       ptBrWeekdayName(col("d")).as("DiaDaSemana"),
       quarterLabel(col("d")).as("Trimestre"))
-  }
 
   /** The calendar over the inclusive range [lo, hi] of ISO dates known on
-    * the driver (the star's, from [[Dims.probe]]): no job runs until the
-    * calendar itself is written. A null bound — a date column with no
-    * non-null value — gives an empty calendar.
+    * the driver (the star's, from [[Dims.probe]]). A null bound — a date
+    * column with no non-null value — gives an empty calendar.
+    *
+    * A range of at most [[Ids.SmallBatchKeys]] days (a century is ~36k)
+    * is built on the driver: the optimizer folds the G1 columns of its
+    * days into a local relation, so writing it (`StarSchemaJob.writeCsv`)
+    * runs no job. A longer range keeps [[build]]'s `sequence`/`explode`
+    * plan; either way no job runs until the calendar is used.
     */
-  def overRange(spark: SparkSession, lo: String, hi: String): DataFrame =
-    build(spark.range(0, 1, 1, 1)
-      .select(lit(lo).cast("date").as("lo"), lit(hi).cast("date").as("hi")))
+  def overRange(spark: SparkSession, lo: String, hi: String): DataFrame = {
+    val days =
+      if (lo == null || hi == null) 0L
+      else ChronoUnit.DAYS.between(LocalDate.parse(lo), LocalDate.parse(hi)) + 1
+    require(days >= 0, s"CalendarDim.overRange: lo $lo is after hi $hi")
+    if (days <= Ids.SmallBatchKeys) {
+      val first = if (days == 0) 0 else LocalDate.parse(lo).toEpochDay.toInt
+      val epochDays = (0 until days.toInt).map(i => Row(first + i))
+      columns(spark.createDataFrame(epochDays.asJava,
+          StructType(Seq(StructField("i", IntegerType, nullable = false))))
+        .select(date_from_unix_date(col("i")).as("d")))
+    } else
+      build(spark.range(0, 1, 1, 1)
+        .select(lit(lo).cast("date").as("lo"), lit(hi).cast("date").as("hi")))
+  }
 
   /** Table-valued-function plan: `SELECT * FROM graft_calendar(lo, hi)`
     * in pure SQL — the reference's calendar generator exposed as a

@@ -25,9 +25,50 @@ object PropertiesSpec extends Properties("graft") {
       }
     }
 
+  /** Number-shaped BR text, near and on both sides of the guard: padding,
+    * sign, thousands dots, decimal comma, exponent, suffix and one or two
+    * line terminators.
+    */
+  private val brShaped: Gen[String] = for {
+    pad <- Gen.oneOf("", " ", "  ", "\t")
+    sign <- Gen.oneOf("", "+", "-")
+    int <- Gen.listOf(Gen.oneOf("0123456789.".toSeq)).map(_.mkString)
+    frac <- Gen.oneOf("", ",", ",5", ",25", ",007")
+    exp <- Gen.oneOf("", "e3", "E-2", "e+10", "e", "e999", "E-400")
+    suffix <- Gen.oneOf("", "f", "F", "d", "D", "dd", "x")
+    term <- Gen.oneOf("", "", "\n", "\r", "\r\n", "\u2028", "\u2029", "\u0085", "\n\n", " \n")
+    tail <- Gen.oneOf("", " ", "  ", "\t")
+  } yield pad + sign + int + frac + exp + suffix + term + tail
+
   private val brText: Gen[String] = Gen.frequency(
     1 -> Gen.const(null),
-    9 -> Gen.listOf(Gen.oneOf("0123456789.,  áéçãÓü".toSeq)).map(_.mkString))
+    5 -> Gen.listOf(Gen.oneOf(("0123456789.,  áéçãÓü+-eEfFdD\t\n\r\u2028".map(_.toString) :+
+      "\r\n"))).map(_.mkString),
+    4 -> brShaped)
+
+  /** parseBrDouble's Column form before its kernel, the test-side
+    * reference for [[graft.expressions.BrDouble]].
+    */
+  private def brDoubleColumn(c: org.apache.spark.sql.Column) = {
+    val normalized = trim(translate(c, ",.", "."))
+    val guarded = normalized
+      .rlike("^[+-]?([0-9]+(\\.[0-9]*)?|\\.[0-9]+)([eE][+-]?[0-9]+)?[fFdD]?$")
+    when(guarded, regexp_replace(normalized, "[fFdD]$", "").cast("double"))
+      .otherwise(lit(0.0))
+  }
+
+  property("BrDouble == parseBrDouble's Column form, bit for bit, nulls included") =
+    Prop.forAll(Gen.listOfN(60, brText)) { xs =>
+      val local = xs.toDF("s")
+      // folded into the local relation (interpreted), and generated code
+      Seq(local, local.repartition(2)).forall { df =>
+        df.select(parseBrDouble($"s"), brDoubleColumn($"s")).collect().forall { r =>
+          def bits(i: Int) =
+            if (r.isNullAt(i)) None else Some(java.lang.Double.doubleToRawLongBits(r.getDouble(i)))
+          bits(0) == bits(1)
+        }
+      }
+    }
 
   property("BR kernels: translate forms == the regexp_replace forms") =
     Prop.forAll(Gen.listOfN(40, Gen.zip(brText, Arbitrary.arbitrary[Double]))) { xs =>
